@@ -27,6 +27,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -432,8 +433,21 @@ class IotDatabase:
         )
 
     def _save_meta(self) -> None:
-        with open(self._meta_path, "w") as f:
-            json.dump(self._meta, f, indent=2)
+        """Dump to a temp file beside `_meta.json`, then os.replace it in:
+        a crash mid-dump leaves the previous meta whole (an in-place
+        truncate-and-write would leave a half-written file that no
+        later open can parse)."""
+        tmp = f"{self._meta_path}.tmp-{uuid.uuid4().hex}"
+        try:
+            with open(tmp, "w") as f:
+                json.dump(self._meta, f, indent=2)
+            os.replace(tmp, self._meta_path)
+        except BaseException:
+            try:
+                os.unlink(tmp)
+            except OSError:
+                pass
+            raise
 
     # -- DDL (SqlParser.cs DROP/RENAME; CHECKPOINT/REBUILD ~ compaction) ----
 

@@ -158,7 +158,31 @@ def append_chain_incremental(
     arrival-ordered and never reorders either, Blockchain/
     BlockCollection.cs:52-68); callers wanting a retro-capable history
     rebuild use the full `append_chain` path.
+
+    This is `fold_seeded_batch(seed_chain_batch(...))`; a writer that
+    also wants the drop census and the new tips uses the two steps
+    directly (PointStore._append_chain_batch).
     """
+    seeded = seed_chain_batch(new_blocks, heads, key, ts, data)
+    return fold_seeded_batch(seeded, key, ts, data).drop("_tip")
+
+
+def seed_chain_batch(
+    new_blocks: DataFrame,
+    heads: DataFrame,
+    key: str = "guid",
+    ts: str = "ts",
+    data: str = "data",
+) -> DataFrame:
+    """One row per key of `new_blocks`: its blocks sorted by (ts, data)
+    with the RETRO ones removed (`_items`), the head the fold seeds from
+    (`_seed_hash`, '' for a key without a head, and `_seed_data`), and
+    `_n_retro` — how many of the key's blocks sort STRICTLY before its
+    head in (ts, data-string) order. A block equal to the head is not
+    retro: it leaves `_items` too, but it is the cross-batch consecutive
+    duplicate and is counted with the duplicates. Summing `_n_retro` (an
+    Observation on this frame rides whatever job runs the fold) is the
+    batch's retro-drop census without a second pass over the batch."""
     others = [c for c in new_blocks.columns if c not in (key, ts, data)]
     item = F.struct(F.col(ts), F.col(data), *[F.col(c) for c in others])
     g = new_blocks.groupBy(key).agg(
@@ -170,25 +194,44 @@ def append_chain_incremental(
         F.col(data).cast("string").alias("_seed_data"),
         F.col(ts).alias("_seed_ts"),
     )
+    x_data = f"cast(x.{data} as string)"
     # heads is one row per key — small next to any corpus; broadcast so
     # the batch never shuffles (gated by Spark's own autoBroadcast
     # threshold is not possible on a hint, but a per-key heads table at
     # 100 TB is device-count-sized, the canonical broadcast dim)
-    seeded = g.join(F.broadcast(seed), key, "left").select(
+    return g.join(F.broadcast(seed), key, "left").select(
         key,
-        # retro guard (docstring): keep only items strictly after the
-        # head in (ts, data) order; keys without a head keep everything
+        # retro guard (append_chain_incremental): keep only items
+        # strictly after the head in (ts, data) order; keys without a
+        # head keep everything
         F.when(
             F.col("_seed_ts").isNull(), F.col("_items")
         ).otherwise(
             F.expr(
                 f"filter(_items, x -> x.{ts} > _seed_ts OR "
-                f"(x.{ts} = _seed_ts AND cast(x.{data} as string) > _seed_data))"
+                f"(x.{ts} = _seed_ts AND {x_data} > _seed_data))"
             )
         ).alias("_items"),
+        # null comparisons (no head, null data) count as not retro
+        F.expr(
+            f"size(filter(_items, x -> x.{ts} < _seed_ts OR "
+            f"(x.{ts} = _seed_ts AND {x_data} < _seed_data)))"
+        ).alias("_n_retro"),
         F.coalesce("_seed_hash", F.lit("")).alias("_seed_hash"),
         F.col("_seed_data"),
     )
+
+
+def fold_seeded_batch(
+    seeded: DataFrame, key: str = "guid", ts: str = "ts", data: str = "data"
+) -> DataFrame:
+    """Fold a `seed_chain_batch` frame into new blocks: (key, ts, data,
+    *other item fields, prev_hash, hash, _tip). `_tip` marks each key's
+    last appended block — its new head — so a writer keeping a heads log
+    takes the new heads with a narrow filter instead of a per-key
+    aggregation over the output."""
+    item_type = seeded.schema["_items"].dataType.elementType
+    others = [f.name for f in item_type.fields if f.name not in (ts, data)]
     step_hash = (
         f"sha2(concat(cast({epoch_us_sql(f'x.{ts}')} as string), acc.prev, "
         f"cast(x.{data} as string)), 256)"
@@ -207,12 +250,7 @@ def append_chain_incremental(
             named_struct(
                 'prev', _seed_hash, 'last', _seed_data,
                 'out', cast(array() as array<struct<
-                    item: struct<{', '.join(
-                        f'{f.name}: {f.dataType.simpleString()}'
-                        for f in new_blocks.select(
-                            ts, data, *others
-                        ).schema.fields
-                    )}>,
+                    item: {item_type.simpleString()},
                     prev_hash: string, hash: string>>)),
             (acc, x) -> CASE
                 WHEN acc.last IS NOT NULL
@@ -227,12 +265,21 @@ def append_chain_incremental(
         )
         """
     )
-    exploded = seeded.select(key, F.explode(chained).alias("_b"))
+    # posexplode_OUTER + a filter above it, not posexplode: over a plain
+    # posexplode the optimizer infers `size(_out) > 0 AND isnotnull(_out)`
+    # and pushes it below the projection, inlining the fold into it —
+    # every sha2 chain would then run three times instead of once
+    exploded = (
+        seeded.select(key, chained.alias("_out"))
+        .select(key, "_out", F.posexplode_outer("_out").alias("_pos", "_b"))
+        .filter(F.col("_pos").isNotNull())
+    )
     return exploded.select(
         key,
         *[F.col(f"_b.item.{c}") for c in (ts, data, *others)],
         F.col("_b.prev_hash"),
         F.col("_b.hash"),
+        (F.col("_pos") == F.size("_out") - 1).alias("_tip"),
     )
 
 

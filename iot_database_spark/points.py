@@ -23,16 +23,15 @@ operators/timeseries LOCF/resample on the logs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 import weakref
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from iot_database_spark.database import IotDatabase
 from iot_database_spark.operators import blockchain as bc
 from iot_database_spark.operators import iotvalue as iv
+from iot_database_spark.tables import _same_session
 
 _WRITE_SCHEMA = "guid string, ts timestamp, priority int, value string"
 
@@ -78,6 +77,23 @@ def _check_mid_layout(spark: SparkSession) -> None:
                 "derivation for this Spark version"
             )
     _MID_LAYOUT_OK.add(spark)
+
+
+def _stamp_ids(pos, base: int):
+    """Ids `pos + base + 1` for a batch stamped after sequence value
+    `base` (`pos` is the row's 0-based position in the batch order).
+
+    The base rides as a decimal literal, which generated code reads from
+    its references array; a bigint literal is inlined into the generated
+    Java source, so F.lit(base + 1) made every batch's id stage new
+    source — a Janino compile per sink per batch, and a class that ran
+    interpreted until the JIT caught up. The decimal sum is exact. Its
+    cast back to bigint is typed nullable (the cast could overflow),
+    which would store the id column as optional instead of required;
+    coalescing with `pos` — null exactly when the sum is — gives the
+    column `pos`'s nullability back without changing any value."""
+    exact = (pos + F.lit(base + 1).cast("decimal(20,0)")).cast("bigint")
+    return F.coalesce(exact, pos)
 
 
 class PointStore:
@@ -169,6 +185,16 @@ class PointStore:
         callers can alert (r9+r10 advice) — chain + chain_dropped_retro
         + chain_dropped_dup equals the batch's chain-flagged row count
         by construction.
+
+        Job shape of a steady-state batch feeding all three sinks: at
+        most ten Spark jobs. The checkpoint that pins the validated batch
+        (its census rides it as an Observation), plus the registry
+        broadcast when that needs a job of its own; one write job per
+        point sink; then the chain path (_append_chain_batch): four jobs
+        for the pinned fold (the heads-log seed aggregation, its
+        broadcast, the fold shuffle and the checkpoint) and one write
+        job each for the chain blocks and the heads log. No job runs
+        only to count: every count rides a job that does work.
         """
         reg = self.registry.df.select("guid", "flags", "strict_type")
         joined = batch.join(F.broadcast(reg), "guid", "inner")
@@ -209,8 +235,6 @@ class PointStore:
         # constraints and ids are assigned sequentially from the stamp,
         # so a pre-counted append needs no further Spark action before
         # the write itself (_insert_counted).
-        from pyspark.sql import Observation
-
         ts_flag = iv.has_flag(F.col("flags"), iv.FLAG_TIME_SERIES)
         chain_flag = iv.has_flag(F.col("flags"), iv.FLAG_BLOCK_CHAIN)
         census_cols = (
@@ -220,14 +244,9 @@ class PointStore:
         )
         # cross-session batches (a foreachBatch micro-batch frame is
         # bound to a per-batch session clone) must not carry an
-        # Observation — it would never complete (Table._observable's
-        # hang class, r13) — so they pin first and census separately.
-        same_session = False
-        try:
-            same_session = batch.sparkSession is self.db.spark
-        except Exception:
-            pass
-        if same_session:
+        # Observation — it would never complete (see _same_session) — so
+        # they pin first and census separately.
+        if _same_session(batch, self.db.spark):
             obs = Observation()
             hashed = hashed.observe(obs, *census_cols).localCheckpoint(
                 eager=True
@@ -308,8 +327,8 @@ class PointStore:
         )
 
     def _append_chain_batch(
-        self, chain_src: DataFrame, size_hint: int | None = None
-    ) -> tuple[int, int]:
+        self, chain_src: DataFrame, n_src: int
+    ) -> tuple[int, int, int]:
         """O(batch) chain extension (r8 verdict #1: the previous path
         unioned ALL existing blocks with the batch and re-ran the hash
         fold over the whole history, rewriting the chain table — per-
@@ -324,6 +343,19 @@ class PointStore:
         millions of chained devices never pays an O(devices) write per
         ingest tick.
 
+        Job shape: ONE pinned pass (the with_ids localCheckpoint) runs
+        the fold and, with it, everything else the batch needs to know —
+        the heads log is aggregated once, inside it, as the fold's
+        broadcast seed. Riding that pass: the retro-drop census (an
+        Observation summing seed_chain_batch's per-guid `_n_retro`), the
+        appended count (an Observation on with_ids) and each touched
+        guid's new tip (the fold's `_tip` flag). After it come exactly
+        two write jobs: the chain blocks, appended pre-counted like the
+        other sinks (_append + _advance_seq), and the heads, a narrow
+        `_tip` filter of the pinned frame. Cross-session sources (see
+        _same_session) carry no Observation and take the two counts as
+        separate actions after the pin.
+
         Heads are RECOVERABLE, not authoritative (r9 advice): the two
         sink commits (chain insert, heads append) are not atomic, so
         each heads write stamps the chain version it was derived from,
@@ -335,6 +367,15 @@ class PointStore:
         verify_chain with no tamper. A recovery batch also compacts, so
         heads the crashed batch failed to log are re-persisted before
         the stamp declares the log authoritative again.
+
+        Drop census (r9 advice: discarded audit rows must be countable;
+        r10 advice: the two drop classes must not be conflated). The
+        fold drops exactly two kinds of input row — RETRO (strictly
+        before its guid's seed head in the (ts, data-string) order) and
+        DUP (consecutive-duplicate data: the cross-batch equal-to-head
+        row and in-batch consecutive repeats) — so with `n_src` counted
+        on the pinned batch, dup drops are the remainder:
+        n_src == appended + retro + dup, by construction.
         Returns (appended, dropped_retro, dropped_dup)."""
         recovered = self._heads_stamp() != self.chain._current_version()
         if recovered:
@@ -344,68 +385,41 @@ class PointStore:
         else:
             # latest head per guid over the bounded log — one small agg
             heads = self.heads_view()
-        new_blocks = bc.append_chain_incremental(chain_src, heads)
-        with_ids = self._assign_ids(self.chain, new_blocks, size_hint=size_hint)
-        # one pass computes the rows to append AND each touched guid's
-        # new head; localCheckpoint pins it so the append job and the
-        # heads merge don't recompute the fold (and the heads rewrite
-        # doesn't re-read files the append just published)
+        seeded = bc.seed_chain_batch(chain_src, heads)
+        retro_col = F.coalesce(F.sum("_n_retro"), F.lit(0)).alias("_r")
+        observed = _same_session(chain_src, self.db.spark)
+        if observed:
+            retro_obs, count_obs = Observation(), Observation()
+            seeded = seeded.observe(retro_obs, retro_col)
+        base = self.chain._seq_base()
+        with_ids = self._assign_ids(
+            self.chain, bc.fold_seeded_batch(seeded), base=base, size_hint=n_src
+        )
+        if observed:
+            with_ids = with_ids.observe(count_obs, F.count(F.lit(1)).alias("_n"))
+        # localCheckpoint pins the fold so the two writes don't recompute
+        # it (and the heads rewrite doesn't re-read files the chain
+        # append just published)
         with_ids = with_ids.localCheckpoint(eager=True)
-        n_chain = self.chain.insert(
-            with_ids.select(*[f.name for f in self.chain.df.schema.fields])
-        )
-        # drop census (r9 advice: discarded audit rows must be
-        # countable; r10 advice: the old single count conflated the two
-        # drop classes and missed in-batch dups entirely). The fold
-        # drops exactly two kinds of input row — RETRO (strictly before
-        # its guid's seed head in the (ts, data-string) order) and DUP
-        # (consecutive-duplicate data: the cross-batch equal-to-head row
-        # and in-batch consecutive repeats) — so with n_src counted on
-        # the pinned batch, dup drops are the remainder:
-        # n_src == appended + retro + dup, by construction. heads spans
-        # every chained guid (device-count-sized — the same broadcast
-        # dim append_chain_incremental's seed uses).
-        h = heads.select(
-            "guid",
-            F.col("ts").alias("_hts"),
-            F.col("data").cast("string").alias("_hdata"),
-        )
-        # ONE job for both scalars (left join: guids without a head have
-        # a null retro condition and count as non-retro)
-        census = (
-            chain_src.join(F.broadcast(h), "guid", "left")
-            .agg(
-                F.count(F.lit(1)).alias("_n"),
-                F.count(
-                    F.when(
-                        (F.col("ts") < F.col("_hts"))
-                        | (
-                            (F.col("ts") == F.col("_hts"))
-                            & (
-                                F.col("data").cast("string")
-                                < F.col("_hdata")
-                            )
-                        ),
-                        1,
-                    )
-                ).alias("_r"),
-            )
-            .collect()[0]
-        )
-        n_retro = census["_r"]
-        n_dup = census["_n"] - n_chain - n_retro
+        if observed:
+            n_chain, n_retro = count_obs.get["_n"], retro_obs.get["_r"]
+        else:
+            n_chain = with_ids.count()
+            n_retro = seeded.agg(retro_col).collect()[0]["_r"]
+        self.chain._append(with_ids)
+        self.chain._advance_seq(base + n_chain)
         # heads ids carry no query meaning (the seed read uses
         # guid/ts/data/hash only): appended log rows REUSE their chain
         # block's id (unique for free — no stats job, no sequence), and
         # the rarer compaction rewrite re-stamps from 0.
+        new_heads = with_ids.filter("_tip")
         compact = recovered or (
             len(self.chain_heads._base_dirs()) >= self._HEADS_COMPACT_DIRS
         )
         if compact:
-            new_heads = bc.chain_heads(with_ids).select(
-                "guid", "ts", "data", "hash"
+            merged = bc.chain_heads(
+                heads.unionByName(new_heads.select("guid", "ts", "data", "hash"))
             )
-            merged = bc.chain_heads(heads.unionByName(new_heads))
             # no size_hint: the merged set is O(all chained devices), so
             # the stamp must be free to go distributed (r10 advice — a 0
             # hint forced the coalesce(1) single-task stamp, re-paying
@@ -416,20 +430,9 @@ class PointStore:
                 self._assign_ids(self.chain_heads, merged, base=0)
             )
         else:
-            tip = F.max_by(
-                F.struct("ts", "data", "hash", "id"),
-                F.struct(F.col("ts"), F.col("data")),
-            )
-            new_heads = with_ids.groupBy("guid").agg(tip.alias("_h")).select(
-                F.col("_h.id").alias("id"),
-                "guid",
-                F.col("_h.ts").alias("ts"),
-                F.col("_h.data").alias("data"),
-                F.col("_h.hash").alias("hash"),
-            )
             self.chain_heads._append(new_heads)
         self._stamp_heads(self.chain._current_version())
-        return n_chain, n_retro, n_dup
+        return n_chain, n_retro, n_src - n_chain - n_retro
 
     # Below this many rows the id stamp runs as ONE lazy narrow task
     # (coalesce + in-partition sort): the distributed path costs two
@@ -483,12 +486,11 @@ class PointStore:
             size_hint is not None and size_hint <= PointStore._SMALL_ID_BATCH
         ) or batch.rdd.getNumPartitions() <= 1
         if small:
-            out = (
+            return (
                 batch.coalesce(1)
                 .sortWithinPartitions(*oc)
-                .withColumn("id", (local_pos + F.lit(base + 1)).cast("bigint"))
+                .select(_stamp_ids(local_pos, base).alias("id"), *cols)
             )
-            return out.select("id", *cols)
         n_parts = max(1, batch.rdd.getNumPartitions())
         # localCheckpoint pins the range partitioning so the census and
         # the id projection see the same partition indices/positions
@@ -510,11 +512,9 @@ class PointStore:
             flat += [F.lit(pid), F.lit(acc)]
             acc += counts[pid]
         offset = F.element_at(F.create_map(*flat), F.spark_partition_id())
-        out = ranged.withColumn(
-            "id",
-            (offset.cast("bigint") + local_pos + F.lit(base + 1)).cast("bigint"),
+        return ranged.select(
+            _stamp_ids(offset.cast("bigint") + local_pos, base).alias("id"), *cols
         )
-        return out.select("id", *cols)
 
     # -- reads ------------------------------------------------------------
 

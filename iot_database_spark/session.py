@@ -66,7 +66,10 @@ def get_spark(app_name: str = "iot_database_spark", master: str | None = None) -
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "96g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         # Static conf (must precede the first session in the JVM): the
         # generated-class cache defaults to 100 entries, but a long-lived
         # session running a 100+-query workload compiles several hundred
@@ -84,6 +87,15 @@ def get_spark(app_name: str = "iot_database_spark", master: str | None = None) -
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _default_driver_mem() -> str:
+    """Half of physical RAM, in whole MiB (at least 1 GiB): the heap must
+    fit the host it starts on, with room left for the Python side and
+    the OS. A fixed figure either overcommits a small host or starves a
+    big one."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1024, total // 2 // (1 << 20))}m"
 
 
 def _active_session() -> SparkSession | None:

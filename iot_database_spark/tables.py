@@ -88,7 +88,7 @@ class ConstraintViolation(Exception):
 # batch and stages 32 near-empty parquet files — pure scheduling+commit
 # overhead that dominates digest-style lifecycles of many tiny list
 # batches (guide §2.2 "fewer, larger map tasks"; §6 small-files). For
-# small all-scalar batches we build the frame from a pandas DataFrame
+# small all-scalar batches we build the frame from an Arrow table
 # instead: under Arrow + spark.sql.execution.arrow.localRelationThreshold
 # (48 MB default) it becomes a driver-JVM LocalRelation — ZERO tasks to
 # produce, one staged file on write, and every validation job over it
@@ -96,47 +96,91 @@ class ConstraintViolation(Exception):
 # 8-row registry-insert shape: uniq-check job 0.71 -> 0.23 s, stage
 # write 0.58 -> 0.19 s.
 #
-# The safe set is deliberately narrow: plain scalars whose
-# pandas/Arrow round trip is value-identical to the classic verified
-# path (None -> null in every column type). datetime (tz semantics),
-# bytes, Decimal, arrays/maps, numpy scalars, and NaN floats (Arrow's
-# pandas semantics would fold NaN to null where the classic path keeps
-# NaN) all take the classic path unchanged.
-_LOCAL_SAFE_TYPES = (str, int, float, bool, type(None))
+# The local path is taken only when every value's exact Python type is
+# one the classic path accepts for its column unchanged (None fits any
+# column): int in range for the integral types, a non-NaN float for
+# float/double (Arrow's pandas semantics would fold NaN to null where
+# the classic path keeps NaN), bool for boolean, str for string. The
+# Arrow columns are then built with the schema's own types, so no value
+# passes through a float64 column on its way in (a bigint column that
+# also held None once lost 2**53+1 that way). Anything else — an int
+# for a double column, a float for a bigint one, datetimes, bytes,
+# Decimals, arrays — takes the classic path, which converts or refuses
+# it exactly as before.
 _LOCAL_MAX_ROWS = 100_000
+_INT_RANGES = {
+    "tinyint": 7, "smallint": 15, "int": 31, "bigint": 63,
+}
 
 
-def _safe_local_value(v) -> bool:
-    if not isinstance(v, _LOCAL_SAFE_TYPES):
-        return False
-    import math
+def _local_accepts(dtype: str, v) -> bool:
+    if v is None:
+        return True
+    t = type(v)
+    if dtype in _INT_RANGES:
+        bits = _INT_RANGES[dtype]
+        return t is int and -(1 << bits) <= v < (1 << bits)
+    if dtype in ("double", "float"):
+        return t is float and v == v
+    return (dtype == "boolean" and t is bool) or (dtype == "string" and t is str)
 
-    return not (isinstance(v, float) and math.isnan(v))
+
+# DDL string -> StructType. A table's schema string changes only on
+# add/drop_column, so each distinct string is parsed by the JVM once per
+# process instead of on every Table.columns / _stage / list insert.
+_DDL_CACHE: dict = {}
+
+
+def _schema_struct(spark, ddl: str):
+    st = _DDL_CACHE.get(ddl)
+    if st is None:
+        st = _DDL_CACHE[ddl] = spark.createDataFrame([], ddl).schema
+    return st
 
 
 def _local_batch_df(spark, rows: list[dict], schema: str) -> DataFrame:
     """A DataFrame over driver-local rows — as a LocalRelation when the
     values are provably round-trip-safe, else the classic RDD path."""
+    fields = _schema_struct(spark, schema).fields
+    kinds = [(f.name, f.dataType.simpleString()) for f in fields]
     if (
         rows
         and len(rows) <= _LOCAL_MAX_ROWS
-        and all(_safe_local_value(v) for r in rows for v in r.values())
+        and all(_local_accepts(k, r.get(n)) for n, k in kinds for r in rows)
     ):
-        import pandas as pd
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
 
-        names = [
-            f.name for f in spark.createDataFrame([], schema).schema.fields
-        ]
+        table = pa.table({
+            f.name: pa.array(
+                [r.get(f.name) for r in rows], type=to_arrow_type(f.dataType)
+            )
+            for f in fields
+        })
         # coalesce(1): a LocalTableScan otherwise parallelizes one task
         # PER ROW (capped at leaf-node parallelism), staging one file
         # per row; a JVM-local narrow coalesce makes every action over
         # the batch a single task and the staged write a single file —
         # which every later read of a digest-lifecycle table also wins
         # from (guide §6 small-files)
-        return spark.createDataFrame(
-            pd.DataFrame(rows, columns=names), schema
-        ).coalesce(1)
+        return spark.createDataFrame(table, schema).coalesce(1)
     return spark.createDataFrame(rows, schema)
+
+
+def _same_session(df: DataFrame, spark) -> bool:
+    """True when `df` is bound to `spark` itself, so an Observation
+    attached to it completes when a job over it runs. Observations are
+    delivered via the owning session's execution listener; a frame built
+    on a DIFFERENT session (the one real case: a foreachBatch micro-batch
+    frame, which Spark binds to a per-batch session clone) executes under
+    one session while the observation listens on the other — obs.get
+    then blocks forever (measured: stream_rollup_to_table hung exactly
+    this way when upsert observed its micro-batch frames). Callers take a
+    separate census action for such frames instead."""
+    try:
+        return df.sparkSession is spark
+    except Exception:
+        return False
 
 
 class CommitConflict(Exception):
@@ -178,10 +222,7 @@ class Table:
 
     @property
     def columns(self) -> list[str]:
-        return [
-            f.name
-            for f in self.db.spark.createDataFrame([], self.schema).schema.fields
-        ]
+        return _schema_struct(self.db.spark, self.schema).names
 
     @property
     def df(self) -> DataFrame:
@@ -434,12 +475,10 @@ class Table:
         """Additive evolution: rows inserted before this read NULL for
         the new column (the reference's missing-BSON-field semantics)."""
         self._no_txn("add_column")
-        fields = list(
-            self.db.spark.createDataFrame([], self.schema).schema.fields
-        )
+        fields = list(_schema_struct(self.db.spark, self.schema).fields)
         if any(f.name == column for f in fields):
             raise ValueError(f"{self.name}.{column} already exists")
-        new = self.db.spark.createDataFrame([], f"{column} {dtype}").schema.fields
+        new = _schema_struct(self.db.spark, f"{column} {dtype}").fields
         self._set_schema(fields + list(new))
 
     def drop_column(self, column: str) -> None:
@@ -459,9 +498,7 @@ class Table:
             raise ValueError(
                 f"{self.name}.{column} is referenced by an FK/unique/index"
             )
-        fields = list(
-            self.db.spark.createDataFrame([], self.schema).schema.fields
-        )
+        fields = list(_schema_struct(self.db.spark, self.schema).fields)
         if not any(f.name == column for f in fields):
             raise KeyError(f"{self.name}: no column {column!r}")
         self._set_schema([f for f in fields if f.name != column])
@@ -559,22 +596,6 @@ class Table:
                     pass
         return removed
 
-    def _observable(self, batch: DataFrame) -> bool:
-        """True when an Observation attached to `batch` will complete
-        during this table's write job. Observations are delivered via the
-        owning session's execution listener; a batch built on a DIFFERENT
-        session than the table's (the one real case: a foreachBatch
-        micro-batch frame, which Spark binds to a per-batch session
-        clone) executes the write under one session while the observation
-        listens on the other — obs.get then blocks forever (measured:
-        stream_rollup_to_table hung exactly this way when upsert observed
-        its micro-batch frames). Cross-session batches take the separate
-        census action instead."""
-        try:
-            return batch.sparkSession is self.db.spark
-        except Exception:
-            return False
-
     # -- insert (TableCollection.cs:922-1070) -----------------------------
 
     def insert(self, rows: list[dict] | DataFrame) -> int:
@@ -667,7 +688,7 @@ class Table:
 
         n = len(rows) if from_list else None
         batch_max_id = None
-        if not checks and not from_list and self._observable(batch):
+        if not checks and not from_list and _same_session(batch, self.db.spark):
             # no constraints to validate: the batch census (count + max
             # id for the sequence) rides the append's WRITE job as an
             # observed metric instead of a separate aggregation action —
@@ -925,14 +946,14 @@ class Table:
             if from_list
             else rows
         )
-        observable = not from_list and self._observable(batch)
+        observable = not from_list and _same_session(batch, self.db.spark)
         if from_list:
             n = len(rows)
         else:
             batch = batch.persist()
             if not observable:
                 # cross-session batch (e.g. a foreachBatch micro-batch
-                # frame — see _observable): census as its own action
+                # frame — see _same_session): census as its own action
                 row = batch.agg(
                     F.count(F.lit(1)).alias("n"), F.max("id").alias("m")
                 ).collect()[0]

@@ -9,9 +9,13 @@ incremental append every batch folds only its own rows seeded from the
 per-guid heads table, so the per-batch time converges to a constant
 (manifest/commit fixed costs) independent of k.
 
+Each batch runs under its own Spark job group, so the probe also
+reports how many Spark jobs every write_batch launched (the steady-state
+count should not move with history either).
+
 Prints one JSON line: {"batch_rows": N, "per_batch_s": [...],
-"history_at_end": M, "first_vs_last_ratio": r} — plus verifies every
-chain at the end.
+"per_batch_jobs": [...], "history_at_end": M, "tail_vs_head_ratio": r}
+— plus verifies every chain at the end.
 
 Usage: python scripts/probe_chain_batch.py [--batches 12] [--rows 2000]
 """
@@ -50,8 +54,10 @@ def main() -> None:
     for g in range(args.guids):
         store.register_point(f"g{g}", flags=iv.FLAG_BLOCK_CHAIN)
 
+    sc = spark.sparkContext
     t0 = dt.datetime(2024, 1, 1)
     times: list[float] = []
+    jobs: list[int] = []
     for b in range(args.batches):
         # distinct (ts, value) per row so no consecutive-dup drops and
         # each batch strictly follows the previous in (ts, data) order
@@ -66,10 +72,15 @@ def main() -> None:
             F.lit(15).alias("priority"),
             (F.col("id") + b * args.rows).cast("string").alias("value"),
         )
+        group = f"chain-probe-{b}"
+        sc.setJobGroup(group, "probe write_batch", False)
         start = time.perf_counter()
         counts = store.write_batch(batch)
         times.append(round(time.perf_counter() - start, 3))
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
         assert counts["chain"] == args.rows, counts
+    sc.setLocalProperty("spark.jobGroup.id", None)
 
     bad = [r for r in store.verify_chains().collect() if not r["valid"]]
     assert not bad, bad
@@ -83,6 +94,7 @@ def main() -> None:
                 "batch_rows": args.rows,
                 "n_guids": args.guids,
                 "per_batch_s": times,
+                "per_batch_jobs": jobs,
                 "history_at_end": args.rows * args.batches,
                 "steady_head_s": round(head, 3),
                 "tail_s": round(tail, 3),

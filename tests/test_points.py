@@ -408,27 +408,180 @@ def test_convert_point_rewrites_slots_and_effective_value(spark):
 
 def test_write_batch_census_rides_pin_and_cross_session_guard(store, spark):
     """r14: same-session batches take the Observation-on-checkpoint
-    census (one pin+census job); a batch bound to a session CLONE (the
-    foreachBatch micro-batch shape) must take the guarded two-job path
-    — an Observation on a clone's frame never completes — and both
-    must produce identical counts."""
-    rows = [
-        ("plain", _ts("2024-01-01T00:00:00"), 15, "1"),
-        ("tsflag", _ts("2024-01-01T00:00:01"), 15, "2"),
-        ("chained", _ts("2024-01-01T00:00:02"), 15, "3"),
-    ]
-    counts = store.write_batch(_batch(spark, rows))
-    assert (counts["writes"], counts["ts"], counts["chain"]) == (3, 2, 1)
+    census (one pin+census job) and the chain path's Observations on
+    its pinned fold; a batch bound to a session CLONE (the foreachBatch
+    micro-batch shape) must take the guarded path in BOTH places — an
+    Observation on a clone's frame never completes — and both must
+    produce identical counts, chain drop census included."""
+    from iot_database_spark.tables import _same_session
+
+    def rows(day):
+        t = _ts(f"2024-01-0{day}T00:00:00")
+        return [
+            ("plain", t, 15, "1"),
+            ("tsflag", t + dt.timedelta(seconds=1), 15, "2"),
+            ("chained", t + dt.timedelta(seconds=2), 15, f"v{day}"),
+            ("chained", t + dt.timedelta(seconds=3), 15, f"v{day}"),  # dup
+            ("chained", _ts("2023-12-31T00:00:00"), 15, "0"),  # retro on day 2+
+        ]
+
+    # day 1: no head yet, so the back-dated row is the chain's first block
+    first = store.write_batch(_batch(spark, rows(1)))
+    assert first == {
+        "writes": 5, "ts": 4, "chain": 2,
+        "chain_dropped_retro": 0, "chain_dropped_dup": 1,
+    }
+    same = store.write_batch(_batch(spark, rows(2)))
+    assert same == {**first, "chain": 1, "chain_dropped_retro": 1}
 
     clone = spark.newSession()
-    clone_rows = [
-        ("plain", _ts("2024-01-02T00:00:00"), 15, "4"),
-        ("tsflag", _ts("2024-01-02T00:00:01"), 15, "5"),
-        ("chained", _ts("2024-01-02T00:00:03"), 15, "6"),
-    ]
     clone_batch = clone.createDataFrame(
-        clone_rows, "guid string, ts timestamp, priority int, value string"
+        rows(4), "guid string, ts timestamp, priority int, value string"
     )
+    assert not _same_session(clone_batch, spark)
     counts2 = store.write_batch(clone_batch)  # must not hang
-    assert (counts2["writes"], counts2["ts"], counts2["chain"]) == (3, 2, 1)
-    assert store.writes.df.count() == 6
+    assert counts2 == same
+    assert store.writes.df.count() == 15
+    assert all(r["valid"] for r in store.verify_chains().collect())
+
+
+def _two_pass_census(spark, store, rows, chained, ts_flagged, run):
+    """Write `rows` through `run` and return the census the chain path
+    reported before its fold took it over: appended = the blocks the
+    batch added; retro = chain-flagged rows strictly before their
+    guid's pre-batch head in (ts, data-string) order, from a join of
+    the rows to that head; dup = the remainder."""
+    heads = store.heads_view().localCheckpoint(eager=True)
+    src = _batch(spark, [r for r in rows if r[0] in chained]).select(
+        "guid", "ts", F.col("value").alias("data")
+    )
+    h = heads.select(
+        "guid", F.col("ts").alias("_hts"), F.col("data").cast("string").alias("_hdata")
+    )
+    census = (
+        src.join(F.broadcast(h), "guid", "left")
+        .agg(
+            F.count(F.lit(1)).alias("_n"),
+            F.count(
+                F.when(
+                    (F.col("ts") < F.col("_hts"))
+                    | (
+                        (F.col("ts") == F.col("_hts"))
+                        & (F.col("data").cast("string") < F.col("_hdata"))
+                    ),
+                    1,
+                )
+            ).alias("_r"),
+        )
+        .collect()[0]
+    )
+    before = store.chain.count()
+    got = run()
+    appended = store.chain.count() - before
+    expect = {
+        "writes": len(rows),
+        "ts": sum(1 for r in rows if r[0] in ts_flagged),
+        "chain": appended,
+        "chain_dropped_retro": census["_r"],
+        "chain_dropped_dup": census["_n"] - appended - census["_r"],
+    }
+    return got, expect
+
+
+def test_chain_census_matches_two_pass_census(store, spark):
+    """The drop census the fold reports (retro as an Observation on the
+    seeded frame, appended as one on the pinned blocks) must equal the
+    separate join-based census it replaced, across retro rows, rows
+    equal to the head, same-ts rows on either side of the head's data,
+    in-batch consecutive duplicates, guids with no head yet and a guid
+    whose every row is retro — and the chains must stay valid."""
+    for g in ("c1", "c2", "c3"):
+        store.register_point(g, flags=iv.FLAG_BLOCK_CHAIN)
+    chained = {"chained", "c1", "c2", "c3"}
+    ts_flagged = {"tsflag", "chained"}
+
+    def at(h, m=0):
+        return _ts("2024-01-01T00:00:00") + dt.timedelta(hours=h, minutes=m)
+
+    batches = [
+        [
+            ("c1", at(1), 15, "a"),
+            ("c1", at(2), 15, "a"),  # in-batch consecutive dup
+            ("c1", at(3), 15, "b"),
+            ("c2", at(1), 15, "x"),
+            ("chained", at(1), 15, "1"),
+            ("plain", at(1), 15, "p"),
+        ],
+        [
+            ("c1", at(0), 15, "early"),  # retro
+            ("c1", at(3), 15, "b"),  # equal to head: dup
+            ("c1", at(3), 15, "a"),  # same ts, data before head: retro
+            ("c1", at(3), 15, "c"),  # same ts, data after head: kept
+            ("c1", at(4), 15, "c"),  # in-batch dup of the kept row
+            ("c1", at(5), 15, "d"),
+            ("c2", at(0, 30), 15, "y"),  # every c2 row is retro
+            ("c2", at(0, 45), 15, "z"),
+            ("c3", at(2), 15, "n"),  # no head yet
+            ("c3", at(2), 15, "n"),  # exact in-batch repeat
+            ("chained", at(2), 15, "1"),  # dup of the head's data
+            ("tsflag", at(2), 15, "t"),
+        ],
+        [
+            ("c1", at(5), 15, "d"),
+            ("c1", at(6), 15, "d"),
+            ("c2", at(9), 15, "x"),  # equal data, later ts: dup of head
+            ("c3", at(1), 15, "old"),  # retro
+            ("c3", at(7), 15, "m"),
+            ("chained", at(3), 15, "2"),
+        ],
+    ]
+    seen_retro = seen_dup = 0
+    for rows in batches:
+        got, expect = _two_pass_census(
+            spark, store, rows, chained, ts_flagged,
+            lambda rows=rows: store.write_batch(_batch(spark, rows)),
+        )
+        assert got == expect
+        seen_retro += got["chain_dropped_retro"]
+        seen_dup += got["chain_dropped_dup"]
+    assert seen_retro >= 4 and seen_dup >= 5  # every drop kind was exercised
+    heads = {r["guid"]: r["data"] for r in store.heads_view().collect()}
+    assert heads == {"c1": "d", "c2": "x", "c3": "m", "chained": "2"}
+    verdict = store.verify_chains().collect()
+    assert len(verdict) == 4 and all(r["valid"] for r in verdict)
+
+
+def test_steady_state_write_batch_job_budget(store, spark):
+    """A steady-state batch feeding all three sinks runs at most 10
+    Spark jobs (15 before the drop census, the appended count and the
+    new heads rode the pinned chain fold): the pin+census with its
+    registry broadcast, one write per point sink, the fold pinned once
+    with its heads-log seed, and the chain and heads writes."""
+    sc = spark.sparkContext
+
+    def rows(h):
+        t = _ts("2024-01-01T00:00:00") + dt.timedelta(hours=h)
+        return [
+            ("plain", t, 15, "1"),
+            ("tsflag", t, 15, "2"),
+            ("chained", t, 15, f"c{h}"),
+            ("chained", t + dt.timedelta(minutes=1), 15, f"d{h}"),
+        ]
+
+    store.write_batch(_batch(spark, rows(0)))
+    store.write_batch(_batch(spark, rows(1)))
+    batch = _batch(spark, rows(2))
+    group = "write-batch-job-budget"
+    sc.setJobGroup(group, "steady-state write_batch", False)
+    try:
+        counts = store.write_batch(batch)
+    finally:
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert counts == {
+        "writes": 4, "ts": 3, "chain": 2,
+        "chain_dropped_retro": 0, "chain_dropped_dup": 0,
+    }
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 10, len(jobs)

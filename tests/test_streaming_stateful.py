@@ -650,7 +650,7 @@ def test_table_insert_from_foreachbatch_frame_completes(spark, sf_dir, tmp_path)
     session CLONE, and an Observation attached there never completes
     (the write executes under a different session's listener), hanging
     the stream. Table.insert/upsert must detect the cross-session batch
-    (Table._observable) and take the separate census action instead —
+    (tables._same_session) and take the separate census action instead —
     this test simply has to TERMINATE with the right rows to prove it."""
     import os
 

@@ -673,3 +673,65 @@ def test_leaf_cascade_census_rides_parent_count(db, monkeypatch):
     assert ("orders2", 1) in calls  # leaf child receives the count
     assert db.table("orders2").count(F.col("customers_id") == 2) == 0
     assert db.table("customers").count() == 2
+
+
+def test_local_batch_df_keeps_bigint_precision_and_strict_types(db, spark):
+    """A bigint column holding both 2**53+1 and None must round-trip
+    exactly through the local list-batch route (a float64 staging
+    column rounds it to 2**53), and a value the classic path refuses
+    for its column — a float in a bigint column, an int in a double
+    one — must be refused the same way, not silently converted."""
+    from iot_database_spark.tables import _local_batch_df
+
+    schema = "id bigint, n bigint, v string"
+    big = 2**53 + 1
+    rows = [{"id": 1, "n": big, "v": "a"}, {"id": 2, "n": None, "v": "b"}]
+    got = _local_batch_df(spark, [dict(r) for r in rows], schema)
+    assert sorted(map(tuple, got.collect())) == [(1, big, "a"), (2, None, "b")]
+
+    for bad, ddl in (
+        ({"id": 1, "n": 1.0, "v": "a"}, schema),
+        ({"id": 1, "d": 1}, "id bigint, d double"),
+        ({"id": 1, "b": 1}, "id bigint, b boolean"),
+    ):
+        with pytest.raises(TypeError):
+            spark.createDataFrame([dict(bad)], ddl).collect()
+        with pytest.raises(TypeError):
+            _local_batch_df(spark, [dict(bad)], ddl).collect()
+
+    # end to end through Table.insert
+    t = db.tables("bigints", schema)
+    t.insert([{"id": None, "n": big, "v": "a"}, {"id": None, "n": None, "v": "b"}])
+    assert sorted((r["v"], r["n"]) for r in t.df.collect()) == [
+        ("a", big), ("b", None)
+    ]
+
+
+def test_save_meta_crash_mid_dump_keeps_old_meta(db, spark, tmp_path, monkeypatch):
+    """_save_meta runs several times per write_batch (sequence bases,
+    the heads stamp). A crash part-way through the dump must leave the
+    previous _meta.json whole, so the store still opens with the meta
+    it had before the interrupted save."""
+    import json
+    import os
+
+    from iot_database_spark import database as D
+
+    with open(db._meta_path) as f:
+        before = json.load(f)
+
+    def torn_dump(obj, f, **kw):
+        f.write('{"tables": {"customers": {"sch')
+        raise RuntimeError("crash mid-dump")
+
+    monkeypatch.setattr(D.json, "dump", torn_dump)
+    db._meta["tables"]["customers"]["seq"] = 999
+    with pytest.raises(RuntimeError, match="crash mid-dump"):
+        db._save_meta()
+    monkeypatch.undo()
+
+    reopened = IotDatabase("testdb", str(tmp_path), spark)
+    assert reopened._meta == before
+    assert reopened.table("customers").count() == 3
+    # no torn temp file is left beside the meta
+    assert not [f for f in os.listdir(db.root) if ".tmp-" in f]
