@@ -78,8 +78,6 @@ HEADLINE = [
     "ann_lsh_cosine",
     "text_quality_classifier",
     "stream_exact_dedup",
-    "search_bm25_topk",
-    "search_hybrid_rrf",
     "corpus_pack_sequences",
     # round 3: NTZ-family + relational-core focus
     "ts_detect_gaps",
@@ -146,7 +144,6 @@ HEADLINE = [
     "dedup_span_removal",
     "dedup_substring_suffix",
     "corpus_quality_resample",
-    "search_phrase_topk",
     "decontaminate_fixed_eval",
 ]
 

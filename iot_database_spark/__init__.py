@@ -18,8 +18,10 @@ Layout:
     query/            fluent query builder + natural-language FIND parser
     functions/        BsonExpression scalar dialect -> Column registry,
                       IotValue priority-array expressions, unit conversion
-    operators/        timeseries (LOCF/resample), blockchain, vector search,
-                      dedup, text analysis, similarity, multimodal plumbing
+    operators/        timeseries (LOCF/resample), blockchain, vector search
+                      (brute force, IVF, int8), continuous aggregates,
+                      the reference's RTSP frame-store codec, dedup,
+                      text analysis, curation
     sources/          csv/json/parquet sources & sinks, system collections
     streaming/        continuous query service (Structured Streaming)
     plans/            explain/plan-audit helpers

@@ -35,12 +35,8 @@ when consecutive frames change size — this encoder writes a full frame
 on any size change instead, which the reference reader replays
 correctly.
 
-Spark wiring: `frame_sample(pixels=True)` in operators/multimodal.py
-recognizes the format structurally (`sniff`) and replays it inside the
-same Arrow-batched mapInPandas stage as the other containers; each
-reconstructed frame that is itself a JPEG continues into the in-process
-entropy decoder. The codec is per-row compute — no shuffle, constant
-memory per video blob.
+The codec is per-row compute over one blob — no Spark dependency,
+constant memory per video blob (decode is a lazy generator).
 """
 
 from __future__ import annotations

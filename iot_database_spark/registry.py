@@ -51,71 +51,63 @@ def register(
 # round's ordering from the recorded CORRECTNESS_r*.json artifacts
 # (reds first, then never-graded, then oldest-green-first).
 #
-# Round-14 window (exactly 50 slots) — the planner's output verbatim
-# (scripts/plan_rotation.py, run at r14 start). Steady-state rotation:
-# stream_windowed_rollup leads (the r10 green the r13 window displaced —
-# its evidence hits the 3-round age limit this round, exactly the
-# deferral arithmetic the r13 registry comments predicted), then the 49
-# oldest r11 greens. No registration change this round (optimization
-# round: semantics and registry frozen; the staged r14 candidate in
-# operators/staged_r14.py stays staged).
-# SATURATION: at 150 registered queries, a 50-slot window, and the
-# 3-round evidence-age limit, the rotation is exactly full with ZERO
-# slack. Steady state: r15 = the remaining r11 green + the r12 greens.
-# Any NEW registration (or same-round re-grade after a semantics
-# change) needs a slot freed by RETIRING a query first — the policy is
-# mechanical: scripts/plan_rotation.py (r11 verdict task #6).
+# The tuple below is the planner's output verbatim. With 147
+# registered queries, a 50-slot window and the 3-round evidence-age
+# limit, the rotation has 3 slots of slack: up to 3 new registrations
+# (or same-round re-grades after a semantics change) fit before one
+# needs a slot freed by RETIRING a query — the policy is mechanical:
+# scripts/plan_rotation.py (r11 verdict task #6).
 _PRIORITY: tuple[str, ...] = (
-    "stream_windowed_rollup",  # r10 green
-    "join_part_promo_monthly",  # r11 green
-    "set_intersect",  # r11 green
-    "set_except",  # r11 green
-    "cube_agg",  # r11 green
-    "pivot_status_by_segment",  # r11 green
-    "grouping_sets_agg",  # r11 green
-    "event_sessionization",  # r11 green
-    "skew_salted_agg",  # r11 green
-    "event_funnel",  # r11 green
-    "event_cohort_retention",  # r11 green
-    "approx_sketch_accuracy",  # r11 green
-    "event_transition_matrix",  # r11 green
-    "string_funcs",  # r11 green
-    "string_format_regex",  # r11 green
-    "date_funcs",  # r11 green
-    "json_extract",  # r11 green
-    "iot_write_gating",  # r11 green
-    "ts_seasonal_baseline",  # r11 green
-    "vector_cosine_topk",  # r11 green
-    "vector_l2_topk",  # r11 green
-    "vector_upsert_dedup",  # r11 green
-    "ann_ivf_cosine",  # r11 green
-    "ann_two_stage_rerank",  # r11 green
-    "dedup_simhash",  # r11 green
-    "dedup_embedding_cosine",  # r11 green
-    "dedup_fuzzy_name_match",  # r11 green
-    "dedup_span_exact",  # r11 green
-    "dedup_span_removal",  # r11 green
-    "decontaminate_fixed_eval",  # r11 green
-    "text_quality_scores",  # r11 green
-    "text_token_count",  # r11 green
-    "text_langid",  # r11 green
-    "text_gopher_rules",  # r11 green
-    "text_scrub_pii",  # r11 green
-    "decontaminate_ngram_overlap",  # r11 green
-    "embedding_outliers",  # r11 green
-    "text_repetition_trim",  # r11 green
-    "corpus_zipf_stats",  # r11 green
-    "dedup_url_canonical",  # r11 green
-    "pipeline_web_ingest",  # r11 green
-    "corpus_quality_resample",  # r11 green
-    "embedding_quantize_int8",  # r11 green
-    "ann_int8_cosine",  # r11 green
-    "search_phrase_topk",  # r11 green
-    "nl_find_filter_sort_limit",  # r11 green
-    "nl_find_dual_join",  # r11 green
-    "nl_find_dual_fk_inference",  # r11 green
-    "nl_find_triple_join",  # r11 green
-    "nl_find_include_digest",  # r11 green
+    "remote_serialized_find",  # r11 green
+    "scan_filter_project",  # r12 green
+    "filter_in",  # r12 green
+    "ts_cusum_drift",  # r12 green
+    "event_path_topk",  # r12 green
+    "conditional_cast",  # r12 green
+    "array_higher_order",  # r12 green
+    "try_cast_predicates",  # r12 green
+    "sha256_hash",  # r12 green
+    "map_functions",  # r12 green
+    "iot_password_hash",  # r12 green
+    "unit_convert_bulk",  # r12 green
+    "cagg_incremental_refresh",  # r12 green
+    "ts_range_join",  # r12 green
+    "ts_ewma_smooth",  # r12 green
+    "ts_anomaly_mad",  # r12 green
+    "ts_threshold_alerts",  # r12 green
+    "chain_verify",  # r12 green
+    "vector_l2_radius",  # r12 green
+    "vector_filtered_topk",  # r12 green
+    "vector_multi_query_topk",  # r12 green
+    "dedup_minhash_lsh",  # r12 green
+    "dedup_ngram_jaccard",  # r12 green
+    "dedup_ngram_jaccard_capped",  # r12 green
+    "dedup_cluster_assign",  # r12 green
+    "dedup_repeated_ngrams",  # r12 green
+    "dedup_ngram_containment",  # r12 green
+    "corpus_ngram_novelty",  # r12 green
+    "text_chunk_windows",  # r12 green
+    "corpus_train_val_test_split",  # r12 green
+    "text_strip_html",  # r12 green
+    "text_bpe_token_count_fixed",  # r12 green
+    "text_trigram_lm_score",  # r12 green
+    "corpus_ccnet_buckets",  # r12 green
+    "corpus_mixture_sample",  # r12 green
+    "heavy_hitter_ngrams",  # r12 green
+    "ann_lsh_cosine",  # r12 green
+    "text_quality_classifier",  # r12 green
+    "zorder_key_events",  # r12 green
+    "text_trigram_coverage",  # r12 green
+    "stream_rollup_to_table",  # r12 green
+    "stream_exact_dedup",  # r12 green
+    "stream_threshold_alerts",  # r12 green
+    "stream_sessionization",  # r12 green
+    "stream_stream_time_join",  # r12 green
+    "timetravel_asof_digest",  # r12 green
+    "evolution_nullfill_digest",  # r12 green
+    "txn_atomicity_digest",  # r12 green
+    "fk_cascade_digest",  # r12 green
+    "continuous_slot14_digest",  # r12 green
 )
 
 
@@ -142,7 +134,9 @@ _LOADED = False
 
 
 def _ensure_loaded() -> None:
-    """Import every module that registers queries (idempotent)."""
+    """Import every module that registers queries (idempotent). An import
+    failure propagates: skipping the module would drop all its queries
+    from queries() without a trace."""
     global _LOADED
     if _LOADED:
         return
@@ -159,15 +153,11 @@ def _ensure_loaded() -> None:
         "iot_database_spark.operators.textstats_queries",
         "iot_database_spark.operators.curation_queries",
         "iot_database_spark.operators.quantize_queries",
-        "iot_database_spark.operators.search_queries",
         "iot_database_spark.operators.nl_queries",
         "iot_database_spark.operators.streaming_queries",
         "iot_database_spark.operators.storage_queries",
     ):
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError:
-            pass  # module not built yet (incremental rounds)
+        importlib.import_module(mod)
     _LOADED = True
 
 

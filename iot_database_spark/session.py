@@ -40,7 +40,8 @@ def get_spark(app_name: str = "iot_database_spark", master: str | None = None) -
     - shuffle.partitions sized to local parallelism here; on a real
       cluster this should be ~2-3x total cores (or left to AQE's
       coalescing with a high initial value).
-    - Arrow enabled for the Pandas-UDF paths (vector ops, multimodal).
+    - Arrow enabled for the Pandas-UDF paths (chain fold, stateful
+      streaming, text stats, BPE).
     - UTC session timezone: the reference stores ISO-8601/UTC timestamps
       (Iot.Database/IotValue.cs ToStringValue), and oracle comparisons
       must not depend on host timezone.
@@ -240,7 +241,8 @@ def _apply_runtime_confs(spark: SparkSession) -> None:
     - UTC session timezone: oracle comparisons must not depend on the host
       JVM default timezone, and epoch_us() on LTZ columns assumes UTC
       (NTZ columns — the testdata's timestamps — are tz-independent).
-    - Arrow: the vector/multimodal Pandas-UDF paths assume Arrow batches.
+    - Arrow: the Pandas-UDF paths (chain fold, stateful streaming, text
+      stats, BPE) assume Arrow batches.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 8)
     for key, val in (

@@ -204,17 +204,20 @@ class Table:
     def _txn_dir(self) -> str:
         return os.path.join(self.path, "_txn")
 
-    def _current_version(self) -> int:
-        """Max committed manifest version, -1 if the table is empty."""
+    def _versions(self) -> list[int]:
+        """Committed manifest versions, in listing order."""
         d = self._txn_dir()
         if not os.path.isdir(d):
-            return -1
-        vs = [
+            return []
+        return [
             int(f[:-5])
             for f in os.listdir(d)
             if f.endswith(".json") and f[:-5].isdigit()
         ]
-        return max(vs, default=-1)
+
+    def _current_version(self) -> int:
+        """Max committed manifest version, -1 if the table is empty."""
+        return max(self._versions(), default=-1)
 
     def _manifest_dirs(self, version: int) -> list[str]:
         with open(os.path.join(self._txn_dir(), f"{version}.json")) as f:
@@ -232,16 +235,7 @@ class Table:
             if glob.glob(os.path.join(self.path, "*.parquet")):
                 return self.db.spark.read.schema(self.schema).parquet(self.path)
             return self.db.spark.createDataFrame([], self.schema)
-        paths = [
-            p
-            for d in self._manifest_dirs(v)
-            if glob.glob(os.path.join(p := os.path.join(self.path, d), "*.parquet"))
-        ]
-        if not paths:  # committed empty snapshot (e.g. delete-all)
-            return self.db.spark.createDataFrame([], self.schema)
-        # explicit schema: per-file columns resolve by name, so dirs
-        # written from differently-ordered batches read consistently
-        return self.db.spark.read.schema(self.schema).parquet(*paths)
+        return self._dirs_df(self._manifest_dirs(v))
 
     def _stage(self, df: DataFrame) -> str:
         """Write one immutable data dir; return its path relative to the
@@ -315,6 +309,8 @@ class Table:
         return self._manifest_dirs(v) if v >= 0 else []
 
     def _dirs_df(self, dirs: list[str]) -> DataFrame:
+        """Read the non-empty data dirs among `dirs`; an empty frame when
+        none holds a parquet file (e.g. a committed delete-all)."""
         paths = [
             p
             for d in dirs
@@ -322,6 +318,8 @@ class Table:
         ]
         if not paths:
             return self.db.spark.createDataFrame([], self.schema)
+        # explicit schema: per-file columns resolve by name, so dirs
+        # written from differently-ordered batches read consistently
         return self.db.spark.read.schema(self.schema).parquet(*paths)
 
     def _write(self, df: DataFrame, base_version: int | None = None) -> None:
@@ -511,26 +509,15 @@ class Table:
         path = os.path.join(self._txn_dir(), f"{version}.json")
         if not os.path.exists(path):
             raise ValueError(f"{self.name}: no committed version {version}")
-        paths = [
-            p
-            for d in self._manifest_dirs(version)
-            if glob.glob(os.path.join(p := os.path.join(self.path, d), "*.parquet"))
-        ]
-        if not paths:
-            return self.db.spark.createDataFrame([], self.schema)
-        return self.db.spark.read.schema(self.schema).parquet(*paths)
+        return self._dirs_df(self._manifest_dirs(version))
 
     def history(self) -> list[dict]:
         """Commit log listing: [{'version': N, 'n_dirs': k}, ...] newest
         first ($transactions-style introspection)."""
-        d = self._txn_dir()
-        if not os.path.isdir(d):
-            return []
-        vs = sorted(
-            (int(f[:-5]) for f in os.listdir(d) if f.endswith(".json") and f[:-5].isdigit()),
-            reverse=True,
-        )
-        return [{"version": v, "n_dirs": len(self._manifest_dirs(v))} for v in vs]
+        return [
+            {"version": v, "n_dirs": len(self._manifest_dirs(v))}
+            for v in sorted(self._versions(), reverse=True)
+        ]
 
     def vacuum(self, keep_last: int = 2, retention_s: float = 3600.0) -> int:
         """Remove data dirs unreferenced by the newest `keep_last`
@@ -560,13 +547,11 @@ class Table:
         floor = max(0, v - keep_last + 1)
         live: set[str] = set()
         referenced: set[str] = set()
-        for f in os.listdir(self._txn_dir()):
-            if f.endswith(".json") and f[:-5].isdigit():
-                x = int(f[:-5])
-                dirs = set(self._manifest_dirs(x))
-                referenced |= dirs
-                if x >= floor:
-                    live |= dirs
+        for x in self._versions():
+            dirs = set(self._manifest_dirs(x))
+            referenced |= dirs
+            if x >= floor:
+                live |= dirs
         now = time.time()
         removed = 0
         data_root = os.path.join(self.path, "data")

@@ -68,14 +68,15 @@ def evidence(rounds: dict[int, dict]) -> dict[str, tuple[int, bool]]:
 
 
 # ---------------------------------------------------------------------------
-# Retirement policy (r11 verdict task #6 — the registry is SATURATED).
+# Retirement policy (r11 verdict task #6 — the registry runs at or near
+# saturation).
 #
 # Invariant: every registered query's newest green driver row is at most
 # EVIDENCE_AGE_LIMIT rounds old. With SLOTS graded per round that caps
-# the registry at SLOTS * EVIDENCE_AGE_LIMIT queries; at 150 registered
-# the cap is met with zero slack, so any same-round slot demand — a NEW
-# registration, or a re-grade forced by a SEMANTICS change to an
-# existing query — requires RETIRING a query first.
+# the registry at SLOTS * EVIDENCE_AGE_LIMIT queries; once the cap is
+# met, any same-round slot demand — a NEW registration, or a re-grade
+# forced by a SEMANTICS change to an existing query — requires RETIRING
+# a query first.
 #
 # Retiring a query (the dedup_ngram_jaccard_absolute / r9 precedent):
 #   1. remove its @register decorator — the function body and its
@@ -93,12 +94,6 @@ def evidence(rounds: dict[int, dict]) -> dict[str, tuple[int, bool]]:
 EVIDENCE_AGE_LIMIT = 3
 SLOTS = 50
 RETIREMENT_CANDIDATES: tuple[str, ...] = (
-    # r14's incoming registration is already staged and parity-gated:
-    # operators/staged_r14.py::corpus_token_budget_select
-    # (tests/test_staged_r14.py) — registering it consumes
-    # RETIREMENT_CANDIDATES[0] below, exactly as r13 consumed
-    # text_ngram_lm_score for dedup_substring_suffix.
-    #
     # CONSUMED r13: text_ngram_lm_score (bigram variant of
     # lm.ngram_lm_score) retired to seat dedup_substring_suffix —
     # text_trigram_lm_score keeps the identical plan (same

@@ -1,5 +1,6 @@
 """Tests for the LLM-pipeline operators: dedup behavior on known
-near-dups, IVF recall vs brute force, multimodal plumbing."""
+near-dups, IVF recall vs brute force, text statistics, BPE and the
+frame-store codec."""
 
 from __future__ import annotations
 
@@ -7,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from iot_database_spark.operators import dedup as dd
-from iot_database_spark.operators import multimodal as mm
 from iot_database_spark.operators import similarity as sim
 from iot_database_spark.operators import textstats as tx
 from iot_database_spark.operators import vector as vec
@@ -192,138 +192,6 @@ def test_ivf_recall_vs_brute_force(spark, sf_dir):
     recall = len(set(brute) & set(approx)) / 10
     assert approx[0] == 0  # the query vector itself is found
     assert recall >= 0.3  # random embeddings: probing 4/8 buckets
-
-
-def test_multimodal_decode_and_features(spark):
-    media = spark.createDataFrame(
-        [
-            (1, "image", bytearray(b"\x89PNG fake bytes 1"), {"src": "cam1"}),
-            (2, "video", bytearray(b"\x00\x00ftyp fake vid"), {"src": "cam2"}),
-        ],
-        mm.MEDIA_SCHEMA,
-    )
-    decoded = {r["media_id"]: r for r in mm.decode_media(media).collect()}
-    assert set(decoded) == {1, 2}
-    assert 64 <= decoded[1]["width"] < 256
-    assert len(decoded[1]["content_sha"]) == 64
-    # deterministic: same bytes -> same metadata
-    again = {r["media_id"]: r for r in mm.decode_media(media).collect()}
-    assert again[1] == decoded[1]
-
-    feats = {r["media_id"]: r["feature"] for r in mm.extract_features(media).collect()}
-    assert len(feats[1]) == 16
-    assert abs(sum(feats[1]) - 1.0) < 1e-6  # normalized histogram
-
-    frames = mm.frame_sample(media, every_n=5).collect()
-    assert all(r["media_id"] == 2 for r in frames)  # only the video
-    assert [r["frame_idx"] for r in frames][0] == 0
-
-
-def test_decode_without_decoder_raises(spark):
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(b"x"), {})], mm.MEDIA_SCHEMA
-    )
-    with pytest.raises(NotImplementedError, match="decoder"):
-        mm.decode_media(media, decoder=None)
-
-
-def _tiny_png(w: int, h: int) -> bytes:
-    """Minimal valid PNG: signature + IHDR (+ empty IDAT/IEND not needed
-    for header parsing, but included for realism)."""
-    import struct
-    import zlib
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + tag
-            + data
-            + struct.pack(">I", zlib.crc32(tag + data))
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
-    raw = zlib.compress(b"".join(b"\x00" + b"\x7f" * w for _ in range(h)))
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", raw)
-        + chunk(b"IEND", b"")
-    )
-
-
-def _tiny_wav(n_samples: int, rate: int = 8000, amp: float = 0.5) -> bytes:
-    """Square-wave 16-bit mono WAV via the stdlib writer."""
-    import io
-    import struct
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        val = int(amp * 32768) - 1
-        frames = b"".join(
-            struct.pack("<h", val if i % 2 == 0 else -val)
-            for i in range(n_samples)
-        )
-        w.writeframes(frames)
-    return buf.getvalue()
-
-
-def test_real_container_decode(spark):
-    """auto_decoder REALLY parses PNG/GIF/BMP/JPEG/WAV bytes (pure stdlib
-    — no media libraries), and only falls back to fake for unknown bytes."""
-    import struct
-
-    gif = b"GIF89a" + struct.pack("<HH", 320, 200) + b"\x00" * 20
-    bmp = b"BM" + b"\x00" * 16 + struct.pack("<ii", 640, -480) + b"\x00" * 20
-    jpeg = (
-        b"\xff\xd8"
-        + b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-        + b"\xff\xc0" + struct.pack(">H", 17) + b"\x08"
-        + struct.pack(">HH", 240, 360) + b"\x03" + b"\x00" * 9
-        + b"\xff\xd9"
-    )
-    media = spark.createDataFrame(
-        [
-            (1, "image", bytearray(_tiny_png(12, 7)), {}),
-            (2, "image", bytearray(gif), {}),
-            (3, "image", bytearray(bmp), {}),
-            (4, "image", bytearray(jpeg), {}),
-            (5, "audio", bytearray(_tiny_wav(4000, rate=8000)), {}),
-            (6, "image", bytearray(b"not a known container"), {}),
-        ],
-        mm.MEDIA_SCHEMA,
-    )
-    d = {r["media_id"]: r for r in mm.decode_media(media).collect()}
-    assert (d[1]["codec"], d[1]["width"], d[1]["height"]) == ("png", 12, 7)
-    assert (d[2]["codec"], d[2]["width"], d[2]["height"]) == ("gif", 320, 200)
-    assert (d[3]["codec"], d[3]["width"], d[3]["height"]) == ("bmp", 640, 480)
-    assert (d[4]["codec"], d[4]["width"], d[4]["height"]) == ("jpeg", 360, 240)
-    assert d[5]["codec"] == "wav"
-    assert d[5]["n_frames"] == 4000 and d[5]["duration_ms"] == 500
-    assert d[6]["codec"] == "fake"
-
-
-def test_audio_features_real_pcm(spark):
-    """audio_features decodes PCM and computes RMS/peak/ZCR with numpy —
-    a ±amp square wave has RMS == peak == amp and ZCR ~= 1."""
-    amp = 0.5
-    media = spark.createDataFrame(
-        [
-            (1, "audio", bytearray(_tiny_wav(4000, rate=8000, amp=amp)), {}),
-            (2, "audio", bytearray(b"junk, not RIFF"), {}),
-        ],
-        mm.MEDIA_SCHEMA,
-    )
-    f = {r["media_id"]: r for r in mm.audio_features(media).collect()}
-    assert f[1]["sample_rate"] == 8000 and f[1]["n_channels"] == 1
-    assert f[1]["n_samples"] == 4000 and f[1]["duration_ms"] == 500
-    assert abs(f[1]["rms"] - amp) < 0.01
-    assert abs(f[1]["peak"] - amp) < 0.01
-    assert f[1]["zero_cross_rate"] > 0.95
-    assert f[2]["sample_rate"] == 0 and f[2]["rms"] is None
 
 
 def test_hll_sketch_within_tolerance(spark, sf_dir):
@@ -618,327 +486,6 @@ def test_minhash_index_incremental_dedup(spark, tmp_path, corpus):
     assert (20, 11) in links2
 
 
-def _encode_gif(w, h, frames, palette, delays_cs):
-    """Minimal valid animated-GIF encoder (test-side oracle): 4-color
-    palette, LZW with a CLEAR code before every pixel so the code table
-    never grows (valid, uncompressed-size stream)."""
-    import struct as _s
-
-    out = bytearray(b"GIF89a")
-    out += _s.pack("<HHBBB", w, h, 0x80 | 0x01, 0, 0)  # GCT, 4 entries
-    for rgb in palette:
-        out += bytes(rgb)
-    min_code = 2
-    clear, end = 1 << min_code, (1 << min_code) + 1
-    for pixels, delay in zip(frames, delays_cs):
-        out += b"\x21\xf9\x04\x00" + _s.pack("<H", delay) + b"\x00\x00"
-        out += b"\x2c" + _s.pack("<HHHHB", 0, 0, w, h, 0)
-        out += bytes([min_code])
-        bits, nbits = 0, 0
-        stream = bytearray()
-
-        def emit(code, width=min_code + 1):
-            nonlocal bits, nbits
-            bits |= code << nbits
-            nbits += width
-            while nbits >= 8:
-                stream.append(bits & 0xFF)
-                bits >>= 8
-                nbits -= 8
-
-        for p in pixels:
-            emit(clear)
-            emit(p)
-        emit(end)
-        if nbits:
-            stream.append(bits & 0xFF)
-        for i in range(0, len(stream), 255):
-            chunk = stream[i : i + 255]
-            out += bytes([len(chunk)]) + chunk
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
-
-
-def test_gif_real_frame_decode(spark):
-    """frame_sample(pixels=True) returns REAL decoded RGB bytes for an
-    animated GIF — exact pixel values, frame count, and per-frame delays."""
-    palette = [(0, 0, 0), (255, 0, 0), (0, 255, 0), (0, 0, 255)]
-    f0 = [0, 1, 2, 3]  # 2x2: black, red / green, blue
-    f1 = [3, 2, 1, 0]
-    f2 = [1, 1, 2, 2]
-    blob = _encode_gif(2, 2, [f0, f1, f2], palette, [10, 20, 30])
-
-    # direct decode: all frames, exact pixels
-    frames = mm.gif_decode_frames(blob)
-    assert len(frames) == 3
-    assert frames[0]["rgb"] == bytes(
-        b for p in f0 for b in palette[p]
-    )
-    assert frames[1]["rgb"] == bytes(b for p in f1 for b in palette[p])
-    assert [f["delay_ms"] for f in frames] == [100, 200, 300]
-
-    # container metadata now counts frames structurally
-    meta = mm.auto_decoder(blob)
-    assert meta["codec"] == "gif" and meta["n_frames"] == 3
-    assert meta["duration_ms"] == 600
-
-    # through Spark: Arrow-batched mapInPandas, every 2nd frame
-    media = spark.createDataFrame(
-        [(1, "video", bytearray(blob), {})], mm.MEDIA_SCHEMA
-    )
-    rows = {
-        r["frame_idx"]: r
-        for r in mm.frame_sample(media, every_n=2, pixels=True).collect()
-    }
-    assert set(rows) == {0, 2}
-    assert bytes(rows[0]["rgb"]) == frames[0]["rgb"]
-    assert bytes(rows[2]["rgb"]) == bytes(b for p in f2 for b in palette[p])
-    assert rows[0]["width"] == rows[0]["height"] == 2
-
-    # non-GIF video bytes fail LOUDLY in pixels mode (no silent fakes)
-    mp4ish = spark.createDataFrame(
-        [(2, "video", bytearray(b"\x00\x00\x00\x18ftypmp42"), {})],
-        mm.MEDIA_SCHEMA,
-    )
-    with pytest.raises(Exception, match="only GIF decodes"):
-        mm.frame_sample(mp4ish, pixels=True).collect()
-
-
-def _encode_fake_jpeg(w: int, h: int, payload: bytes) -> bytes:
-    """Minimal structurally-valid JPEG: SOI, APP0, SOF0 (real dims), SOS,
-    FF-stuffed entropy payload with an embedded RST marker, EOI."""
-    soi = b"\xff\xd8"
-    app0 = b"\xff\xe0" + (16).to_bytes(2, "big") + b"JFIF\x00" + bytes(9)
-    sof = (
-        b"\xff\xc0" + (17).to_bytes(2, "big") + b"\x08"
-        + h.to_bytes(2, "big") + w.to_bytes(2, "big")
-        + b"\x03" + b"\x01\x11\x00\x02\x11\x01\x03\x11\x01"
-    )
-    sos = b"\xff\xda" + (12).to_bytes(2, "big") + b"\x03\x01\x00\x02\x11\x03\x11\x00\x3f\x00"
-    ent = payload.replace(b"\xff", b"\xff\x00") + b"\xff\xd0" + b"\x12\x34"
-    return soi + app0 + sof + sos + ent + b"\xff\xd9"
-
-
-def test_mjpeg_real_frame_split(spark):
-    """MJPEG (concatenated JPEGs): marker-aware split yields each frame's
-    exact bytes — a raw FF D9 bit pattern inside entropy data (stuffed to
-    FF 00 D9) must NOT split a frame — and frame_sample(pixels=True)
-    emits them with per-frame SOF dims and pixel_format='jpeg'."""
-    # frame 1 entropy contains the EOI bit pattern pre-stuffing
-    f0 = _encode_fake_jpeg(8, 6, b"\x01\x02\xff\xd9\x03\x04")
-    f1 = _encode_fake_jpeg(4, 2, b"\x05\x06\x07")
-    f2 = _encode_fake_jpeg(16, 12, b"\xff\xff\x00\x01")
-    blob = f0 + f1 + f2
-
-    parts = mm.mjpeg_split_frames(blob)
-    assert parts == [f0, f1, f2]
-    # a single still JPEG stays an image, not a 1-frame video
-    assert mm.auto_decoder(f0)["codec"] == "jpeg"
-    meta = mm.auto_decoder(blob)
-    assert meta["codec"] == "mjpeg" and meta["n_frames"] == 3
-    assert (meta["width"], meta["height"]) == (8, 6)
-
-    media = spark.createDataFrame(
-        [(7, "video", bytearray(blob), {})], mm.MEDIA_SCHEMA
-    )
-    rows = {
-        r["frame_idx"]: r
-        for r in mm.frame_sample(media, every_n=2, pixels=True).collect()
-    }
-    assert set(rows) == {0, 2}
-    assert bytes(rows[0]["rgb"]) == f0 and bytes(rows[2]["rgb"]) == f2
-    assert (rows[0]["width"], rows[0]["height"]) == (8, 6)
-    assert (rows[2]["width"], rows[2]["height"]) == (16, 12)
-    assert rows[0]["pixel_format"] == "jpeg"
-
-    # metadata-level sampling rides the same n_frames count
-    idxs = sorted(
-        r["frame_idx"] for r in mm.frame_sample(media, every_n=1).collect()
-    )
-    assert idxs == [0, 1, 2]
-
-
-def _avi(frames: list[bytes], uspf: int = 40000, w: int = 8, h: int = 6) -> bytes:
-    """Minimal MJPEG-in-AVI: RIFF(AVI ) > LIST(hdrl){avih} + LIST(movi)
-    with one 00dc chunk per frame (word-aligned, per the RIFF spec)."""
-    import struct
-
-    def chunk(fourcc: bytes, payload: bytes) -> bytes:
-        pad = b"\x00" if len(payload) % 2 else b""
-        return fourcc + struct.pack("<I", len(payload)) + payload + pad
-
-    avih = struct.pack(
-        "<IIIIIIIIII4I", uspf, 0, 0, 0, len(frames), 0, 1, 0, w, h, 0, 0, 0, 0
-    )
-    hdrl = chunk(b"LIST", b"hdrl" + chunk(b"avih", avih))
-    movi = chunk(b"LIST", b"movi" + b"".join(chunk(b"00dc", f) for f in frames))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def test_avi_mjpeg_real_frame_split(spark):
-    """MJPEG-in-AVI: the RIFF structural walk extracts each 00dc video
-    chunk's exact JPEG bytes (odd-size frames exercise word alignment),
-    avih supplies metadata, and frame_sample(pixels=True) rides the
-    same path; a non-MJPEG AVI payload raises instead of passing
-    opaque codec bytes off as frames."""
-    import pytest
-
-    f0 = _encode_fake_jpeg(8, 6, b"\x01\x02\x03")  # odd payload sizes ok
-    f1 = _encode_fake_jpeg(4, 2, b"\x05\x06\x07\x08")
-    f2 = _encode_fake_jpeg(16, 12, b"\xff\xd9\x00")
-    blob = _avi([f0, f1, f2])
-
-    assert mm.avi_split_frames(blob) == [f0, f1, f2]
-    meta = mm.auto_decoder(blob)
-    assert meta["codec"] == "avi" and meta["n_frames"] == 3
-    assert (meta["width"], meta["height"]) == (8, 6)
-    assert meta["duration_ms"] == 120  # 3 frames * 40 ms
-
-    media = spark.createDataFrame(
-        [(9, "video", bytearray(blob), {})], mm.MEDIA_SCHEMA
-    )
-    rows = {
-        r["frame_idx"]: r
-        for r in mm.frame_sample(media, every_n=2, pixels=True).collect()
-    }
-    assert set(rows) == {0, 2}
-    assert bytes(rows[0]["rgb"]) == f0 and bytes(rows[2]["rgb"]) == f2
-    assert (rows[2]["width"], rows[2]["height"]) == (16, 12)
-    assert rows[0]["pixel_format"] == "jpeg"
-
-    # true-codec AVI (payloads are not JPEG) fails loudly
-    opaque = _avi([b"\x00\x01\x02\x03", b"\x04\x05\x06\x07"])
-    bad = spark.createDataFrame(
-        [(10, "video", bytearray(opaque), {})], mm.MEDIA_SCHEMA
-    )
-    with pytest.raises(Exception, match="not.*MJPEG|NotImplemented"):
-        mm.frame_sample(bad, every_n=1, pixels=True).collect()
-
-
-def _mp4(
-    frames: list[bytes],
-    codec: bytes = b"jpeg",
-    w: int = 8,
-    h: int = 6,
-    timescale: int = 1000,
-    duration: int = 120,
-    chunks: list[int] | None = None,
-    entry: bytes | None = None,
-) -> bytes:
-    """Minimal ISO-BMFF MP4 with one 'vide' track: ftyp + mdat(samples,
-    laid out per `chunks` sample counts) + moov(mvhd + trak(tkhd +
-    mdia(hdlr + minf(stbl(stsd stsz stsc stco))))). Chunk offsets are
-    real absolute file offsets into mdat."""
-    import struct
-
-    def box(t: bytes, payload: bytes) -> bytes:
-        return struct.pack(">I", len(payload) + 8) + t + payload
-
-    chunks = chunks or [len(frames)]
-    assert sum(chunks) == len(frames)
-    ftyp = box(b"ftyp", b"mp42\x00\x00\x00\x00mp42")
-    mdat = box(b"mdat", b"".join(frames))
-    # absolute offset of sample 0 = len(ftyp) + mdat header (8)
-    offsets, pos, si = [], len(ftyp) + 8, 0
-    for spc in chunks:
-        offsets.append(pos)
-        pos += sum(len(f) for f in frames[si : si + spc])
-        si += spc
-    mvhd = box(
-        b"mvhd",
-        struct.pack(">BxxxIIII", 0, 0, 0, timescale, duration) + bytes(80),
-    )
-    tkhd = box(
-        b"tkhd",
-        struct.pack(">BxxxIIIxxxxI", 0, 0, 0, 1, duration)
-        + bytes(52)
-        + struct.pack(">II", w << 16, h << 16),
-    )
-    hdlr = box(b"hdlr", bytes(8) + b"vide" + bytes(13))
-    stsd = box(
-        b"stsd",
-        struct.pack(">II", 0, 1)
-        + (entry if entry is not None
-           else struct.pack(">I", 16) + codec + bytes(8)),
-    )
-    stsz = box(
-        b"stsz",
-        struct.pack(">III", 0, 0, len(frames))
-        + b"".join(struct.pack(">I", len(f)) for f in frames),
-    )
-    # one stsc run per distinct consecutive samples-per-chunk value
-    runs = []
-    for k, spc in enumerate(chunks):
-        if k == 0 or spc != chunks[k - 1]:
-            runs.append((k + 1, spc, 1))
-    stsc = box(
-        b"stsc",
-        struct.pack(">II", 0, len(runs))
-        + b"".join(struct.pack(">III", *r) for r in runs),
-    )
-    stco = box(
-        b"stco",
-        struct.pack(">II", 0, len(offsets))
-        + b"".join(struct.pack(">I", o) for o in offsets),
-    )
-    stbl = box(b"stbl", stsd + stsz + stsc + stco)
-    minf = box(b"minf", stbl)
-    mdia = box(b"mdia", hdlr + minf)
-    trak = box(b"trak", tkhd + mdia)
-    moov = box(b"moov", mvhd + trak)
-    return ftyp + mdat + moov
-
-
-def test_mp4_mjpeg_real_sample_split(spark):
-    """MJPEG-in-MP4: the ISO-BMFF box walk resolves stsz/stsc/stco to
-    each sample's exact JPEG bytes across MULTIPLE chunks, mvhd/tkhd/
-    stsd supply metadata, and frame_sample(pixels=True) rides the same
-    path; a true-codec MP4 (avc1) raises instead of passing opaque
-    payloads off as frames."""
-    import pytest
-
-    f0 = _encode_fake_jpeg(8, 6, b"\x01\x02\x03")
-    f1 = _encode_fake_jpeg(4, 2, b"\x05\x06\x07\x08")
-    f2 = _encode_fake_jpeg(16, 12, b"\xff\xd9\x00")
-    # 2 chunks (2 samples + 1 sample) exercises the stsc run expansion
-    blob = _mp4([f0, f1, f2], chunks=[2, 1])
-
-    assert mm.mp4_split_samples(blob) == [f0, f1, f2]
-    meta = mm.auto_decoder(blob)
-    assert meta["codec"] == "mp4/jpeg" and meta["n_frames"] == 3
-    assert (meta["width"], meta["height"]) == (8, 6)
-    assert meta["duration_ms"] == 120
-
-    media = spark.createDataFrame(
-        [(11, "video", bytearray(blob), {})], mm.MEDIA_SCHEMA
-    )
-    rows = {
-        r["frame_idx"]: r
-        for r in mm.frame_sample(media, every_n=2, pixels=True).collect()
-    }
-    assert set(rows) == {0, 2}
-    assert bytes(rows[0]["rgb"]) == f0 and bytes(rows[2]["rgb"]) == f2
-    assert (rows[2]["width"], rows[2]["height"]) == (16, 12)
-    assert rows[0]["pixel_format"] == "jpeg"
-
-    # metadata-level sampling rides the structural frame count
-    idxs = sorted(
-        r["frame_idx"] for r in mm.frame_sample(media, every_n=1).collect()
-    )
-    assert idxs == [0, 1, 2]
-
-    # true-codec MP4 fails loudly with the codec named
-    opaque = _mp4([b"\x00\x01\x02\x03", b"\x04\x05"], codec=b"avc1")
-    assert mm.auto_decoder(opaque)["codec"] == "mp4/avc1"
-    bad = spark.createDataFrame(
-        [(12, "video", bytearray(opaque), {})], mm.MEDIA_SCHEMA
-    )
-    with pytest.raises(Exception, match="avc1"):
-        mm.frame_sample(bad, every_n=1, pixels=True).collect()
-
-
 def test_range_join_boundary_semantics(spark):
     """range_join window is half-open [start, end): an event exactly at
     `end` does not match; one exactly at `start` does — including when
@@ -968,42 +515,6 @@ def test_range_join_boundary_semantics(spark):
         for r in range_join(ev, iv, bucket_s=1800).collect()
     )
     assert got == [1, 2]
-
-
-def test_mp4_uniform_stsz_and_co64_paths():
-    """The stsz uniform-size shortcut and 64-bit co64 chunk offsets must
-    resolve the same sample ranges as the explicit-size/stco path."""
-    import struct
-
-    def box(t: bytes, payload: bytes) -> bytes:
-        return struct.pack(">I", len(payload) + 8) + t + payload
-
-    frames = [b"AAAA", b"BBBB", b"CCCC"]  # uniform 4-byte samples
-    ftyp = box(b"ftyp", b"mp42\x00\x00\x00\x00mp42")
-    mdat = box(b"mdat", b"".join(frames))
-    base = len(ftyp) + 8
-    mvhd = box(b"mvhd", struct.pack(">BxxxIIII", 0, 0, 0, 1000, 90) + bytes(80))
-    tkhd = box(
-        b"tkhd",
-        struct.pack(">BxxxIIIxxxxI", 0, 0, 0, 1, 90)
-        + bytes(52)
-        + struct.pack(">II", 4 << 16, 4 << 16),
-    )
-    hdlr = box(b"hdlr", bytes(8) + b"vide" + bytes(13))
-    stsd = box(b"stsd", struct.pack(">II", 0, 1) + struct.pack(">I", 16) + b"raw " + bytes(8))
-    # uniform size 4, no per-sample table
-    stsz = box(b"stsz", struct.pack(">III", 0, 4, 3))
-    stsc = box(b"stsc", struct.pack(">II", 0, 1) + struct.pack(">III", 1, 3, 1))
-    co64 = box(b"co64", struct.pack(">II", 0, 1) + struct.pack(">Q", base))
-    stbl = box(b"stbl", stsd + stsz + stsc + co64)
-    blob = ftyp + mdat + box(
-        b"moov", mvhd + box(b"trak", tkhd + box(b"mdia", hdlr + box(b"minf", stbl)))
-    )
-
-    assert mm.mp4_split_samples(blob) == frames
-    meta = mm.auto_decoder(blob)
-    assert meta["codec"] == "mp4/raw" and meta["n_frames"] == 3
-    assert meta["duration_ms"] == 90
 
 
 def test_range_join_drops_inverted_and_empty_intervals(spark):
@@ -1051,53 +562,6 @@ def test_strip_html_tags_entities_whitespace(spark):
     )
 
 
-def _make_y4m(frames_yuv, w, h, chroma=b"C420", fps=b"F25:1"):
-    """frames_yuv: list of (y_fill, u_fill, v_fill) byte values."""
-    cw, ch_ = w // 2, h // 2
-    out = b"YUV4MPEG2 W%d H%d %s Ip A1:1 %s\n" % (w, h, fps, chroma)
-    for yv, uv, vv in frames_yuv:
-        out += b"FRAME\n"
-        out += bytes([yv]) * (w * h) + bytes([uv]) * (cw * ch_) + bytes([vv]) * (cw * ch_)
-    return out
-
-
-def test_y4m_real_pixel_decode(spark):
-    # frame 1: white (Y=235, U=V=128 -> BT.601 full white 255)
-    # frame 2: pure-ish red (Y=81, U=90, V=240)
-    blob = _make_y4m([(235, 128, 128), (81, 90, 240)], w=4, h=2)
-    meta = mm.parse_container(blob)
-    assert meta == {
-        "codec": "y4m/420", "width": 4, "height": 2,
-        "n_frames": 2, "duration_ms": 80,
-    }
-    df = spark.createDataFrame(
-        [(7, "video", bytearray(blob))],
-        "media_id long, kind string, content binary",
-    )
-    rows = {
-        r.frame_idx: r
-        for r in mm.frame_sample(df, every_n=1, pixels=True).collect()
-    }
-    assert sorted(rows) == [0, 1]
-    f0, f1 = rows[0], rows[1]
-    assert (f0.width, f0.height, f0.pixel_format, f0.delay_ms) == (4, 2, "rgb24", 40)
-    px0 = bytes(f0.rgb)
-    assert len(px0) == 4 * 2 * 3
-    assert set(px0) == {255}  # every channel saturates to white
-    px1 = bytes(f1.rgb)
-    r, g, b = px1[0], px1[1], px1[2]
-    assert r > 240 and g < 30 and b < 30  # red within rounding
-    assert px1 == px1[:3] * 8  # uniform frame
-    # mono variant: no chroma planes, grayscale output
-    mono = b"YUV4MPEG2 W2 H2 F10:1 Cmono\nFRAME\n" + bytes([126]) * 4
-    mf = mm.y4m_decode_frames(mono)
-    assert len(mf) == 1 and mf[0]["delay_ms"] == 100
-    assert set(mf[0]["rgb"]) == {128}  # 1.164*(126-16) = 128.04 -> 128
-    # truncated final frame is dropped, not half-decoded
-    trunc = blob[:-3]
-    assert mm.parse_container(trunc)["n_frames"] == 1
-
-
 def test_trigram_coverage_separates_garbage(spark, sf_dir):
     """A doc made of characters the corpus never uses must score far
     below in-domain docs (the perplexity-filter contract)."""
@@ -1123,538 +587,6 @@ def test_trigram_coverage_separates_garbage(spark, sf_dir):
     # the oracle-gated query runs end-to-end on the parquet corpus
     out = text_trigram_coverage(spark, sf_dir).collect()
     assert all(0.0 <= r.coverage <= 1.0 for r in out)
-
-
-# --- real still-image and JPEG entropy decode (round-5 codecs) ------------
-
-
-def _png_filter_lines(rows, nch, filters):
-    """Apply RFC 2083 scanline filters forward (fixture side): rows is
-    an (h, w*nch) array; returns the filter-byte-prefixed raw stream."""
-    import numpy as np
-
-    h = rows.shape[0]
-    stride = rows.shape[1]
-    filters = filters or [0] * h
-    raw = bytearray()
-    prev = np.zeros(stride, dtype=np.int32)
-    for y in range(h):
-        f = filters[y]
-        line = rows[y].astype(np.int32)
-        enc = line.copy()
-        if f == 1:
-            enc[nch:] = (line[nch:] - line[:-nch]) & 0xFF
-        elif f == 2:
-            enc = (line - prev) & 0xFF
-        elif f == 3:
-            for x in range(stride):
-                left = line[x - nch] if x >= nch else 0
-                enc[x] = (line[x] - ((left + prev[x]) >> 1)) & 0xFF
-        elif f == 4:
-            for x in range(stride):
-                a = line[x - nch] if x >= nch else 0
-                up = prev[x]
-                c = prev[x - nch] if x >= nch else 0
-                p = a + up - c
-                pa, pb, pc = abs(p - a), abs(p - up), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (up if pb <= pc else c)
-                enc[x] = (line[x] - pred) & 0xFF
-        raw.append(f)
-        raw += bytes(enc.astype(np.uint8))
-        prev = line
-    return bytes(raw)
-
-
-def _make_png(w, h, color, pix, plte=None, filters=None, interlace=False):
-    """Spec-side PNG encoder for fixtures (independent of the decoder):
-    filters applied per the RFC 2083 definitions, CRC-correct chunks,
-    optional Adam7 interlacing (each pass filtered as its own image)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    def chunk(t, d):
-        return (
-            struct.pack(">I", len(d)) + t + d
-            + struct.pack(">I", zlib.crc32(t + d) & 0xFFFFFFFF)
-        )
-
-    nch = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color]
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, int(interlace))
-    img = pix.reshape(h, w, nch)
-    if not interlace:
-        raw = _png_filter_lines(img.reshape(h, w * nch), nch, filters)
-    else:
-        raw = bytearray()
-        passes = ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-                  (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-        for pi, (x0, y0, dx, dy) in enumerate(passes):
-            sub = img[y0::dy, x0::dx]
-            ph, pw = sub.shape[0], sub.shape[1]
-            if ph == 0 or pw == 0:
-                continue
-            # cycle filters per pass so every filter sees interlaced lines
-            pfilters = [(pi + y) % 5 for y in range(ph)]
-            raw += _png_filter_lines(sub.reshape(ph, pw * nch), nch, pfilters)
-        raw = bytes(raw)
-    out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-    if plte is not None:
-        out += chunk(b"PLTE", plte.tobytes())
-    return out + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-
-
-def test_png_real_pixel_decode_all_filters_and_color_types():
-    """png_decode_pixels is bit-exact for 8-bit gray/RGB/palette/
-    gray+alpha/RGBA across all five scanline filters; Adam7 and 16-bit
-    reject loudly."""
-    import struct
-
-    import numpy as np
-
-    rng = np.random.default_rng(3)
-    pix = rng.integers(0, 256, (7, 5, 3), dtype=np.uint8)
-    d = mm.png_decode_pixels(_make_png(5, 7, 2, pix, filters=[0, 1, 2, 3, 4, 1, 4]))
-    assert (d["width"], d["height"]) == (5, 7)
-    assert np.array_equal(
-        np.frombuffer(d["rgb"], dtype=np.uint8).reshape(7, 5, 3), pix
-    )
-    pixa = rng.integers(0, 256, (4, 6, 4), dtype=np.uint8)
-    d = mm.png_decode_pixels(_make_png(6, 4, 6, pixa, filters=[4, 3, 2, 1]))
-    assert np.array_equal(
-        np.frombuffer(d["rgb"], dtype=np.uint8).reshape(4, 6, 3), pixa[:, :, :3]
-    )
-    g = rng.integers(0, 256, (3, 8, 1), dtype=np.uint8)
-    d = mm.png_decode_pixels(_make_png(8, 3, 0, g, filters=[1, 4, 3]))
-    assert np.array_equal(
-        np.frombuffer(d["rgb"], dtype=np.uint8).reshape(3, 8, 3),
-        np.repeat(g, 3, axis=2),
-    )
-    ga = rng.integers(0, 256, (3, 4, 2), dtype=np.uint8)
-    d = mm.png_decode_pixels(_make_png(4, 3, 4, ga, filters=[0, 2, 4]))
-    assert np.array_equal(
-        np.frombuffer(d["rgb"], dtype=np.uint8).reshape(3, 4, 3),
-        np.repeat(ga[:, :, :1], 3, axis=2),
-    )
-    plte = rng.integers(0, 256, (16, 3), dtype=np.uint8)
-    pi = rng.integers(0, 16, (5, 5, 1), dtype=np.uint8)
-    d = mm.png_decode_pixels(_make_png(5, 5, 3, pi, plte=plte, filters=[0, 1, 2, 3, 4]))
-    assert np.array_equal(
-        np.frombuffer(d["rgb"], dtype=np.uint8).reshape(5, 5, 3), plte[pi[:, :, 0]]
-    )
-    # Adam7 interlace: all seven passes unfilter and scatter bit-exactly
-    # (11x9 exercises partial passes and odd tails)
-    ipix = rng.integers(0, 256, (9, 11, 3), dtype=np.uint8)
-    d = mm.png_decode_pixels(_make_png(11, 9, 2, ipix, interlace=True))
-    assert (d["width"], d["height"]) == (11, 9)
-    assert np.array_equal(
-        np.frombuffer(d["rgb"], dtype=np.uint8).reshape(9, 11, 3), ipix
-    )
-    # tiny image where late passes are empty
-    tpix = rng.integers(0, 256, (1, 2, 3), dtype=np.uint8)
-    d = mm.png_decode_pixels(_make_png(2, 1, 2, tpix, interlace=True))
-    assert np.array_equal(
-        np.frombuffer(d["rgb"], dtype=np.uint8).reshape(1, 2, 3), tpix
-    )
-    # 16-bit depth decodes (high-byte reduction); PNG filtering is
-    # byte-wise at every depth so the same unfilter path serves it
-    import zlib as _z
-
-    def chunk(t, d):
-        return (
-            struct.pack(">I", len(d)) + t + d
-            + struct.pack(">I", _z.crc32(t + d) & 0xFFFFFFFF)
-        )
-
-    p16 = rng.integers(0, 65536, (3, 4, 3), dtype=np.uint16)
-    arr16 = np.frombuffer(
-        p16.astype(">u2").tobytes(), dtype=np.uint8
-    ).reshape(3, 24)
-    raw16 = bytearray()
-    for y in range(3):
-        raw16.append(0)
-        raw16 += bytes(arr16[y])
-    png16 = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 4, 3, 16, 2, 0, 0, 0))
-        + chunk(b"IDAT", _z.compress(bytes(raw16)))
-        + chunk(b"IEND", b"")
-    )
-    d16 = mm.png_decode_pixels(png16)
-    assert np.array_equal(
-        np.frombuffer(d16["rgb"], dtype=np.uint8).reshape(3, 4, 3),
-        (p16 >> 8).astype(np.uint8),
-    )
-    # sub-byte depths decode: MSB-first packed samples (4-bit palette
-    # here; 1/2-bit gray covered by the same unpack path)
-    def pack4(sub):
-        ph, pw = sub.shape
-        raw4 = bytearray()
-        for y in range(ph):
-            raw4.append(0)
-            rowvals = list(sub[y]) + [0] * (pw % 2)
-            for i in range(0, len(rowvals), 2):
-                raw4.append((int(rowvals[i]) << 4) | int(rowvals[i + 1]))
-        return bytes(raw4)
-
-    plte4 = rng.integers(0, 256, (16, 3), dtype=np.uint8)
-    pidx = rng.integers(0, 16, (5, 7))
-    png4 = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 7, 5, 4, 3, 0, 0, 0))
-        + chunk(b"PLTE", plte4.tobytes())
-        + chunk(b"IDAT", _z.compress(pack4(pidx)))
-        + chunk(b"IEND", b"")
-    )
-    d4 = mm.png_decode_pixels(png4)
-    assert np.array_equal(
-        np.frombuffer(d4["rgb"], dtype=np.uint8).reshape(5, 7, 3), plte4[pidx]
-    )
-    # sub-byte TRUECOLOR is spec-invalid and rejects loudly
-    bad = bytearray(_make_png(4, 4, 2, rng.integers(0, 256, (4, 4, 3), dtype=np.uint8)))
-    bad[24] = 4  # IHDR bit-depth byte on color type 2
-    bad[29:33] = struct.pack(">I", _z.crc32(bytes(bad[12:29])) & 0xFFFFFFFF)
-    with pytest.raises(ValueError, match="color type"):
-        mm.png_decode_pixels(bytes(bad))
-
-
-def test_jpeg_baseline_roundtrip_and_rejections():
-    """jpeg_decode_pixels entropy-decodes baseline JPEG for real: a
-    near-lossless round trip through the independent encoder bounds
-    per-pixel error by the quantization step; 4:2:0 + restart markers
-    and grayscale decode; progressive rejects loudly."""
-    import numpy as np
-
-    from iot_database_spark.operators.jpeg_codec import (
-        jpeg_decode_pixels,
-        jpeg_encode_baseline,
-    )
-
-    rng = np.random.default_rng(7)
-    h, w = 24, 40
-    yy, xx = np.mgrid[0:h, 0:w]
-    img = np.stack(
-        [xx * 255 / w, yy * 255 / h, (xx + yy) * 255 / (w + h)], axis=2
-    ) + rng.normal(0, 3, (h, w, 3))
-    img = np.clip(np.round(img), 0, 255).astype(np.uint8)
-
-    # 4:4:4 with quant tables ~1: error bounded by DCT rounding
-    d = jpeg_decode_pixels(jpeg_encode_baseline(img.tobytes(), w, h, quant_scale=0.02))
-    assert (d["width"], d["height"], d["n_components"]) == (w, h, 3)
-    out = np.frombuffer(d["rgb"], dtype=np.uint8).reshape(h, w, 3)
-    assert np.abs(out.astype(int) - img.astype(int)).max() <= 8
-
-    # 4:2:0 subsampling + restart interval, Annex K tables: lossy but close
-    d = jpeg_decode_pixels(
-        jpeg_encode_baseline(img.tobytes(), w, h, subsample=True, restart_interval=2)
-    )
-    out = np.frombuffer(d["rgb"], dtype=np.uint8).reshape(h, w, 3)
-    err = np.abs(out.astype(int) - img.astype(int))
-    assert err.mean() < 10 and err.max() < 64
-
-    # grayscale: DCT round trip is exact on a smooth ramp
-    g = np.clip(np.round(xx * 255 / w), 0, 255).astype(np.uint8)
-    d = jpeg_decode_pixels(
-        jpeg_encode_baseline(g.tobytes(), w, h, quant_scale=0.02, grayscale=True)
-    )
-    assert d["n_components"] == 1
-    out = np.frombuffer(d["rgb"], dtype=np.uint8).reshape(h, w, 3)
-    assert np.array_equal(out[:, :, 0], g) and np.array_equal(out[:, :, 1], g)
-
-    # arithmetic-coded (SOF9) rejects loudly
-    blob = bytearray(jpeg_encode_baseline(img.tobytes(), w, h))
-    idx = bytes(blob).find(b"\xff\xc0")
-    blob[idx + 1] = 0xC9
-    with pytest.raises(NotImplementedError, match="arithmetic"):
-        jpeg_decode_pixels(bytes(blob))
-
-
-def test_image_decode_pixels_spark(spark):
-    """image_decode_pixels routes PNG/JPEG/GIF/BMP rows through one
-    mapInPandas stage and every row lands as rgb24 with real pixels."""
-    import struct
-
-    import numpy as np
-
-    from iot_database_spark.operators.jpeg_codec import jpeg_encode_baseline
-
-    rng = np.random.default_rng(11)
-    png_pix = rng.integers(0, 256, (6, 4, 3), dtype=np.uint8)
-    png = _make_png(4, 6, 2, png_pix, filters=[0, 1, 2, 3, 4, 1])
-    jw, jh = 16, 8
-    smooth = np.clip(
-        np.round(np.mgrid[0:jh, 0:jw][1] * 255 / jw), 0, 255
-    ).astype(np.uint8)
-    jpg = jpeg_encode_baseline(
-        np.repeat(smooth[:, :, None], 3, axis=2).tobytes(), jw, jh, quant_scale=0.02
-    )
-    bw, bh = 3, 2
-    bimg = rng.integers(0, 256, (bh, bw, 3), dtype=np.uint8)
-    stride = (bw * 3 + 3) & ~3
-    px = bytearray()
-    for y in range(bh - 1, -1, -1):
-        row = bytearray()
-        for x in range(bw):
-            row += bytes([bimg[y, x, 2], bimg[y, x, 1], bimg[y, x, 0]])
-        px += row + b"\x00" * (stride - len(row))
-    bmp = (
-        b"BM" + struct.pack("<IHHI", 54 + len(px), 0, 0, 54)
-        + struct.pack("<IiiHHIIiiII", 40, bw, bh, 1, 24, 0, len(px), 0, 0, 0, 0)
-        + bytes(px)
-    )
-    media = spark.createDataFrame(
-        [
-            (1, "image", bytearray(png), {}),
-            (2, "image", bytearray(jpg), {}),
-            (3, "image", bytearray(bmp), {}),
-            (4, "video", bytearray(b"not-an-image"), {}),  # filtered out
-        ],
-        mm.MEDIA_SCHEMA,
-    )
-    rows = {r["media_id"]: r for r in mm.image_decode_pixels(media).collect()}
-    assert set(rows) == {1, 2, 3}
-    assert all(r["pixel_format"] == "rgb24" for r in rows.values())
-    assert np.array_equal(
-        np.frombuffer(bytes(rows[1]["rgb"]), dtype=np.uint8).reshape(6, 4, 3),
-        png_pix,
-    )
-    got_j = np.frombuffer(bytes(rows[2]["rgb"]), dtype=np.uint8).reshape(jh, jw, 3)
-    assert np.abs(got_j[:, :, 0].astype(int) - smooth.astype(int)).max() <= 4
-    assert np.array_equal(
-        np.frombuffer(bytes(rows[3]["rgb"]), dtype=np.uint8).reshape(bh, bw, 3),
-        bimg,
-    )
-
-
-def test_mjpeg_entropy_decode_to_rgb(spark):
-    """The MJPEG video path now decodes each baseline frame to REAL
-    rgb24 pixels (jpeg_codec entropy decode) instead of passing encoded
-    bytes; a non-baseline frame in the same stream stays honestly tagged
-    pixel_format='jpeg'."""
-    import numpy as np
-
-    from iot_database_spark.operators.jpeg_codec import jpeg_encode_baseline
-
-    w, h = 16, 8
-    ramp = np.clip(
-        np.round(np.mgrid[0:h, 0:w][1] * 255 / w), 0, 255
-    ).astype(np.uint8)
-    f0 = jpeg_encode_baseline(
-        np.repeat(ramp[:, :, None], 3, axis=2).tobytes(), w, h, quant_scale=0.02
-    )
-    f1 = jpeg_encode_baseline(
-        (255 - np.repeat(ramp[:, :, None], 3, axis=2)).tobytes(), w, h, quant_scale=0.02
-    )
-    fake = _encode_fake_jpeg(4, 2, b"\x05\x06\x07")  # undecodable scan
-    blob = f0 + f1 + fake
-    media = spark.createDataFrame(
-        [(9, "video", bytearray(blob), {})], mm.MEDIA_SCHEMA
-    )
-    rows = {
-        r["frame_idx"]: r
-        for r in mm.frame_sample(media, every_n=1, pixels=True).collect()
-    }
-    assert set(rows) == {0, 1, 2}
-    assert rows[0]["pixel_format"] == "rgb24"
-    got0 = np.frombuffer(bytes(rows[0]["rgb"]), dtype=np.uint8).reshape(h, w, 3)
-    assert np.abs(got0[:, :, 0].astype(int) - ramp.astype(int)).max() <= 4
-    got1 = np.frombuffer(bytes(rows[1]["rgb"]), dtype=np.uint8).reshape(h, w, 3)
-    assert np.abs(got1[:, :, 0].astype(int) - (255 - ramp).astype(int)).max() <= 4
-    assert rows[2]["pixel_format"] == "jpeg"
-    assert bytes(rows[2]["rgb"]) == fake
-
-
-def test_image_resize_real_semantics(spark):
-    """image_resize emits real resized pixels: nearest 2x upscaling
-    duplicates blocks exactly, bilinear preserves constants and linear
-    ramps, and the whole decode+resize runs in one mapInPandas stage."""
-    import numpy as np
-
-    # nearest 2x: each source pixel becomes an exact 2x2 block
-    src = np.array(
-        [[[10, 20, 30], [200, 100, 50]], [[0, 0, 0], [255, 255, 255]]],
-        dtype=np.uint8,
-    )
-    up = np.frombuffer(
-        mm.resize_rgb(src.tobytes(), 2, 2, 4, 4, method="nearest"),
-        dtype=np.uint8,
-    ).reshape(4, 4, 3)
-    assert np.array_equal(up, np.repeat(np.repeat(src, 2, 0), 2, 1))
-
-    # bilinear preserves a constant image at any scale
-    const = np.full((5, 7, 3), 123, dtype=np.uint8)
-    out = np.frombuffer(
-        mm.resize_rgb(const.tobytes(), 7, 5, 13, 3), dtype=np.uint8
-    )
-    assert (out == 123).all()
-
-    # bilinear 2x downscale of a horizontal ramp averages pixel pairs
-    ramp = np.zeros((2, 8, 3), dtype=np.uint8)
-    ramp[:, :, :] = (np.arange(8) * 30).astype(np.uint8)[None, :, None]
-    down = np.frombuffer(
-        mm.resize_rgb(ramp.tobytes(), 8, 2, 4, 1), dtype=np.uint8
-    ).reshape(1, 4, 3)
-    expect = ((np.arange(8) * 30).reshape(4, 2).mean(axis=1)).round()
-    assert np.array_equal(down[0, :, 0].astype(float), expect)
-
-    # end-to-end through Spark: PNG in, resized rgb24 out
-    rng = np.random.default_rng(5)
-    pix = rng.integers(0, 256, (6, 6, 3), dtype=np.uint8)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(_make_png(6, 6, 2, pix)), {})], mm.MEDIA_SCHEMA
-    )
-    rows = mm.image_resize(media, 3, 3).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["width"], r["height"], r["pixel_format"]) == (3, 3, "rgb24")
-    assert len(bytes(r["rgb"])) == 3 * 3 * 3
-
-
-def test_image_features_find_reencoded_near_dups(spark):
-    """The pixel-content featurizer survives re-encoding: the same
-    picture as PNG and as a lossy JPEG land within cosine ~1, while a
-    different picture is far — byte-level features cannot do this, and
-    it is what lets the embedding-cosine dedup path deduplicate images."""
-    import numpy as np
-
-    from iot_database_spark.operators.jpeg_codec import jpeg_encode_baseline
-
-    rng = np.random.default_rng(9)
-    h, w = 16, 16
-    yy, xx = np.mgrid[0:h, 0:w]
-    photo = np.clip(
-        np.round(
-            np.stack([xx * 14, yy * 14, (xx + yy) * 7], axis=2)
-            + rng.normal(0, 4, (h, w, 3))
-        ), 0, 255,
-    ).astype(np.uint8)
-    other = 255 - photo.transpose(1, 0, 2)
-    png = _make_png(w, h, 2, photo)
-    jpg = jpeg_encode_baseline(photo.tobytes(), w, h)  # lossy re-encode
-    other_png = _make_png(w, h, 2, other)
-    media = spark.createDataFrame(
-        [
-            (1, "image", bytearray(png), {}),
-            (2, "image", bytearray(jpg), {}),
-            (3, "image", bytearray(other_png), {}),
-        ],
-        mm.MEDIA_SCHEMA,
-    )
-    feats = {
-        r["media_id"]: np.array(r["feature"], dtype=float)
-        for r in mm.image_features(media).collect()
-    }
-    assert set(feats) == {1, 2, 3} and len(feats[1]) == 64
-
-    def cos(a, b):
-        return float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
-
-    assert cos(feats[1], feats[2]) > 0.995  # same picture, different codec
-    assert cos(feats[1], feats[3]) < 0.98  # different picture
-
-
-def test_audio_resample_real_pcm(spark):
-    """audio_resample decodes WAV PCM, linearly resamples to the target
-    rate, and re-emits playable 16-bit WAV: a pure sine keeps its
-    frequency (zero-crossing count scales with duration, not rate), the
-    sample count scales by out/in, and audio_features reads the result
-    at the new rate."""
-    import io as _io
-    import wave
-
-    import numpy as np
-
-    rate_in, rate_out, secs, freq = 8000, 16000, 1.0, 440.0
-    t = np.arange(int(rate_in * secs)) / rate_in
-    sine = (0.5 * np.sin(2 * np.pi * freq * t) * 32767).astype(np.int16)
-    buf = _io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate_in)
-        w.writeframes(sine.tobytes())
-    media = spark.createDataFrame(
-        [(1, "audio", bytearray(buf.getvalue()), {})], mm.MEDIA_SCHEMA
-    )
-    out = mm.audio_resample(media, rate_out).collect()
-    assert len(out) == 1
-    feats = {
-        r["media_id"]: r
-        for r in mm.audio_features(
-            spark.createDataFrame(out, mm.MEDIA_SCHEMA)
-        ).collect()
-    }
-    f = feats[1]
-    assert f["sample_rate"] == rate_out
-    assert abs(f["n_samples"] - int(rate_in * secs) * 2) <= 2
-    # a 440 Hz tone has 880 sign changes/sec regardless of sample rate:
-    # zcr (per-sample rate) should halve when the rate doubles
-    with wave.open(_io.BytesIO(bytes(out[0]["content"]))) as w2:
-        y = np.frombuffer(w2.readframes(w2.getnframes()), dtype=np.int16)
-    crossings = int(np.sum(np.signbit(y[1:]) != np.signbit(y[:-1])))
-    assert abs(crossings - 2 * freq * secs) <= 4
-    # amplitude preserved within interpolation loss
-    assert 0.30 <= f["rms"] <= 0.36  # sine rms = 0.5/sqrt(2) ~ 0.354
-
-
-def test_jpeg_progressive_decode_bit_exact(spark):
-    """Progressive (SOF2) JPEG decodes for REAL — spectral selection AND
-    successive approximation. The progressive encoding of an image must
-    decode to BIT-IDENTICAL pixels as its baseline encoding with the
-    same quantization tables (coefficient recovery through DC/AC
-    first+refinement scans is exact), across 4:4:4, 4:2:0, and
-    grayscale; and a progressive frame inside an MJPEG stream decodes
-    to rgb24 through the Spark frame path."""
-    import numpy as np
-
-    from iot_database_spark.operators.jpeg_codec import (
-        jpeg_decode_pixels,
-        jpeg_encode_baseline,
-        jpeg_encode_progressive,
-    )
-
-    rng = np.random.default_rng(13)
-    h, w = 29, 43  # non-multiples of 8/16: partial MCUs on both axes
-    yy, xx = np.mgrid[0:h, 0:w]
-    img = np.clip(
-        np.round(
-            np.stack([xx * 255 / w, yy * 255 / h, (xx + yy) * 120 / (w + h)],
-                     axis=2)
-            + rng.normal(0, 8, (h, w, 3))
-        ), 0, 255,
-    ).astype(np.uint8)
-    for kw in (
-        dict(), dict(subsample=True), dict(subsample="422"),
-        dict(quant_scale=3.0),
-    ):
-        base = jpeg_decode_pixels(jpeg_encode_baseline(img.tobytes(), w, h, **kw))
-        prog = jpeg_decode_pixels(jpeg_encode_progressive(img.tobytes(), w, h, **kw))
-        assert base["rgb"] == prog["rgb"], f"progressive != baseline for {kw}"
-    g = img[:, :, 0]
-    base = jpeg_decode_pixels(
-        jpeg_encode_baseline(g.tobytes(), w, h, grayscale=True)
-    )
-    prog = jpeg_decode_pixels(
-        jpeg_encode_progressive(g.tobytes(), w, h, grayscale=True)
-    )
-    assert base["rgb"] == prog["rgb"]
-
-    # MJPEG stream mixing baseline and progressive frames: both decode
-    # to rgb24 through frame_sample(pixels=True)
-    f0 = jpeg_encode_baseline(img.tobytes(), w, h, quant_scale=0.02)
-    f1 = jpeg_encode_progressive(img.tobytes(), w, h, quant_scale=0.02)
-    media = spark.createDataFrame(
-        [(3, "video", bytearray(f0 + f1), {})], mm.MEDIA_SCHEMA
-    )
-    rows = {
-        r["frame_idx"]: r
-        for r in mm.frame_sample(media, every_n=1, pixels=True).collect()
-    }
-    assert set(rows) == {0, 1}
-    assert rows[0]["pixel_format"] == "rgb24"
-    assert rows[1]["pixel_format"] == "rgb24"
-    got = np.frombuffer(bytes(rows[1]["rgb"]), dtype=np.uint8).reshape(h, w, 3)
-    assert np.abs(got.astype(int) - img.astype(int)).max() <= 8
 
 
 def test_bpe_tokenizer_end_to_end(spark, sf_dir):
@@ -1924,432 +856,6 @@ def test_framestore_decode_is_lazy_generator():
         next(gen)
 
 
-def test_frame_sample_framestore_consumption_is_constant_memory(monkeypatch):
-    """frame_sample's framestore branch (_framestore_sample) must pull
-    decode_frames one frame at a time: with every_n > 1 a long
-    sparse-delta capture never materializes the decoded list. Spy:
-    yield a bytes subclass that counts simultaneously-alive instances —
-    a regression to list(decode_frames(...)) drives the peak to the
-    frame count, while lazy consumption keeps it O(1)."""
-    from iot_database_spark.operators import framestore as fs
-    from iot_database_spark.operators import multimodal as mm
-
-    n_frames = 200
-
-    class TrackedBytes(bytes):
-        alive = 0
-        peak = 0
-
-        def __new__(cls, b):
-            obj = super().__new__(cls, b)
-            TrackedBytes.alive += 1
-            TrackedBytes.peak = max(TrackedBytes.peak, TrackedBytes.alive)
-            return obj
-
-        def __del__(self):
-            TrackedBytes.alive -= 1
-
-    frames = [bytes([i % 251] + [0] * 63) for i in range(n_frames)]
-    blob = fs.encode_frames(frames)
-    real_decode = fs.decode_frames
-
-    def tracked_decode(data):
-        for f in real_decode(data):
-            yield TrackedBytes(f)
-
-    monkeypatch.setattr(fs, "decode_frames", tracked_decode)
-
-    emitted = []
-
-    def emit(mid, idx, w, h, delay, fmt, data):
-        emitted.append((mid, idx, fmt, len(data)))  # keep no frame refs
-
-    mm._framestore_sample(emit, "cam0", blob, every_n=50)
-
-    assert [e[1] for e in emitted] == [0, 50, 100, 150]
-    assert all(e[2] == "raw" and e[3] == 64 for e in emitted)
-    # lazy: one live frame plus the in-flight next yield; a materialized
-    # list would have peaked at n_frames
-    assert TrackedBytes.peak <= 3, TrackedBytes.peak
-
-
-def _eg(v: int) -> str:
-    """ue(v) Exp-Golomb bit string (H.264 §9.1)."""
-    code = bin(v + 1)[2:]
-    return "0" * (len(code) - 1) + code
-
-
-def _rbsp_bytes(bits: str) -> bytes:
-    """Bit string → RBSP bytes with the trailing stop bit + pad."""
-    bits += "1"
-    bits += "0" * (-len(bits) % 8)
-    return bytes(int(bits[i : i + 8], 2) for i in range(0, len(bits), 8))
-
-
-def _ep_escape(rbsp: bytes) -> bytes:
-    """RBSP → NAL payload body: emulation-prevention escaping
-    (00 00 {00,01,02,03} → 00 00 03 xx, H.264 §7.4.1.1)."""
-    out = bytearray()
-    zeros = 0
-    for byte in rbsp:
-        if zeros >= 2 and byte <= 3:
-            out.append(3)
-            zeros = 0
-        out.append(byte)
-        zeros = zeros + 1 if byte == 0 else 0
-    return bytes(out)
-
-
-def _nal(nal_type: int, rbsp: bytes, ref_idc: int = 3, four: bool = True) -> bytes:
-    start = b"\x00\x00\x00\x01" if four else b"\x00\x00\x01"
-    return start + bytes([(ref_idc << 5) | nal_type]) + _ep_escape(rbsp)
-
-
-def _sps_baseline_rbsp(pw_mbs: int, ph_units: int) -> str:
-    """Baseline-profile SPS bit string through the cropping window."""
-    return (
-        f"{66:08b}" + "00000000" + f"{30:08b}"  # profile/constraints/level
-        + _eg(0)  # seq_parameter_set_id
-        + _eg(0)  # log2_max_frame_num_minus4
-        + _eg(2)  # pic_order_cnt_type = 2 (no extra fields)
-        + _eg(1)  # max_num_ref_frames
-        + "0"     # gaps_in_frame_num_value_allowed_flag
-        + _eg(pw_mbs - 1) + _eg(ph_units - 1)
-        + "1"     # frame_mbs_only_flag
-        + "1"     # direct_8x8_inference_flag
-        + "0"     # frame_cropping_flag
-        + "0"     # vui_parameters_present_flag
-    )
-
-
-def _h264_stream() -> bytes:
-    """SPS + PPS + IDR + 3 non-IDR slices; the third slice continues the
-    previous picture (first_mb_in_slice=1), so 3 coded frames total.
-    Mixed 3- and 4-byte start codes exercise both delimiters."""
-    sps = _rbsp_bytes(_sps_baseline_rbsp(4, 3))  # 64 x 48
-    pps = _rbsp_bytes(_eg(0) + _eg(0) + "1" + "0" * 8)
-    first_mb0 = bytes([0x88, 0x55, 0xAA])        # ue(first_mb)=0: MSB set
-    first_mb1 = bytes([0x50, 0x55, 0xAA])        # ue=1 ('010'): same picture
-    return (
-        _nal(7, sps)
-        + _nal(8, pps)
-        + _nal(5, first_mb0, four=False)          # IDR, picture 1
-        + _nal(1, first_mb0, ref_idc=2)           # picture 2
-        + _nal(1, first_mb1, ref_idc=2, four=False)  # continuation slice
-        + _nal(1, first_mb0, ref_idc=2)           # picture 3
-    )
-
-
-def test_annexb_nal_walk_types_and_frames():
-    """The Annex-B structural walk yields every NAL with its type, and
-    _parse_annexb counts coded pictures (first_mb_in_slice==0 slices),
-    reads SPS dimensions, and censuses NAL types — no codec library."""
-    import pytest
-
-    from iot_database_spark.operators import multimodal as mm
-
-    blob = _h264_stream()
-    nals = list(mm.annexb_iter_nals(blob))
-    assert [t for _, t, _ in nals] == [7, 8, 5, 1, 1, 1]
-    assert [o for o, _, _ in nals] == sorted(o for o, _, _ in nals)
-
-    meta = mm._parse_annexb(blob)
-    assert meta is not None
-    assert meta["codec"] == "h264-annexb"
-    assert meta["n_frames"] == 3
-    assert (meta["width"], meta["height"]) == (64, 48)
-    assert meta["nal_counts"] == {"sps": 1, "pps": 1, "idr": 1, "slice": 3}
-
-    # container dispatch: auto_decoder surfaces the same metadata
-    auto = mm.auto_decoder(blob)
-    assert auto["codec"] == "h264-annexb" and auto["n_frames"] == 3
-
-    # strictness: a start code with no SPS/slice walk is NOT video
-    assert mm._parse_annexb(b"\x00\x00\x01\x09\x10") is None
-    assert mm.auto_decoder(b"\x00\x00\x01\x09\x10")["codec"] == "fake"
-    # forbidden_zero_bit fails loudly in the walk itself
-    with pytest.raises(ValueError, match="forbidden"):
-        list(mm.annexb_iter_nals(b"\x00\x00\x01\xe5\x88"))
-    with pytest.raises(ValueError, match="start code"):
-        list(mm.annexb_iter_nals(b"\x01\x00\x00\x01\x65"))
-
-
-def test_annexb_sps_high_profile_cropping():
-    """High-profile SPS (chroma/bit-depth fields + cropping window):
-    120x68 macroblocks cropped by 8 luma rows = 1920x1080."""
-    from iot_database_spark.operators import multimodal as mm
-
-    bits = (
-        f"{100:08b}" + "00000000" + f"{40:08b}"
-        + _eg(0)          # sps_id
-        + _eg(1)          # chroma_format_idc = 4:2:0
-        + _eg(0) + _eg(0) # bit depths
-        + "0"             # qpprime
-        + "0"             # seq_scaling_matrix_present
-        + _eg(0)          # log2_max_frame_num_minus4
-        + _eg(0) + _eg(0) # poc_type=0, log2_max_poc_lsb
-        + _eg(1)          # max_num_ref_frames
-        + "0"             # gaps
-        + _eg(119) + _eg(67)
-        + "1" + "1"       # frame_mbs_only, direct_8x8
-        + "1"             # frame_cropping_flag
-        + _eg(0) + _eg(0) + _eg(0) + _eg(4)  # crop bottom 4*2=8 rows
-        + "0"             # vui
-    )
-    assert mm._parse_sps_dims(_rbsp_bytes(bits)) == (1920, 1080)
-
-
-def test_annexb_frame_sample_counts_not_decodes(spark):
-    """frame_sample on a true-codec H.264 capture: the metadata path
-    (pixels=False) samples frame indices from the structural NAL count;
-    pixels=True refuses loudly — counting works, decode never lies."""
-    import pytest
-
-    from iot_database_spark.operators import multimodal as mm
-
-    blob = _h264_stream()
-    media = spark.createDataFrame(
-        [(31, "video", bytearray(blob), {})], mm.MEDIA_SCHEMA
-    )
-    idx = sorted(
-        r["frame_idx"]
-        for r in mm.frame_sample(media, every_n=2, pixels=False).collect()
-    )
-    assert idx == [0, 2]
-    with pytest.raises(Exception, match="Annex-B"):
-        mm.frame_sample(media, every_n=1, pixels=True).collect()
-
-
-def _avc1_entry(sps_nal: bytes, pps_nal: bytes) -> bytes:
-    """Full VisualSampleEntry (78-byte field block) for codec avc1 with
-    an avcC child carrying one SPS + one PPS and 4-byte NAL lengths."""
-    import struct
-
-    def box(t: bytes, payload: bytes) -> bytes:
-        return struct.pack(">I", len(payload) + 8) + t + payload
-
-    avcc = (
-        bytes([1, sps_nal[1], sps_nal[2], sps_nal[3], 0xFF, 0xE1])
-        + struct.pack(">H", len(sps_nal)) + sps_nal
-        + bytes([1])
-        + struct.pack(">H", len(pps_nal)) + pps_nal
-    )
-    fields = bytes(78)  # reserved/dref/dims/resolution — unused by the walk
-    payload = fields + box(b"avcC", avcc)
-    return struct.pack(">I", len(payload) + 8) + b"avc1" + payload
-
-
-def _avc_sample(*nals: bytes) -> bytes:
-    import struct
-
-    return b"".join(struct.pack(">I", len(n)) + n for n in nals)
-
-
-def test_mp4_avcc_sps_dims_and_nal_walk(spark):
-    """MP4/avc1: the avcC record parses (SPS/PPS, NAL length size), the
-    SPS supplies CODED dimensions (overriding tkhd presentation size),
-    n_frames comes from stsz, the length-prefixed per-sample NAL walk
-    yields types and fails loudly on truncation — and frame_sample
-    counts frames metadata-only while pixels=True refuses with the NAL
-    census named."""
-    import pytest
-
-    from iot_database_spark.operators import multimodal as mm
-
-    sps_nal = b"\x67" + _ep_escape(_rbsp_bytes(_sps_baseline_rbsp(4, 3)))
-    pps_nal = b"\x68" + _ep_escape(_rbsp_bytes(_eg(0) + _eg(0) + "1"))
-    idr = bytes([0x65, 0x88, 0x55, 0xAA])
-    p_slice = bytes([0x41, 0x88, 0x12, 0x34])
-    samples = [
-        _avc_sample(sps_nal, pps_nal, idr),
-        _avc_sample(p_slice),
-        _avc_sample(p_slice),
-    ]
-    blob = _mp4(samples, w=999, h=999, entry=_avc1_entry(sps_nal, pps_nal))
-
-    avcc = mm._mp4_avcc(blob)
-    assert avcc is not None
-    assert avcc["nal_length_size"] == 4
-    assert avcc["profile_idc"] == 66
-    assert avcc["sps"] == [sps_nal] and avcc["pps"] == [pps_nal]
-
-    meta = mm._parse_mp4(blob)
-    assert meta["codec"] == "mp4/avc1"
-    assert (meta["width"], meta["height"]) == (64, 48)  # SPS, not tkhd 999
-    assert meta["n_frames"] == 3
-    assert meta["nal_length_size"] == 4
-
-    assert [t for _, t, _ in mm.avcc_iter_nals(samples[0])] == [7, 8, 5]
-    with pytest.raises(ValueError, match="overruns|truncated"):
-        list(mm.avcc_iter_nals(samples[0][:-2]))
-
-    media = spark.createDataFrame(
-        [(32, "video", bytearray(blob), {})], mm.MEDIA_SCHEMA
-    )
-    idx = sorted(
-        r["frame_idx"]
-        for r in mm.frame_sample(media, every_n=1, pixels=False).collect()
-    )
-    assert idx == [0, 1, 2]
-    with pytest.raises(Exception, match="NAL census"):
-        mm.frame_sample(media, every_n=1, pixels=True).collect()
-
-
-def test_framestore_frame_sample_integration(spark):
-    """frame_sample must recognize a frame-store capture structurally
-    and replay it in-process: JPEG payload frames entropy-decode to
-    rgb24 (the RTSP camera shape), arbitrary payloads emit as raw; the
-    metadata path counts records as n_frames."""
-    import numpy as np
-
-    from iot_database_spark.operators import framestore as fs
-    from iot_database_spark.operators import multimodal as mm
-    from iot_database_spark.operators.jpeg_codec import jpeg_encode_baseline
-
-    w, h = 16, 16
-    rng = np.random.default_rng(3)
-    img0 = rng.integers(0, 255, (h, w, 3), dtype=np.uint8)
-    img1 = img0.copy()
-    img1[::2] //= 2
-    jf = [
-        jpeg_encode_baseline(im.tobytes(), w, h, quant_scale=0.02)
-        for im in (img0, img1)
-    ]
-    blob = fs.encode_frames(jf)
-    media = spark.createDataFrame(
-        [(1, "video", bytearray(blob), {})], mm.MEDIA_SCHEMA
-    )
-    rows = {
-        r["frame_idx"]: r
-        for r in mm.frame_sample(media, every_n=1, pixels=True).collect()
-    }
-    assert set(rows) == {0, 1}
-    for i, im in enumerate((img0, img1)):
-        assert rows[i]["pixel_format"] == "rgb24"
-        got = np.frombuffer(bytes(rows[i]["rgb"]), dtype=np.uint8).reshape(h, w, 3)
-        assert np.abs(got.astype(int) - im.astype(int)).max() <= 10
-
-    # non-JPEG payloads stay honest raw bytes
-    raw = fs.encode_frames([b"\x05" * 32, b"\x05" * 31 + b"\x06"])
-    media2 = spark.createDataFrame(
-        [(2, "video", bytearray(raw), {})], mm.MEDIA_SCHEMA
-    )
-    got2 = mm.frame_sample(media2, every_n=1, pixels=True).collect()
-    assert [r["pixel_format"] for r in got2] == ["raw", "raw"]
-    assert bytes(got2[1]["rgb"]) == b"\x05" * 31 + b"\x06"
-
-    # metadata path: parse_container tags codec and counts frames
-    meta = mm.parse_container(blob)
-    assert meta == {"codec": "framestore", "n_frames": 2}
-    dec = mm.decode_media(media).collect()[0]
-    assert dec["codec"] == "framestore" and dec["n_frames"] == 2
-
-
-def test_r5_advice_fixes(spark, monkeypatch):
-    """Three r5-advice hardening items: (1) _emit_jpeg_frame degrades to
-    encoded bytes on ANY decode exception, (2) audio_resample refreshes
-    rate-dependent meta keys, (3) jpeg_codec names its unsupported
-    cases (non-integer sampling ratio, multi-component progressive AC
-    scan) instead of dying with opaque numpy/attribute errors."""
-    import io
-    import wave
-
-    import pytest as _pytest
-
-    from iot_database_spark.operators import jpeg_codec as jc
-    from iot_database_spark.operators import multimodal as mm
-
-    # (1) arbitrary exception classes from the decoder must not escape
-    for exc in (AttributeError("boom"), KeyError("boom"), TypeError("boom")):
-        def bad_decode(_fb, _exc=exc):
-            raise _exc
-
-        monkeypatch.setattr(jc, "jpeg_decode_pixels", bad_decode)
-        got = []
-        mm._emit_jpeg_frame(
-            lambda *a: got.append(a), 1, 0, b"\xff\xd8\xff\xd9"
-        )
-        assert got and got[0][5] == "jpeg" and got[0][6] == b"\xff\xd8\xff\xd9"
-    monkeypatch.undo()
-
-    # (2) audio_resample must not pass stale rate meta through
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        w.writeframes(b"\x00\x01" * 800)
-    media = spark.createDataFrame(
-        [(1, "audio", bytearray(buf.getvalue()),
-          {"sample_rate": "8000", "sample_width": "2",
-           "duration_ms": "100", "source": "mic3"})],
-        mm.MEDIA_SCHEMA,
-    )
-    out = mm.audio_resample(media, 16000).collect()[0]
-    assert out["meta"]["sample_rate"] == "16000"
-    assert out["meta"]["sample_width"] == "2"
-    assert out["meta"]["source"] == "mic3"  # unrelated keys survive
-    assert "duration_ms" not in out["meta"]
-    with wave.open(io.BytesIO(bytes(out["content"]))) as w:
-        assert w.getframerate() == 16000
-
-    # (3a) non-integer chroma sampling ratio raises by NAME
-    with _pytest.raises(NotImplementedError, match="sampling ratio"):
-        jc._frame_geometry((16, 16, [(1, 3, 1, 0), (2, 2, 1, 1)], False))
-
-    # (3b) multi-component progressive AC scan raises a named ValueError
-    frame = (16, 16, [(1, 1, 1, 0), (2, 1, 1, 1)], True)
-    geo = jc._frame_geometry(frame)
-    with _pytest.raises(ValueError, match="progressive AC scan"):
-        jc._decode_scan_into(
-            b"\x00\x00", 0, frame, geo, [], [(1, 0, 0), (2, 0, 0)],
-            (1, 5, 0, 0), {}, {}, 0,
-        )
-
-
-def test_framestore_frame_pack_roundtrip(spark):
-    """DataFrame-level round-trip: frame rows -> frame_pack -> the
-    reference wire format -> frame_sample replay recovers the exact
-    frame bytes, per video, with the full/delta policy applied."""
-    from iot_database_spark.operators import framestore as fs
-    from iot_database_spark.operators import multimodal as mm
-
-    vids = {
-        1: [bytes([i] + [7] * 63) for i in range(12)],
-        2: [bytes(range(64)), bytes(range(64))],
-    }
-    rows = [
-        (mid, i, bytearray(fb))
-        for mid, fl in vids.items()
-        for i, fb in enumerate(fl)
-    ]
-    frames = spark.createDataFrame(
-        rows, "media_id bigint, frame_idx int, rgb binary"
-    )
-    packed = {r["media_id"]: bytes(r["content"])
-              for r in mm.frame_pack(frames).collect()}
-    for mid, fl in vids.items():
-        assert list(fs.decode_frames(packed[mid])) == fl
-        kinds = [k for k, _ in fs.iter_records(packed[mid])]
-        assert kinds[0] is True
-    # video 1: 12 one-byte-delta frames -> fulls at 0 and 11 (10 deltas)
-    assert [k for k, _ in fs.iter_records(packed[1])] == (
-        [True] + [False] * 10 + [True]
-    )
-    # and the replay path reads what pack wrote, end to end in Spark
-    media = spark.createDataFrame(
-        [(mid, "video", bytearray(blob), {}) for mid, blob in packed.items()],
-        mm.MEDIA_SCHEMA,
-    )
-    got = {
-        (r["media_id"], r["frame_idx"]): bytes(r["rgb"])
-        for r in mm.frame_sample(media, every_n=1, pixels=True).collect()
-    }
-    for mid, fl in vids.items():
-        for i, fb in enumerate(fl):
-            assert got[(mid, i)] == fb
-
-
 def test_ngram_lm_score_hand_computed(spark):
     """Pin the LM semantics (not just cross-engine agreement): add-one
     smoothed bigram log-probs on a corpus small enough to verify by
@@ -2398,32 +904,6 @@ def test_ngram_lm_score_external_train_oov(spark):
     lp_az = math.floor(math.log(1.0 / (2 + 2.0)) * 1e6)  # known ctx 'a'
     lp_qr = math.floor(math.log(1.0 / (0 + 2.0)) * 1e6)  # unknown ctx
     assert got == {10: (1, lp_ab), 11: (1, lp_az), 12: (1, lp_qr)}
-
-
-def test_annexb_zero_frames_does_not_kill_batch(spark):
-    """An Annex-B stream whose slices are all picture CONTINUATIONS
-    (first_mb_in_slice > 0) parses with n_frames == 0; frame_sample's
-    metadata path must skip it (no F.sequence(0, -1) job kill) while
-    other videos in the same DataFrame still sample."""
-    from iot_database_spark.operators import multimodal as mm
-
-    sps = _rbsp_bytes(_sps_baseline_rbsp(4, 3))
-    cont = bytes([0x50, 0x55, 0xAA])  # ue(first_mb)=1 -> continuation
-    degenerate = _nal(7, sps) + _nal(1, cont, ref_idc=2) + _nal(1, cont, ref_idc=2)
-    meta = mm._parse_annexb(degenerate)
-    assert meta is not None and meta["n_frames"] == 0
-
-    good = _h264_stream()  # 3 coded frames
-    media = spark.createDataFrame(
-        [(41, "video", bytearray(degenerate), {}),
-         (42, "video", bytearray(good), {})],
-        mm.MEDIA_SCHEMA,
-    )
-    rows = sorted(
-        (r.media_id, r.frame_idx)
-        for r in mm.frame_sample(media, every_n=1, pixels=False).collect()
-    )
-    assert rows == [(42, 0), (42, 1), (42, 2)]
 
 
 def test_ngram_lm_score_trigram_hand_computed(spark):

@@ -227,7 +227,6 @@ _SF1_SUBSET = (
     "semi_join_exists",
     "dedup_exact",
     "dedup_minhash_lsh",
-    "search_bm25_topk",
     "q03_shipping_priority",
     "q06_revenue_forecast",
     "event_funnel",
@@ -305,6 +304,25 @@ def test_every_query_has_entry():
     assert _QUERIES, "no queries registered"
     for name in _ORACLES:
         assert name in _QUERIES
+
+
+def test_registry_import_failure_propagates(monkeypatch):
+    """A registering module that fails to import (e.g. a third-party
+    package missing inside it) must make queries() raise, never drop
+    that module's queries from the registry without a trace."""
+    import importlib
+
+    real = importlib.import_module
+
+    def failing(name, *args, **kwargs):
+        if name == "iot_database_spark.operators.vector_queries":
+            raise ModuleNotFoundError("No module named 'missing_dep'")
+        return real(name, *args, **kwargs)
+
+    monkeypatch.setattr(importlib, "import_module", failing)
+    monkeypatch.setattr(registry, "_LOADED", False)
+    with pytest.raises(ModuleNotFoundError, match="missing_dep"):
+        registry.queries()
 
 
 @pytest.mark.parametrize(

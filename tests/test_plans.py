@@ -307,8 +307,7 @@ def test_round11_span_and_fixed_eval_plan_shapes(spark, sf):
     Zipf-distributed span key (AQE cannot skew-split windows, so the
     r11 window form stragglered on hot spans —
     scripts/probe_span_skew.py measures the cliff). No nested-loop or
-    cartesian join anywhere; the top-k phrase search takes its rows
-    with a distributed heap."""
+    cartesian join anywhere."""
     # span removal: the corpus posexplode runs ONCE, at
     # localCheckpoint materialization — so it appears NOWHERE in the
     # final plan, which reads Scan ExistingRDD blocks; the only
@@ -348,10 +347,6 @@ def test_round11_span_and_fixed_eval_plan_shapes(spark, sf):
     fplan = fx._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoop" not in fplan and "CartesianProduct" not in fplan
     assert not audit.uses_python_udf(fx)
-    # phrase top-k: distributed heap, never a global sort
-    ph = _Q["search_phrase_topk"](spark, sf)
-    assert audit.uses_take_ordered(ph)
-    assert not audit.uses_python_udf(ph)
     # quality resample: one partial-aggregated exchange, narrow otherwise
     qr = _Q["corpus_quality_resample"](spark, sf)
     assert audit.count_exchanges(qr) == 1

@@ -287,94 +287,7 @@ def test_ewma_is_convex_combination_of_window(spark, vals, window_rows):
         assert g == acc  # bit-identical to the reference left fold
 
 
-# --- codec properties (round-5): PNG lossless, JPEG progressive==baseline --
-
-
-@settings(max_examples=20, deadline=None)
-@given(
-    w=st.integers(1, 24),
-    h=st.integers(1, 20),
-    color=st.sampled_from([0, 2, 3, 4, 6]),
-    interlace=st.booleans(),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_png_roundtrip_lossless(w, h, color, interlace, seed):
-    """png_decode_pixels inverts the spec-side fixture encoder exactly
-    for every color type, random per-line filters, and both layouts."""
-    import numpy as np
-
-    from iot_database_spark.operators import multimodal as mm
-    from tests.test_llm_pipeline import _make_png
-
-    rng = np.random.default_rng(seed)
-    nch = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color]
-    hi = 16 if color == 3 else 256
-    pix = rng.integers(0, hi, (h, w, nch), dtype=np.uint8)
-    plte = (
-        rng.integers(0, 256, (16, 3), dtype=np.uint8) if color == 3 else None
-    )
-    filters = [int(f) for f in rng.integers(0, 5, h)]
-    png = _make_png(w, h, color, pix, plte=plte,
-                    filters=None if interlace else filters,
-                    interlace=interlace)
-    d = mm.png_decode_pixels(png)
-    got = np.frombuffer(d["rgb"], dtype=np.uint8).reshape(h, w, 3)
-    if color == 0:
-        expect = np.repeat(pix, 3, axis=2)
-    elif color == 2:
-        expect = pix
-    elif color == 3:
-        expect = plte[pix[:, :, 0]]
-    elif color == 4:
-        expect = np.repeat(pix[:, :, :1], 3, axis=2)
-    else:
-        expect = pix[:, :, :3]
-    assert np.array_equal(got, expect)
-
-
-@settings(max_examples=15, deadline=None)
-@given(
-    w=st.integers(8, 40),
-    h=st.integers(8, 32),
-    sub=st.sampled_from([False, "420", "422"]),
-    gray=st.booleans(),
-    qscale=st.sampled_from([0.02, 1.0, 3.0]),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_jpeg_progressive_equals_baseline(w, h, sub, gray, qscale, seed):
-    """The progressive encoding of ANY image decodes bit-identically to
-    its baseline encoding with the same quantization tables: exact
-    coefficient recovery through DC/AC first+refinement scans, across
-    subsampling modes, partial MCUs, and quant scales."""
-    import numpy as np
-
-    from iot_database_spark.operators.jpeg_codec import (
-        jpeg_decode_pixels,
-        jpeg_encode_baseline,
-        jpeg_encode_progressive,
-    )
-
-    rng = np.random.default_rng(seed)
-    yy, xx = np.mgrid[0:h, 0:w]
-    img = np.clip(
-        np.round(
-            np.stack([xx * 255 / w, yy * 255 / h, (xx + yy) * 120 / (w + h)],
-                     axis=2)
-            + rng.normal(0, 8, (h, w, 3))
-        ), 0, 255,
-    ).astype(np.uint8)
-    kw = dict(grayscale=True) if gray else dict(subsample=sub)
-    data = img[:, :, 0].tobytes() if gray else img.tobytes()
-    base = jpeg_decode_pixels(
-        jpeg_encode_baseline(data, w, h, quant_scale=qscale, **kw)
-    )
-    prog = jpeg_decode_pixels(
-        jpeg_encode_progressive(data, w, h, quant_scale=qscale, **kw)
-    )
-    assert base["rgb"] == prog["rgb"]
-
-
-# -- round-6 codecs ----------------------------------------------------------
+# -- frame-store codec -------------------------------------------------------
 
 
 @settings(max_examples=40, deadline=None)
@@ -439,115 +352,6 @@ def test_bpe_sequential_equals_greedy_property(words, fuzz):
 
     for w in set(words) | {fuzz}:
         assert bpe.encode_word(w, ranks) == seq_apply(w)
-
-
-def _ue_bits(v: int) -> str:
-    code = bin(v + 1)[2:]
-    return "0" * (len(code) - 1) + code
-
-
-@settings(max_examples=60, deadline=None)
-@given(values=st.lists(st.integers(min_value=0, max_value=2**24), min_size=1, max_size=20))
-def test_expgolomb_reader_roundtrip_property(values):
-    """The H.264 bit reader decodes ANY hand-encoded ue(v) sequence back
-    to the source integers (Exp-Golomb §9.1: write side is independent
-    of the reader under test), including values spanning many bytes."""
-    from iot_database_spark.operators import multimodal as mm
-
-    bits = "".join(_ue_bits(v) for v in values) + "1"
-    bits += "0" * (-len(bits) % 8)
-    data = bytes(int(bits[i : i + 8], 2) for i in range(0, len(bits), 8))
-    r = mm._BitReader(data)
-    assert [r.ue() for _ in values] == values
-
-
-@settings(max_examples=60, deadline=None)
-@given(
-    pw_mbs=st.integers(min_value=1, max_value=256),
-    ph_units=st.integers(min_value=1, max_value=256),
-    crop=st.tuples(*[st.integers(min_value=0, max_value=3)] * 4),
-    high_profile=st.booleans(),
-)
-def test_sps_dims_property(pw_mbs, ph_units, crop, high_profile):
-    """SPS dimension parse matches the spec formula for arbitrary
-    macroblock geometry and 4:2:0 cropping, on both the baseline and
-    the high-profile (chroma/bit-depth fields) header layouts."""
-    from iot_database_spark.operators import multimodal as mm
-
-    cl, cr, ct, cb = crop
-    bits = (
-        (f"{100:08b}" if high_profile else f"{66:08b}")
-        + "00000000" + f"{30:08b}"
-        + _ue_bits(0)  # sps_id
-    )
-    if high_profile:
-        bits += _ue_bits(1) + _ue_bits(0) + _ue_bits(0) + "0" + "0"
-    bits += (
-        _ue_bits(0)      # log2_max_frame_num_minus4
-        + _ue_bits(2)    # pic_order_cnt_type
-        + _ue_bits(1)    # max_num_ref_frames
-        + "0"            # gaps flag
-        + _ue_bits(pw_mbs - 1) + _ue_bits(ph_units - 1)
-        + "1" + "1"      # frame_mbs_only, direct_8x8
-    )
-    has_crop = any(crop)
-    bits += "1" + "".join(_ue_bits(c) for c in crop) if has_crop else "0"
-    bits += "0"  # vui
-    bits += "1"
-    bits += "0" * (-len(bits) % 8)
-    rbsp = bytes(int(bits[i : i + 8], 2) for i in range(0, len(bits), 8))
-
-    want_w = 16 * pw_mbs - 2 * (cl + cr)   # 4:2:0 -> CropUnitX=2
-    want_h = 16 * ph_units - 2 * (ct + cb)  # frame_mbs_only -> CropUnitY=2
-    got = mm._parse_sps_dims(rbsp)
-    if want_w <= 0 or want_h <= 0:
-        assert got is None
-    else:
-        assert got == (want_w, want_h)
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    nals=st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=23),
-            st.binary(min_size=0, max_size=40),
-        ),
-        min_size=1,
-        max_size=12,
-    ),
-    four=st.booleans(),
-)
-def test_annexb_walk_roundtrip_property(nals, four):
-    """The Annex-B walk recovers every NAL's type and payload from a
-    hand-assembled stream with emulation-prevention escaping and either
-    start-code length — write side independent of the reader."""
-    from iot_database_spark.operators import multimodal as mm
-
-    def escape(rbsp: bytes) -> bytes:
-        out, zeros = bytearray(), 0
-        for byte in rbsp:
-            if zeros >= 2 and byte <= 3:
-                out.append(3)
-                zeros = 0
-            out.append(byte)
-            zeros = zeros + 1 if byte == 0 else 0
-        return bytes(out)
-
-    start = b"\x00\x00\x00\x01" if four else b"\x00\x00\x01"
-    blob = b"".join(
-        start + bytes([(3 << 5) | t]) + escape(body) for t, body in nals
-    )
-    walked = list(mm.annexb_iter_nals(blob))
-    assert [t for _, t, _ in walked] == [t for t, _ in nals]
-    # payload survives: header byte + escaped body, trailing zeros of
-    # the body may be absorbed by the next start code / stream tail
-    for (_, _, payload), (t, body) in zip(walked, nals):
-        esc = escape(body)
-        assert payload == bytes([(3 << 5) | t]) + esc or (
-            esc.endswith(b"\x00")
-            and payload == (bytes([(3 << 5) | t]) + esc).rstrip(b"\x00")
-        )
 
 
 # --- round-8 operator invariants ------------------------------------------

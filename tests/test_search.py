@@ -1,6 +1,5 @@
-"""Semantic tests for full-text / hybrid search (operators/search.py)
-and sequence packing (curation.pack_sequences): known-corpus BM25
-ranking, exact RRF arithmetic, and pack reassembly invariants.
+"""Semantic tests for sequence packing (curation.pack_sequences): pack
+reassembly invariants.
 
 The cross-engine value-hash checks for the registered queries live in
 test_oracle_parity.py; these tests pin the SEMANTICS on constructed
@@ -10,59 +9,8 @@ inputs where the right answer is known by hand.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from iot_database_spark.operators import curation as cu
-from iot_database_spark.operators import search as se
-
-
-@pytest.fixture(scope="module")
-def corpus(spark):
-    rows = [
-        (0, "rare common common common filler filler"),
-        (1, "common filler filler filler filler filler"),
-        (2, "common common filler filler filler filler"),
-        (3, "filler filler filler filler filler filler"),
-    ]
-    return spark.createDataFrame(rows, ["doc_id", "text"])
-
-
-def test_bm25_rare_term_outranks_common(corpus):
-    top = se.bm25_topk(corpus, ["rare", "common"], k=4).collect()
-    # doc 0 holds the only 'rare' occurrence -> highest idf mass
-    assert top[0]["doc_id"] == 0
-    assert top[0]["n_terms_matched"] == 2
-    # doc 3 matches nothing and must be absent entirely
-    assert all(r["doc_id"] != 3 for r in top)
-    assert len(top) == 3
-
-
-def test_bm25_tf_monotone_same_length(corpus):
-    scores = {
-        r["id"]: r["score_micro"]
-        for r in se.bm25_scores(corpus, ["common"]).collect()
-    }
-    # equal doc lengths -> more occurrences of the term, higher score
-    assert scores[0] > scores[2] > scores[1]
-
-
-def test_rrf_fusion_exact_values(spark):
-    a = spark.createDataFrame([(10, 1), (20, 2)], ["id", "r"])
-    b = spark.createDataFrame([(20, 1), (30, 2)], ["id", "r"])
-    got = {
-        r["id"]: (r["r_a"], r["r_b"], r["rrf_score"])
-        for r in se.rrf_fuse(a, b, on="id").collect()
-    }
-    assert got[20] == (2, 1, (1.0 / 62) + (1.0 / 61))  # in both lists
-    assert got[10] == (1, 1000, (1.0 / 61) + (1.0 / 1060))
-    assert got[30] == (1000, 2, (1.0 / 1060) + (1.0 / 62))
-
-
-def test_ranked_is_topk_with_dense_ranks(corpus):
-    bm = se.bm25_scores(corpus, ["common"])
-    r = se.ranked(bm, [F.col("score_micro").desc(), F.col("id")], k=2).collect()
-    assert [row["r"] for row in r] == [1, 2]
-    assert len(r) == 2
 
 
 @pytest.fixture(scope="module")

@@ -15,14 +15,12 @@ import pytest
 
 from iot_database_spark.operators import dedup_queries as dq
 from iot_database_spark.operators.curation_queries import corpus_quality_resample
-from iot_database_spark.operators.search_queries import search_phrase_topk
 
 
 def test_phrase_and_span_results_nonempty(spark, sf_dir):
-    """Guard against a vacuous gate: the graded phrase actually occurs
-    and the synthetic corpus actually contains cross-doc duplicate
-    spans, so the parity check compares real rows, not empty sets."""
-    assert search_phrase_topk(spark, sf_dir).count() > 0
+    """Guard against a vacuous gate: the synthetic corpus actually
+    contains cross-doc duplicate spans, so the parity check compares
+    real rows, not empty sets."""
     dup = dq.dedup_span_exact(spark, sf_dir).filter("n_dup_spans > 0")
     assert dup.count() > 0
 

@@ -37,6 +37,7 @@ PROBE_QUERIES = list(_registry_queries())[:50] + [
     "decontaminate_ngram_overlap",  # curation_queries
     "ann_lsh_cosine",  # curation: hyperplane LSH over embeddings
     "stream_exact_dedup",  # streaming dedup state store on vanilla session
+    "embedding_quantize_int8",  # quantize_queries
 ]
 
 _SCRIPT = r"""
