@@ -56,18 +56,11 @@ HEADLINE = [
     "dedup_exact",
     "dedup_minhash_lsh",
     "dedup_ngram_jaccard",
-    "text_quality_scores",
-    "text_fingerprint",
-    "pipeline_clean_corpus",
-    "pipeline_prepare_training_data",
     "nl_find_dual_join",
     "event_sessionization",
     "skew_salted_agg",
     # round 2 additions
     "dedup_cluster_assign",
-    "text_gopher_rules",
-    "text_scrub_pii",
-    "text_chunk_windows",
     "remote_serialized_find",
     "stream_windowed_rollup",
     # round 3 additions
@@ -99,7 +92,6 @@ HEADLINE = [
     # at scale has no place in the headline total. The scale-correct
     # fractional-df default `dedup_ngram_jaccard` and the capped
     # variant remain measured above.)
-    "text_bpe_token_count_fixed",
     "stream_rollup_to_table",
     "zorder_key_events",
     "cagg_incremental_refresh",
@@ -111,13 +103,11 @@ HEADLINE = [
     "ts_ewma_smooth",
     "ts_anomaly_mad",
     "ts_threshold_alerts",
-    "text_strip_html",
     "approx_sketch_accuracy",
     "text_trigram_coverage",
     "stream_threshold_alerts",
     # round 8 additions
     "stream_sessionization",
-    "text_trigram_lm_score",
     "text_repetition_trim",
     "corpus_zipf_stats",
     "dedup_url_canonical",
@@ -129,7 +119,6 @@ HEADLINE = [
     "event_transition_matrix",
     "pipeline_web_ingest",
     "ts_seasonal_baseline",
-    "corpus_ccnet_buckets",
     # round 9 additions
     "continuous_slot14_digest",
     "vector_filtered_topk",

@@ -13,7 +13,7 @@ id tie-break.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iot_database_spark.operators import curation as cu
@@ -296,6 +296,17 @@ _QC_ORACLE = """
 """
 
 
+# Minimal English stopword profile read by the quality classifier.
+EN_STOPWORDS: tuple[str, ...] = ("the", "a", "of", "and", "to", "in", "is")
+
+
+def stopword_ratio(text: Column) -> Column:
+    words = F.split(text, " ")
+    sw = F.array(*[F.lit(w) for w in EN_STOPWORDS])
+    hits = F.size(F.filter(words, lambda w: F.array_contains(sw, F.lower(w))))
+    return hits / F.greatest(F.size(words), F.lit(1)).cast("double")
+
+
 @register("text_quality_classifier", oracle=_QC_ORACLE)
 def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-based quality scoring: a linear classifier over curation
@@ -307,8 +318,6 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines add in the same sequence. Deliberately no sigmoid:
     exp() is not guaranteed bit-identical across libm implementations,
     and a monotone transform changes neither ranking nor buckets."""
-    from iot_database_spark.operators import textstats as tx
-
     docs = _docs(spark, sf_dir)
     toks = F.split(F.col("text"), " ")
     nw = F.greatest(F.size(toks), F.lit(1)).cast("double")
@@ -316,7 +325,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(toks).cast("double").alias("n_tokens"),
         (F.size(F.array_distinct(toks)) / nw).alias("uniq"),
-        tx.stopword_ratio(F.col("text")).alias("stop_r"),
+        stopword_ratio(F.col("text")).alias("stop_r"),
     )
     score = (
         (F.lit(-2.0) + F.lit(0.01) * F.least(F.col("n_tokens"), F.lit(400.0)))

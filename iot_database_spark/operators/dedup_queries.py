@@ -1334,11 +1334,10 @@ def substring_suffix_profile(
             "k", (F.col("n") > max_bucket).alias("wide")
         )
     )
-    # broadcast it under a counted gate (the lm._broadcast_model
-    # pattern) so the rebuilt suffix stream joins map-side with NO
-    # shuffle of the exploded rows — above the gate the join falls back
-    # to a plain shuffle join on k. count() over the pinned set is a
-    # local scan, not a recompute.
+    # broadcast it under a counted gate so the rebuilt suffix stream
+    # joins map-side with NO shuffle of the exploded rows — above the
+    # gate the join falls back to a plain shuffle join on k. count()
+    # over the pinned set is a local scan, not a recompute.
     n_dup_keys = dup_keys.count()
     dk = F.broadcast(dup_keys) if n_dup_keys <= SUFFIX_BROADCAST_KEYS else dup_keys
     keyed_dup = (

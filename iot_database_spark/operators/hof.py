@@ -15,7 +15,7 @@ evaluates `x` exactly once per row and every `v` reference reads the
 bound value. For a barrier that survives *downstream* multi-reference
 (filter + several field projections), explode a 1-element array of a
 struct instead — Generate is a node CollapseProject cannot cross; see
-`textstats.fingerprint`.
+`dedup.lsh_candidate_pairs`.
 """
 
 from __future__ import annotations

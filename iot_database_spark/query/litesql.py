@@ -317,12 +317,13 @@ def lite_sql(
         piped = out
         if "id" not in piped.columns:
             # INTO targets get an auto-id (the engine's :autoid sequence;
-            # unique-not-dense). Offset past the target's current max id:
+            # unique-not-dense). Offset past the target's sequence:
             # monotonically_increasing_id restarts at 0 per query, so a
-            # bare value would collide on append re-runs.
+            # bare value would collide on append re-runs, and the max id
+            # would hand a deleted max row's id out again.
             base = 0
             if target in db.list_tables():
-                base = db.table(target).max("id") or 0
+                base = db.table(target)._seq_base()
             piped = piped.withColumn(
                 "id", F.monotonically_increasing_id() + F.lit(int(base) + 1)
             )

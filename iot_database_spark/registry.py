@@ -51,9 +51,9 @@ def register(
 # round's ordering from the recorded CORRECTNESS_r*.json artifacts
 # (reds first, then never-graded, then oldest-green-first).
 #
-# The tuple below is the planner's output verbatim. With 147
+# The tuple below is the planner's output verbatim. With 133
 # registered queries, a 50-slot window and the 3-round evidence-age
-# limit, the rotation has 3 slots of slack: up to 3 new registrations
+# limit, the rotation has 17 slots of slack: up to 17 new registrations
 # (or same-round re-grades after a semantics change) fit before one
 # needs a slot freed by RETIRING a query — the policy is mechanical:
 # scripts/plan_rotation.py (r11 verdict task #6).
@@ -86,12 +86,6 @@ _PRIORITY: tuple[str, ...] = (
     "dedup_repeated_ngrams",  # r12 green
     "dedup_ngram_containment",  # r12 green
     "corpus_ngram_novelty",  # r12 green
-    "text_chunk_windows",  # r12 green
-    "corpus_train_val_test_split",  # r12 green
-    "text_strip_html",  # r12 green
-    "text_bpe_token_count_fixed",  # r12 green
-    "text_trigram_lm_score",  # r12 green
-    "corpus_ccnet_buckets",  # r12 green
     "corpus_mixture_sample",  # r12 green
     "heavy_hitter_ngrams",  # r12 green
     "ann_lsh_cosine",  # r12 green
@@ -108,6 +102,12 @@ _PRIORITY: tuple[str, ...] = (
     "txn_atomicity_digest",  # r12 green
     "fk_cascade_digest",  # r12 green
     "continuous_slot14_digest",  # r12 green
+    "filter_like",  # r13 green
+    "filter_between_not",  # r13 green
+    "sort_limit_offset",  # r13 green
+    "take_last",  # r13 green
+    "multi_key_sort",  # r13 green
+    "q01_pricing_summary",  # r13 green
 )
 
 
@@ -150,7 +150,6 @@ def _ensure_loaded() -> None:
         "iot_database_spark.operators.blockchain_queries",
         "iot_database_spark.operators.vector_queries",
         "iot_database_spark.operators.dedup_queries",
-        "iot_database_spark.operators.textstats_queries",
         "iot_database_spark.operators.curation_queries",
         "iot_database_spark.operators.quantize_queries",
         "iot_database_spark.operators.nl_queries",

@@ -41,7 +41,7 @@ def get_spark(app_name: str = "iot_database_spark", master: str | None = None) -
       cluster this should be ~2-3x total cores (or left to AQE's
       coalescing with a high initial value).
     - Arrow enabled for the Pandas-UDF paths (chain fold, stateful
-      streaming, text stats, BPE).
+      streaming).
     - UTC session timezone: the reference stores ISO-8601/UTC timestamps
       (Iot.Database/IotValue.cs ToStringValue), and oracle comparisons
       must not depend on host timezone.
@@ -75,13 +75,8 @@ def get_spark(app_name: str = "iot_database_spark", master: str | None = None) -
         # generated-class cache defaults to 100 entries, but a long-lived
         # session running a 100+-query workload compiles several hundred
         # distinct codegen stages — at the default the cache thrashes and
-        # hot queries re-Janino-compile on every run (measured: the r13
-        # full-roster bench inflated text_bpe_token_count_fixed 1.6x vs its
-        # solo floor, while any ~50-query subset ran at the floor).
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"),
-        )
+        # hot queries re-Janino-compile on every run.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     if master or not _active_session():
         builder = builder.master(master or f"local[{cpus}]")
@@ -187,10 +182,7 @@ def source_bytes(
 ) -> int | None:
     """Total on-disk bytes of `df`'s file-backed source, or None when
     the frame is fileless (in-memory) or backed by a store this process
-    can't stat locally (hdfs:/s3a:/...). ONE copy of the file-URI stat
-    loop, shared by the spread router below and the LM scoring-join
-    broadcast gate (operators/lm._broadcast_model) so scheme handling
-    can't drift between them (r11 advice). A caller that already fetched
+    can't stat locally (hdfs:/s3a:/...). A caller that already fetched
     df.inputFiles() passes it as `files` so the decision costs one JVM
     round-trip, not two (r12 advice)."""
     if files is None:

@@ -94,12 +94,9 @@ def evidence(rounds: dict[int, dict]) -> dict[str, tuple[int, bool]]:
 EVIDENCE_AGE_LIMIT = 3
 SLOTS = 50
 RETIREMENT_CANDIDATES: tuple[str, ...] = (
-    # CONSUMED r13: text_ngram_lm_score (bigram variant of
-    # lm.ngram_lm_score) retired to seat dedup_substring_suffix —
-    # text_trigram_lm_score keeps the identical plan (same
-    # counts/partials/backoff code, n=3, the CCNet/KenLM-standard
-    # order) under driver evidence; bit-exact local gate in
-    # test_retired_query_parity.
+    # CONSUMED r13: text_ngram_lm_score (the bigram LM variant) retired
+    # to seat dedup_substring_suffix; the n-gram LM module has since
+    # been deleted with the rest of the text-stats queries.
     #
     # explicit-cap variant of dedup.jaccard_pairs — the headline
     # dedup_ngram_jaccard (fractional guard) and dedup_ngram_containment

@@ -219,25 +219,6 @@ def test_web_ingest_pipeline_shape_and_accounting(spark, smoke_dir):
     assert sum(r["n_docs"] for r in rows) < n_docs_total
 
 
-def test_ccnet_buckets_shape(spark, smoke_dir):
-    """head/middle/tail per language: bucket sizes differ by at most 1
-    from the tertile split, head scores >= middle >= tail, and every
-    scored doc lands in exactly one bucket."""
-    rows = _Q["corpus_ccnet_buckets"](spark, smoke_dir).collect()
-    by_lang = {}
-    for r in rows:
-        by_lang.setdefault(r["lang"], {})[r["bucket"]] = r
-    for lang, b in by_lang.items():
-        assert set(b) == {"head", "middle", "tail"}
-        n = sum(r["n_docs"] for r in b.values())
-        assert max(r["n_docs"] for r in b.values()) - min(
-            r["n_docs"] for r in b.values()
-        ) <= 1, (lang, n)
-        # score ordering across buckets (head = most fluent = highest)
-        assert b["head"]["min_score_milli"] >= b["middle"]["max_score_milli"]
-        assert b["middle"]["min_score_milli"] >= b["tail"]["max_score_milli"]
-
-
 def test_canonicalize_url_schemeless_passthrough(spark):
     """Scheme-less / non-hierarchical values must NOT collapse to one
     key (r8 review finding: '://' swallowed every such row — an

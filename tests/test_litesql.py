@@ -126,17 +126,24 @@ def test_execute_full_command_surface(spark, tmp_path):
 def test_select_into_append_ids_stay_unique(spark, tmp_path):
     """Auto-ids must not collide across INTO append re-runs
     (monotonically_increasing_id restarts per query — the sink offsets
-    past the target's max id)."""
+    past the target's sequence), and, like every other insert path,
+    never hand out the id of a deleted row again."""
     from iot_database_spark.database import IotDatabase
 
     db = IotDatabase("intodb2", str(tmp_path), spark)
+    # one partition keeps the auto-ids dense, so a reused id is visible
     spark.createDataFrame(
         [(1, "x"), (2, "y")], "id bigint, name string"
-    ).createOrReplaceTempView("src_ids")
+    ).coalesce(1).createOrReplaceTempView("src_ids")
     lite_sql(spark, "SELECT $.name INTO sink FROM src_ids", db=db)
     lite_sql(spark, "SELECT $.name INTO sink FROM src_ids", db=db)
-    ids = [r["id"] for r in db.table("sink").df.collect()]
-    assert len(ids) == 4 and len(set(ids)) == 4
+    ids = sorted(r["id"] for r in db.table("sink").df.collect())
+    assert ids == [1, 2, 3, 4]
+    # delete the max-id row: the next INTO must not reuse its id
+    assert db.table("sink").delete("id = 4") == 1
+    lite_sql(spark, "SELECT $.name INTO sink FROM src_ids", db=db)
+    ids = sorted(r["id"] for r in db.table("sink").df.collect())
+    assert ids == [1, 2, 3, 5, 6]
 
 
 def test_into_inside_string_literal_not_split(spark):

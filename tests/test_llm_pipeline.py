@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from iot_database_spark.operators import dedup as dd
 from iot_database_spark.operators import similarity as sim
-from iot_database_spark.operators import textstats as tx
 from iot_database_spark.operators import vector as vec
 
 
@@ -152,29 +151,6 @@ def test_jaccard_fractional_df_guard(spark):
     assert dflt == {(1, 2)}
 
 
-def test_langid_and_quality(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "the cat is one of the best animals in the world"),
-            (2, "el gato es uno de los mejores animales que hay en un mundo"),
-            (3, "zzz qqq www"),
-        ],
-        ["doc_id", "text"],
-    )
-    langs = {
-        r["doc_id"]: r["lang"]
-        for r in df.select(
-            "doc_id", tx.detect_language(F.col("text")).alias("lang")
-        ).collect()
-    }
-    assert langs[1] == "en" and langs[2] == "es" and langs[3] == "unknown"
-
-    q = tx.quality_scores(df).filter("doc_id = 1").collect()[0]
-    assert q["n_tokens"] == 11
-    assert q["stopword_ratio_en"] > 0.3
-    assert 0 < q["uniqueness"] <= 1.0
-
-
 def test_ivf_recall_vs_brute_force(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         F.col("vec_id").cast("bigint").alias("vec_id"), "embedding"
@@ -283,76 +259,6 @@ def test_connected_components_empty_pairs(spark):
     nodes = spark.createDataFrame([(1,), (2,)], "id bigint")
     rows = {r["id"]: r["cluster_id"] for r in dd.connected_components(pairs, nodes).collect()}
     assert rows == {1: 1, 2: 2}
-
-
-def test_gopher_rules_signals(spark):
-    """Bullet lines, duplicate lines, symbol ratio, and the pass flag."""
-    good = " ".join(
-        ["the quick brown fox jumps over a lazy dog and runs to town"] * 5
-    )  # 60 words, stopwords present, all alpha
-    bullets = "\n".join(f"- item {i}" for i in range(10))
-    dup_lines = "\n".join(["same line here"] * 10)
-    symbols = " ".join(["word ###"] * 30)
-    df = spark.createDataFrame(
-        [(1, good), (2, bullets), (3, dup_lines), (4, symbols)],
-        ["doc_id", "text"],
-    )
-    out = {r["doc_id"]: r for r in tx.gopher_rules(df).collect()}
-    assert out[1]["pass_gopher"]
-    assert out[1]["alpha_word_frac"] == 1.0 and out[1]["stop_hits"] >= 2
-    assert out[2]["bullet_line_frac"] == 1.0 and not out[2]["pass_gopher"]
-    assert out[3]["dup_line_frac"] == 0.9 and not out[3]["pass_gopher"]
-    assert out[4]["symbol_word_ratio"] >= 1.0 and not out[4]["pass_gopher"]
-
-
-def test_scrub_pii_redacts_and_counts(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "contact bob at bob.smith+x@mail.example.org or 12-345-678-9012"),
-            (2, "server 192.168.0.1 and 10.0.0.2 are fine; version 1.2 is not an ip"),
-            (3, "nothing sensitive here"),
-        ],
-        ["doc_id", "text"],
-    )
-    out = {r["doc_id"]: r for r in tx.scrub_pii(df).collect()}
-    assert out[1]["n_email"] == 1 and out[1]["n_phone"] == 1
-    assert out[1]["scrubbed"] == "contact bob at [EMAIL] or [PHONE]"
-    assert out[2]["n_ipv4"] == 2
-    assert out[2]["scrubbed"] == "server [IP] and [IP] are fine; version 1.2 is not an ip"
-    assert out[3]["scrubbed"] == "nothing sensitive here"
-    assert (out[3]["n_email"], out[3]["n_phone"], out[3]["n_ipv4"]) == (0, 0, 0)
-
-
-def test_chunk_documents_covers_all_tokens_with_overlap(spark):
-    words = [f"w{i}" for i in range(150)]
-    df = spark.createDataFrame([(1, " ".join(words)), (2, "short doc only")],
-                               ["doc_id", "text"])
-    chunks = tx.chunk_documents(df, chunk_tokens=64, overlap=8).collect()
-    by_doc = {}
-    for r in chunks:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    # doc 1: starts at 0,56,112 -> 3 chunks; every token appears; overlap = 8
-    c1 = sorted(by_doc[1], key=lambda r: r["chunk_idx"])
-    assert [r["n_chunk_tokens"] for r in c1] == [64, 64, 38]
-    seen = [w for r in c1 for w in r["chunk_text"].split(" ")]
-    assert set(seen) == set(words)
-    first, second = c1[0]["chunk_text"].split(" "), c1[1]["chunk_text"].split(" ")
-    assert first[-8:] == second[:8]  # overlap preserved verbatim
-    # short doc -> single chunk, all tokens
-    assert len(by_doc[2]) == 1 and by_doc[2][0]["chunk_text"] == "short doc only"
-
-
-def test_corpus_split_stable_and_proportional(spark):
-    df = spark.createDataFrame([(i,) for i in range(2000)], ["doc_id"])
-    out = {r["doc_id"]: r["split"] for r in tx.corpus_split(df, id_col="doc_id").collect()}
-    frac_train = sum(1 for v in out.values() if v == "train") / 2000
-    assert 0.93 < frac_train < 0.99
-    assert set(out.values()) == {"train", "val", "test"}
-    # stability: a subset gets identical assignments (no dependence on corpus)
-    sub = {r["doc_id"]: r["split"] for r in tx.corpus_split(
-        spark.createDataFrame([(i,) for i in range(0, 2000, 7)], ["doc_id"]),
-        id_col="doc_id").collect()}
-    assert all(out[k] == v for k, v in sub.items())
 
 
 def test_repeated_ngrams_finds_shared_passages(corpus):
@@ -540,28 +446,6 @@ def test_range_join_drops_inverted_and_empty_intervals(spark):
     assert got == [(1, 9)]
 
 
-def test_strip_html_tags_entities_whitespace(spark):
-    html = (
-        '<html><head><style type="text/css">p { color: red; }</style>'
-        "<script>if (a<b) { alert(1); }</script></head>"
-        "<body>\n  <h1>Title</h1>\n  <p>Tom &amp; Jerry say "
-        "&quot;hi&quot;   &lt;now&gt;</p>\n</body></html>"
-    )
-    df = spark.createDataFrame([(1, html)], "id long, html string")
-    got = df.select(tx.strip_html(F.col("html")).alias("c")).collect()[0].c
-    # style/script contents are gone entirely; tags become spaces;
-    # entities decode; runs of whitespace collapse to one space
-    assert got == 'Title Tom & Jerry say "hi" <now>'
-    # single-pass by design: decoding &lt;now&gt; yields a literal <now>
-    # that a SECOND pass would strip as a tag — the standard reason
-    # sanitizers never re-run entity decode over their own output
-    df2 = spark.createDataFrame([(1, "plain text,   no markup")], "id long, t string")
-    assert (
-        df2.select(tx.strip_html(F.col("t")).alias("c")).collect()[0].c
-        == "plain text, no markup"
-    )
-
-
 def test_trigram_coverage_separates_garbage(spark, sf_dir):
     """A doc made of characters the corpus never uses must score far
     below in-domain docs (the perplexity-filter contract)."""
@@ -587,157 +471,6 @@ def test_trigram_coverage_separates_garbage(spark, sf_dir):
     # the oracle-gated query runs end-to-end on the parquet corpus
     out = text_trigram_coverage(spark, sf_dir).collect()
     assert all(0.0 <= r.coverage <= 1.0 for r in out)
-
-
-def test_bpe_tokenizer_end_to_end(spark, sf_dir):
-    """REAL BPE: distributed word counts feed the driver-side
-    vocabulary-sized merge loop (deterministic tie-breaks), and encoding
-    runs once per DISTINCT word then broadcast-joins back — so Python
-    work is O(vocab), not O(corpus). Checks: classic merge behavior,
-    lossless reconstruction over the parquet corpus, count/tokenize
-    agreement, determinism, and the broadcast plan shape."""
-    from iot_database_spark.operators import bpe
-
-    # classic corpus (Sennrich et al. example shape): 'est' emerges
-    merges = bpe.train_bpe(
-        [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3)],
-        num_merges=10,
-    )
-    ranks = {p: i for i, p in enumerate(merges)}
-    assert bpe.encode_word("lowest", ranks) == ["low", "est"]
-    assert bpe.encode_word("xyz", ranks) == ["x", "y", "z"]  # OOV chars
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(60)
-    wc = bpe.word_counts(docs, "text")
-    m1 = bpe.train_bpe(wc, num_merges=50)
-    m2 = bpe.train_bpe(wc, num_merges=50)
-    assert m1 == m2 and len(m1) == 50  # deterministic training
-
-    toks = bpe.bpe_tokenize(docs, m1, "text", "doc_id")
-    counts = bpe.bpe_token_count(docs, m1, "text", "doc_id")
-    got_t = {r["doc_id"]: r["tokens"] for r in toks.collect()}
-    got_c = {r["doc_id"]: r["bpe_tokens"] for r in counts.collect()}
-    assert set(got_t) == set(got_c)
-    rows = {r["doc_id"]: r["text"] for r in docs.collect()}
-    import re
-
-    for did, tokens in got_t.items():
-        # lossless: concatenated subwords == concatenated words
-        words = [w for w in re.split(r"\s+", rows[did].lower()) if w]
-        assert "".join(tokens) == "".join(words)
-        assert got_c[did] == len(tokens)
-        # merges actually compress below character-level
-        assert len(tokens) < sum(len(w) for w in words)
-
-    plan = toks._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan  # distinct-word encode joins back
-
-    # wordless docs (empty/NULL/whitespace-only) stay in the output with
-    # an empty token list / zero count instead of silently vanishing
-    edge = spark.createDataFrame(
-        [(1, "hello hello"), (2, ""), (3, None), (4, "   ")],
-        "doc_id bigint, text string",
-    )
-    et = {r["doc_id"]: r["tokens"] for r in
-          bpe.bpe_tokenize(edge, m1, "text", "doc_id").collect()}
-    ec = {r["doc_id"]: r["bpe_tokens"] for r in
-          bpe.bpe_token_count(edge, m1, "text", "doc_id").collect()}
-    assert set(et) == set(ec) == {1, 2, 3, 4}
-    assert "".join(et[1]) == "hellohello" and ec[1] == len(et[1]) > 0
-    for did in (2, 3, 4):
-        assert et[did] == [] and ec[did] == 0
-
-
-def test_bpe_vocab_cache_survives_interleaved_consumer(spark, sf_dir):
-    """r12 bench artifact: the single-slot vocab cache made a query's
-    steady-state time depend on CALL ORDER — any other vocab consumer
-    between a query's warm-up and timed pass evicted its cached
-    distinct-vocab frame. The cache is now a small LRU: an interleaved
-    DIFFERENT vocab must not evict the warm entry, the same plan must
-    reuse its handle (identity-preserved), and capacity still bounds
-    the number of persisted frames."""
-    from iot_database_spark.operators import bpe
-
-    bpe.release_vocab_cache()
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    docs_a, docs_b, docs_c = docs.limit(40), docs.limit(20), docs.limit(10)
-    merges = [("e", "r")]
-
-    bpe.bpe_token_count(docs_a, merges, "text", "doc_id").collect()
-    with bpe._LAST_PERSISTED_LOCK:
-        assert len(bpe._LAST_PERSISTED) == 1
-        a_handle = bpe._LAST_PERSISTED[-1]
-
-    # an interleaved consumer with a different vocab must NOT evict A
-    bpe.bpe_token_count(docs_b, merges, "text", "doc_id").collect()
-    with bpe._LAST_PERSISTED_LOCK:
-        assert any(h is a_handle for h in bpe._LAST_PERSISTED)
-        b_handle = bpe._LAST_PERSISTED[-1]
-        assert b_handle is not a_handle
-
-    # A again: cache hit — the SAME handle, bumped to newest slot
-    bpe.bpe_token_count(docs_a, merges, "text", "doc_id").collect()
-    with bpe._LAST_PERSISTED_LOCK:
-        assert bpe._LAST_PERSISTED[-1] is a_handle
-        assert len(bpe._LAST_PERSISTED) == bpe._VOCAB_CACHE_SLOTS == 2
-
-    # a third distinct vocab evicts the least-recently-used (B, since
-    # A was just bumped), keeping the frame count bounded
-    bpe.bpe_token_count(docs_c, merges, "text", "doc_id").collect()
-    with bpe._LAST_PERSISTED_LOCK:
-        assert len(bpe._LAST_PERSISTED) == 2
-        assert any(h is a_handle for h in bpe._LAST_PERSISTED)
-        assert all(h is not b_handle for h in bpe._LAST_PERSISTED)
-    bpe.release_vocab_cache()
-
-
-def test_bpe_fixed_merges_provenance_and_seq_equivalence(spark):
-    """The pinned merge list behind text_bpe_token_count_fixed must be
-    exactly what train_bpe produces on the sf0.001 corpus (determinism
-    makes the literal re-derivable, so it can never drift silently),
-    and the DuckDB oracle's encoding strategy — apply merges in
-    training order, each exhaustively left-to-right — must equal the
-    min-rank-first greedy loop in encode_word (see _bpe_fixed_oracle's
-    docstring for why that holds structurally)."""
-    import random
-
-    from iot_database_spark.operators import bpe
-    from iot_database_spark.operators.textstats_queries import (
-        _BPE_FIXED_MERGES,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    retrained = bpe.train_bpe(bpe.word_counts(docs, "text"), num_merges=48)
-    assert retrained == _BPE_FIXED_MERGES
-
-    def seq_apply(word: str, merges) -> list[str]:
-        syms = list(word)
-        for a, b in merges:
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        return syms
-
-    ranks = {p: i for i, p in enumerate(_BPE_FIXED_MERGES)}
-    rng = random.Random(7)
-    alphabet = "abcdet h"  # biased toward merge-participating symbols
-    fuzz = [
-        "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 20)))
-        for _ in range(3000)
-    ]
-    corpus_words = [
-        w
-        for row in docs.select("text").collect()
-        for w in (row["text"] or "").lower().split()
-    ]
-    for w in set(corpus_words) | set(w.replace(" ", "") for w in fuzz if w.strip()):
-        assert bpe.encode_word(w, ranks) == seq_apply(w, _BPE_FIXED_MERGES), w
 
 
 def test_framestore_golden_and_roundtrip():
@@ -856,163 +589,3 @@ def test_framestore_decode_is_lazy_generator():
         next(gen)
 
 
-def test_ngram_lm_score_hand_computed(spark):
-    """Pin the LM semantics (not just cross-engine agreement): add-one
-    smoothed bigram log-probs on a corpus small enough to verify by
-    hand, floor-scaled per bigram BEFORE the per-doc integer sum."""
-    import math
-
-    from iot_database_spark.operators import lm
-
-    docs = spark.createDataFrame(
-        [(1, "a b a"), (2, "a b"), (3, "solo")], "doc_id bigint, text string"
-    )
-    got = {
-        r.doc_id: (r.n_ngrams, r.lm_logprob_micro)
-        for r in lm.ngram_lm_score(docs).collect()
-    }
-    # unigrams: a:3 b:2 solo:1 -> V=3; bigrams: (a,b):2 (b,a):1
-    lp_ab = math.floor(math.log((2 + 1.0) / (3 + 3.0)) * 1e6)
-    lp_ba = math.floor(math.log((1 + 1.0) / (2 + 3.0)) * 1e6)
-    assert got == {
-        1: (2, lp_ab + lp_ba),  # "a b a" -> (a,b), (b,a)
-        2: (1, lp_ab),
-    }  # doc 3 has one token -> no bigrams -> not scored
-
-
-def test_ngram_lm_score_external_train_oov(spark):
-    """With an external reference LM, OOV bigrams must score via the
-    smoothed fallback (ln(1/(c1+V)) for known context, ln(1/V) for
-    unknown) instead of being dropped by the join — no document
-    disappears and n_ngrams counts every gram."""
-    import math
-
-    from iot_database_spark.operators import lm
-
-    train = spark.createDataFrame(
-        [(1, "a b a")], "doc_id bigint, text string"
-    )  # unigrams a:2 b:1 -> V=2; bigrams (a,b):1 (b,a):1
-    score = spark.createDataFrame(
-        [(10, "a b"), (11, "a z"), (12, "q r")],
-        "doc_id bigint, text string",
-    )
-    got = {
-        r.doc_id: (r.n_ngrams, r.lm_logprob_micro)
-        for r in lm.ngram_lm_score(score, train_df=train).collect()
-    }
-    lp_ab = math.floor(math.log((1 + 1.0) / (2 + 2.0)) * 1e6)
-    lp_az = math.floor(math.log(1.0 / (2 + 2.0)) * 1e6)  # known ctx 'a'
-    lp_qr = math.floor(math.log(1.0 / (0 + 2.0)) * 1e6)  # unknown ctx
-    assert got == {10: (1, lp_ab), 11: (1, lp_az), 12: (1, lp_qr)}
-
-
-def test_ngram_lm_score_trigram_hand_computed(spark):
-    """Order-3 LM on a corpus small enough to verify by hand: context
-    counts are 2-gram occurrences, V stays the unigram vocab, and the
-    same add-one arithmetic applies per trigram."""
-    import math
-
-    from iot_database_spark.operators import lm
-
-    docs = spark.createDataFrame(
-        [(1, "a b c a b c")], "doc_id bigint, text string"
-    )
-    rows = lm.ngram_lm_score(docs, n=3).collect()
-    assert len(rows) == 1
-    # contexts: (a,b)x2 (b,c)x2 (c,a)x1; trigrams: abc x2, bca, cab; V=3
-    lp_abc = math.floor(math.log((2 + 1.0) / (2 + 3.0)) * 1e6)
-    lp_bca = math.floor(math.log((1 + 1.0) / (2 + 3.0)) * 1e6)
-    lp_cab = math.floor(math.log((1 + 1.0) / (1 + 3.0)) * 1e6)
-    assert rows[0].n_ngrams == 4
-    assert rows[0].lm_logprob_micro == 2 * lp_abc + lp_bca + lp_cab
-
-    # an order the document can't fill scores nothing
-    assert lm.ngram_lm_score(
-        spark.createDataFrame([(9, "a b")], "doc_id bigint, text string"),
-        n=3,
-    ).count() == 0
-
-
-def test_ngram_lm_array_contexts_no_separator_collision(spark):
-    """Contexts are ARRAYS, not joined strings: tokens split only on a
-    space may contain any other byte, so ('a\\x1fb','c') and
-    ('a','b\\x1fc') are different contexts and must not merge counts
-    at order 3."""
-    import math
-
-    from iot_database_spark.operators import lm
-
-    docs = spark.createDataFrame(
-        [(1, "a\x1fb c x"), (2, "a b\x1fc x")],
-        "doc_id bigint, text string",
-    )
-    got = {
-        r.doc_id: r.lm_logprob_micro
-        for r in lm.ngram_lm_score(docs, n=3).collect()
-    }
-    # each trigram's context occurs ONCE; V = 5 distinct unigrams.
-    # A string-joined context would have merged both to c1=2.
-    lp = math.floor(math.log((1 + 1.0) / (1 + 5.0)) * 1e6)
-    assert got == {1: lp, 2: lp}
-
-
-def test_lm_broadcast_gate_routing(spark, monkeypatch, sf_dir):
-    """The scoring-join strategy gate (r11): env pin wins, then the
-    corpus-bytes stat; in-memory frames (no inputFiles) never
-    broadcast; and under the gate the executed plan actually contains
-    a broadcast join while output is identical either way."""
-    from iot_database_spark.operators import lm
-    from iot_database_spark.registry import load_views
-    from pyspark.sql import functions as F
-
-    docs = spark.createDataFrame([(1, "a b a")], "doc_id bigint, text string")
-    # in-memory frame: no files to stat -> sort-merge default
-    monkeypatch.delenv("SPARK_GRAFT_LM_BROADCAST", raising=False)
-    assert lm._broadcast_model(docs) is False
-    # env pin overrides in both directions
-    monkeypatch.setenv("SPARK_GRAFT_LM_BROADCAST", "1")
-    assert lm._broadcast_model(docs) is True
-    monkeypatch.setenv("SPARK_GRAFT_LM_BROADCAST", "0")
-    assert lm._broadcast_model(docs) is False
-    # r11 advice: falsy spellings beyond "0" must NOT force broadcast on
-    for spelling in ("False", "no", "off", " OFF "):
-        monkeypatch.setenv("SPARK_GRAFT_LM_BROADCAST", spelling)
-        assert lm._broadcast_model(docs) is False, spelling
-    for spelling in ("True", "YES", " on "):
-        monkeypatch.setenv("SPARK_GRAFT_LM_BROADCAST", spelling)
-        assert lm._broadcast_model(docs) is True, spelling
-    # unrecognized spelling falls back to the measured gate (in-memory
-    # frame -> no stat -> no broadcast), not to either forced strategy
-    monkeypatch.setenv("SPARK_GRAFT_LM_BROADCAST", "maybe")
-    assert lm._broadcast_model(docs) is False
-    monkeypatch.delenv("SPARK_GRAFT_LM_BROADCAST", raising=False)
-
-    # a statted parquet corpus under the 4 GiB gate broadcasts
-    tbl = load_views(spark, sf_dir)["documents"].select(
-        F.col("doc_id").cast("bigint").alias("doc_id"), "text"
-    )
-    assert lm._broadcast_model(tbl) is True
-    # min_count factors into the gate (r11 advice): at the min_count=1
-    # default the model is UNPRUNED (near-corpus-scale), so the byte
-    # threshold drops from 4 GiB to 128 MiB — a corpus between the two
-    # gates broadcasts only when pruned
-    saved = lm._BROADCAST_MODEL_MAX_SOURCE_BYTES_UNPRUNED
-    try:
-        lm._BROADCAST_MODEL_MAX_SOURCE_BYTES_UNPRUNED = 0
-        assert lm._broadcast_model(tbl, min_count=2) is True
-        assert lm._broadcast_model(tbl, min_count=1) is False
-        assert lm._broadcast_model(tbl) is False  # default = unpruned
-    finally:
-        lm._BROADCAST_MODEL_MAX_SOURCE_BYTES_UNPRUNED = saved
-    plan = lm.ngram_lm_score(tbl, min_count=2)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-    # identical output under both strategies (join strategy, not
-    # semantics): compare the two full result sets
-    monkeypatch.setenv("SPARK_GRAFT_LM_BROADCAST", "0")
-    smj = {(r.doc_id, r.n_ngrams, r.lm_logprob_micro)
-           for r in lm.ngram_lm_score(tbl, min_count=2).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_LM_BROADCAST", "1")
-    bc = {(r.doc_id, r.n_ngrams, r.lm_logprob_micro)
-          for r in lm.ngram_lm_score(tbl, min_count=2).collect()}
-    assert smj == bc and len(smj) > 0

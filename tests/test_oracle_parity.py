@@ -236,7 +236,6 @@ _SF1_SUBSET = (
     "skew_salted_agg",
     "ts_asof_join",
     "vector_cosine_topk",
-    "text_token_count",
     "unit_convert_bulk",
     "string_format_regex",
     # round-5 additions with per-series window or broadcast-model shapes
@@ -245,13 +244,10 @@ _SF1_SUBSET = (
     "ts_threshold_alerts",
     "text_trigram_coverage",
     "approx_sketch_accuracy",
-    # round-8 additions: session-window streaming + LM scoring
-    # (text_ngram_lm_score retired r13; its slot here goes to the
-    # trigram twin that keeps the same plan under driver evidence)
+    # round-8 addition: session-window streaming
     "stream_sessionization",
-    "text_trigram_lm_score",
-    # round-9 additions: pruned-LM path, batched vector search, shingle
-    # novelty, session paths
+    # round-9 additions: batched vector search, shingle novelty,
+    # session paths
     "vector_multi_query_topk",
     "corpus_ngram_novelty",
     "event_path_topk",
@@ -278,16 +274,11 @@ def test_retired_query_parity(spark, sf_dir):
     """Queries retired from the driver registry keep their bit-exact
     local gate (COVERAGE.md 'Driver-evidence policy'):
     dedup_ngram_jaccard_absolute — the known-quadratic fixed-cap compat
-    variant, retired r9 — and text_ngram_lm_score — the bigram LM
-    variant retired r13 to free the rotation slot dedup_substring_suffix
-    claims (its plan stays graded via text_trigram_lm_score) — must
-    still match their DuckDB twins."""
+    variant, retired r9 — must still match its DuckDB twin."""
     from iot_database_spark.operators import dedup_queries as dq
-    from iot_database_spark.operators import textstats_queries as tq
 
     for fn, oracle in (
         (dq.dedup_ngram_jaccard_absolute, dq._JACCARD_ORACLE),
-        (tq.text_ngram_lm_score, tq._NGRAM_LM_ORACLE),
     ):
         sdf = fn(spark, sf_dir)
         s_norm = _normalize([tuple(r) for r in sdf.collect()], sdf.columns)

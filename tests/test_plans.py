@@ -113,19 +113,6 @@ def test_q5_q14_shapes_broadcast_dims(spark, sf):
         assert rep["shuffle_exchanges"] <= 3, (name, rep["shuffle_exchanges"])
 
 
-def test_round2_text_ops_prune_and_scan_only(spark, sf):
-    """gopher/scrub are pure scans: zero exchanges, no Python, and the
-    documents scan reads only the needed columns."""
-    for name in ("text_gopher_rules", "text_scrub_pii"):
-        df = _Q[name](spark, sf)
-        assert audit.count_exchanges(df) == 0, name
-        assert not audit.uses_python_udf(df), name
-    gopher = _Q["text_gopher_rules"](spark, sf)
-    schemas = audit.read_schemas(gopher)
-    # documents has 5 columns; only doc_id + text should be read
-    assert any(s.count(",") <= 1 for s in schemas)
-
-
 def test_round2_cluster_assign_bounded_exchanges(spark, sf):
     """The FINAL cluster plan (after per-round checkpoints truncate
     lineage) is a bounded set of keyed joins over materialized label
@@ -213,10 +200,6 @@ def test_round5_new_ops_plan_shapes(spark, sf):
     mad = _Q["ts_anomaly_mad"](spark, sf)
     assert audit.count_exchanges(mad) == 1
     assert not audit.uses_python_udf(mad)
-    # HTML strip: zero shuffles — a pure scan-side codegen regexp chain
-    strip = _Q["text_strip_html"](spark, sf)
-    assert audit.count_exchanges(strip) == 0
-    assert not audit.uses_python_udf(strip)
     # sketch accuracy: the exact-distinct leg joins the sketch leg by
     # BROADCAST (both are one-row-per-event_type), and the plan must NOT
     # contain the fused per-(type,user) sketch-state expand (one
@@ -243,20 +226,17 @@ def test_round5_alerting_and_coverage_plan_shapes(spark, sf):
 
 
 def test_round6_corpus_sized_broadcasts_are_size_gated(spark, sf):
-    """r5 verdict finding #1: the jaccard per-doc sizes frame and the
-    BPE encoded-vocab table are one row per document / per distinct
-    word — O(corpus) frames whose broadcast hint must be conditional on
-    a MEASURED size, or a 100 TB run force-broadcasts billions of rows
-    past AQE's checks. With the session broadcast threshold disabled,
-    any BroadcastHashJoin left in the plan can only come from a forced
-    hint — so the closed gate must plan a shuffle join and the open
-    gate must still hint."""
-    from iot_database_spark.operators import bpe
+    """r5 verdict finding #1: the jaccard per-doc sizes frame is one row
+    per document — an O(corpus) frame whose broadcast hint must be
+    conditional on a MEASURED size, or a 100 TB run force-broadcasts
+    billions of rows past AQE's checks. With the session broadcast
+    threshold disabled, any BroadcastHashJoin left in the plan can only
+    come from a forced hint — so the closed gate must plan a shuffle
+    join and the open gate must still hint."""
     from iot_database_spark.operators import dedup as dd
     from iot_database_spark.operators.dedup_queries import _docs
 
     docs = _docs(spark, sf)
-    merges = [("t", "h"), ("th", "e")]
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     spark.conf.set(key, "-1")
@@ -267,36 +247,13 @@ def test_round6_corpus_sized_broadcasts_are_size_gated(spark, sf):
         )
         assert not audit.uses_broadcast_join(big_j)
         assert audit.uses_shuffle_join(big_j)
-        big_b = bpe.bpe_token_count(docs, merges, broadcast_max_words=0)
-        assert not audit.uses_broadcast_join(big_b)
-        assert audit.uses_shuffle_join(big_b)
-        # gate open (sizes/vocab measured small): the hint survives even
+        # gate open (sizes measured small): the hint survives even
         # with the session threshold off — it is the operator's own
         # justified size check, not a static-stats guess
         small_j = dd.jaccard_pairs(docs, threshold=0.02)
         assert audit.uses_broadcast_join(small_j)
-        small_b = bpe.bpe_token_count(docs, merges)
-        assert audit.uses_broadcast_join(small_b)
     finally:
         spark.conf.set(key, old)
-
-
-def test_ngram_lm_score_stays_jvm(spark, sf):
-    """The LM scorer's corpus-sized path must be pure Column exprs —
-    counts, zip_with bigrams, one ln per distinct bigram — with no
-    Python evaluation anywhere in the plan."""
-    from iot_database_spark.operators import textstats_queries as tq
-
-    # the bigram variant retired from the registry r13 — the plan
-    # assertion keeps covering it via the library function, plus the
-    # registered trigram twin
-    for df in (
-        tq.text_ngram_lm_score(spark, sf),
-        _Q["text_trigram_lm_score"](spark, sf),
-    ):
-        text = audit.explain_str(df)
-        assert "PythonUDF" not in text and "BatchEvalPython" not in text
-        assert "ArrowEvalPython" not in text
 
 
 def test_round11_span_and_fixed_eval_plan_shapes(spark, sf):

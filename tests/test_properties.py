@@ -192,38 +192,6 @@ def test_nl_condition_matches_python(rows, cutoff, needle, _spark):
     assert got == expected
 
 
-# -- chunking reconstruction ------------------------------------------------
-
-
-@given(
-    n_words=st.integers(min_value=1, max_value=300),
-    chunk_tokens=st.sampled_from([16, 64]),
-    overlap=st.sampled_from([0, 4, 8]),
-)
-@settings(max_examples=12, deadline=None)
-def test_chunks_reconstruct_document(spark, n_words, chunk_tokens, overlap):
-    """Dropping each chunk's leading `overlap` tokens (except the first
-    chunk) and concatenating reproduces the document exactly — i.e. the
-    chunker emits every token exactly once outside overlaps, regardless
-    of word count vs chunk/overlap geometry."""
-    from iot_database_spark.operators.textstats import chunk_documents
-
-    words = [f"t{i}" for i in range(n_words)]
-    df = spark.createDataFrame([(1, " ".join(words))], ["doc_id", "text"])
-    chunks = sorted(
-        chunk_documents(
-            df, chunk_tokens=chunk_tokens, overlap=overlap
-        ).collect(),
-        key=lambda r: r["chunk_idx"],
-    )
-    rebuilt = chunks[0]["chunk_text"].split(" ")
-    for c in chunks[1:]:
-        toks = c["chunk_text"].split(" ")
-        assert toks[:overlap] == rebuilt[len(rebuilt) - overlap :][: overlap]
-        rebuilt.extend(toks[overlap:])
-    assert rebuilt == words
-
-
 def test_zorder_interleave_is_bijective(_spark):
     """layout.zorder_value on an exact 2^bits grid (where linear
     quantization is the identity) must produce a BIJECTIVE Morton key:
@@ -313,45 +281,6 @@ def test_framestore_roundtrip_property(frames, interval):
         for is_full, _ in fs.iter_records(blob):
             run = 0 if is_full else run + 1
             assert run <= interval
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    words=st.lists(
-        st.text(alphabet="abcdef", min_size=1, max_size=10),
-        min_size=1,
-        max_size=30,
-    ),
-    fuzz=st.text(alphabet="abcdefgh", min_size=1, max_size=24),
-)
-def test_bpe_sequential_equals_greedy_property(words, fuzz):
-    """The equivalence the DuckDB BPE oracle rests on, under arbitrary
-    trained merge lists (not just the pinned one): applying merges in
-    training order, each exhaustively left-to-right, equals the
-    min-rank greedy encode loop."""
-    from iot_database_spark.operators import bpe
-
-    merges = bpe.train_bpe(
-        [(w, 1 + i) for i, w in enumerate(words)], num_merges=30, min_freq=1
-    )
-    ranks = {p: i for i, p in enumerate(merges)}
-
-    def seq_apply(word: str) -> list[str]:
-        syms = list(word)
-        for a, b in merges:
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        return syms
-
-    for w in set(words) | {fuzz}:
-        assert bpe.encode_word(w, ranks) == seq_apply(w)
 
 
 # --- round-8 operator invariants ------------------------------------------
