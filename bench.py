@@ -64,14 +64,7 @@ HEADLINE = [
     "remote_serialized_find",
     "stream_windowed_rollup",
     # round 3 additions
-    "decontaminate_ngram_overlap",
-    "corpus_mixture_sample",
-    "heavy_hitter_ngrams",
-    "embedding_outliers",
-    "ann_lsh_cosine",
-    "text_quality_classifier",
     "stream_exact_dedup",
-    "corpus_pack_sequences",
     # round 3: NTZ-family + relational-core focus
     "ts_detect_gaps",
     "ts_rate_of_change",
@@ -104,20 +97,15 @@ HEADLINE = [
     "ts_anomaly_mad",
     "ts_threshold_alerts",
     "approx_sketch_accuracy",
-    "text_trigram_coverage",
     "stream_threshold_alerts",
     # round 8 additions
     "stream_sessionization",
-    "text_repetition_trim",
-    "corpus_zipf_stats",
-    "dedup_url_canonical",
     "embedding_quantize_int8",
     "ann_int8_cosine",
     "stream_stream_time_join",
     "decontaminate_minhash",
     "ann_two_stage_rerank",
     "event_transition_matrix",
-    "pipeline_web_ingest",
     "ts_seasonal_baseline",
     # round 9 additions
     "continuous_slot14_digest",
@@ -132,7 +120,6 @@ HEADLINE = [
     "dedup_span_exact",
     "dedup_span_removal",
     "dedup_substring_suffix",
-    "corpus_quality_resample",
     "decontaminate_fixed_eval",
 ]
 

@@ -463,7 +463,8 @@ class IotDatabase:
         self._save_meta()
 
     def rename_table(self, name: str, new_name: str) -> None:
-        """RENAME COLLECTION equivalent."""
+        """RENAME COLLECTION equivalent. Foreign keys that name the table
+        follow it, so their constraints keep holding under the new name."""
         import os as _os
 
         if new_name in self._meta["tables"]:
@@ -474,6 +475,11 @@ class IotDatabase:
             _os.rename(t.path, new_path)
         self._meta["tables"][new_name] = self._meta["tables"].pop(name)
         self._tables.pop(name, None)
+        for child, meta in self._meta["tables"].items():
+            for d in meta["foreign_keys"]:
+                if d["parent"] == name:
+                    d["parent"] = new_name
+                    self._tables.pop(child, None)  # cached FKs name the old parent
         self._save_meta()
 
     def compact_table(self, name: str, target_files: int = 1) -> None:

@@ -477,7 +477,7 @@ def containment_pairs(
     (Broder's containment, symmetrized by the smaller set). The dedup
     primitive Jaccard structurally misses: a 100-word quote inside a
     10k-word page has Jaccard ~0.01 but containment ~1.0 — this is how
-    quote/excerpt/subset duplication is caught in corpus curation.
+    quote/excerpt/subset duplication is caught in a corpus.
 
     Same plan, guards, and cost model as `jaccard_pairs` (one shingle
     exchange, fractional df cap, per-bucket i<j pairs, pair-sized size

@@ -676,13 +676,12 @@ def _decon_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("decontaminate_minhash", oracle=_DECON_MH_ORACLE)
 def decontaminate_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FUZZY benchmark decontamination — the MinHash sibling of
-    `decontaminate_ngram_overlap` (which needs an EXACT shared 8-gram;
-    a paraphrased eval answer slips through it, but still collides in
-    MinHash band space). Training docs (doc_id % 50 != 0) are flagged
-    when any eval doc (doc_id % 50 == 0) lands in a shared LSH band
-    bucket; the signature-position agreement (0..16, >= 8 ~ estimated
-    Jaccard >= 0.5) grades HOW contaminated.
+    """FUZZY benchmark decontamination — MinHash rather than an EXACT
+    shared 8-gram (a paraphrased eval answer slips through an exact
+    match, but still collides in MinHash band space). Training docs
+    (doc_id % 50 != 0) are flagged when any eval doc (doc_id % 50 == 0)
+    lands in a shared LSH band bucket; the signature-position agreement
+    (0..16, >= 8 ~ estimated Jaccard >= 0.5) grades HOW contaminated.
 
     Scale shape: the eval slice here is doc_id %% 50 == 0 — 2%% of the
     corpus, which GROWS with the data — so the broadcast hint is
@@ -713,7 +712,7 @@ def decontaminate_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("decontaminate_eval_leak_report", oracle=_DECON_LEAK_ORACLE)
 def decontaminate_eval_leak_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The EVAL-side view of decontamination — the report a curation
+    """The EVAL-side view of decontamination — the report a data
     team actually reads first: per held-out document, how many training
     docs collide with it and how badly (a benchmark item with hundreds
     of high-agreement training collisions is COMPROMISED and should be
@@ -788,7 +787,7 @@ def corpus_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document n-gram NOVELTY: the fraction of a doc's distinct
     3-gram shingles whose first corpus occurrence (min doc_id — the
     deterministic stand-in for ingest order) is this document. The
-    data-curation dual of dedup: low novelty = mostly-recycled text
+    data-selection dual of dedup: low novelty = mostly-recycled text
     (boilerplate, syndication) even when no single pair crosses a
     near-dup threshold; streaming-ingest pipelines score batches
     against the seen-shingle set the same way.
@@ -1043,9 +1042,8 @@ def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     except the canonical one (min (doc_id, position), encoded as one
     BIGINT key so both engines order identically) is cut from the text;
     surviving tokens keep their order (Lee et al.'s train-set dedup,
-    graded like text_repetition_trim: counts + an md5 of the repaired
-    document, so the oracle compares the actual repaired text without
-    moving its body).
+    graded as counts + an md5 of the repaired document, so the oracle
+    compares the actual repaired text without moving its body).
 
     Scale shape (skew-proofed r12 — r11 verdict finding #1): the
     posexploded (doc, pos, span-hash) stream is MATERIALIZED ONCE
@@ -1154,7 +1152,7 @@ def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per bounded group instead of over one global order (a global ORDER BY
 # is a single-partition sort at any scale). Match lengths cap at
 # SUFFIX_MAX_W by construction: "24+" is one answer, which is what a
-# curation decision needs.
+# keep-or-drop decision needs.
 # ---------------------------------------------------------------------------
 
 SUFFIX_MAX_W = 24  # truncation: the longest extent the profile resolves

@@ -9,7 +9,7 @@ determinism notes — FLOOR(x+0.5) quantization, then pure int math):
 - `ann_int8_cosine`: top-10 by INTEGER dot product over the quantized
   corpus against the quantized query vector (vec_id 0) — the 4x-smaller,
   SIMD-friendly scale path next to the exact float `vector_cosine_topk`
-  and the bucketed `ann_ivf_cosine`/`ann_lsh_cosine` family.
+  and the bucketed `ann_ivf_cosine`.
 
 Reference parity anchor: the reference's vector surface is brute-force
 float cosine/L2 (VectorIndex.cs, VectorCollection.cs Search*); this

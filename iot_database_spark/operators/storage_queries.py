@@ -1,5 +1,6 @@
 """Driver-graded storage-layer queries: the versioned commit log's
-user-visible semantics (time travel) under the DuckDB hash gate.
+user-visible semantics (time travel) and the Z-order clustering key
+`layout.write_zordered` sorts by, under the DuckDB hash gate.
 
 The reference's storage layer exposes page-level snapshots via its WAL
 (LiteDB/Engine/Services/WalIndexService.cs) and per-file version chains
@@ -341,3 +342,50 @@ def continuous_slot14_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         F.lit(len(ran)).cast("int").alias("n_scheduled_runs"),
     )
+
+
+def _zorder_oracle(bits: int = 16) -> str:
+    """DuckDB mirror of layout.zorder_value over events (user_id, value):
+    identical min/max linear quantization and bit interleave, so the
+    Morton-key arithmetic is cross-engine hash-checked."""
+    levels = (1 << bits) - 1
+    qa = f"LEAST({levels}, CAST(FLOOR((CAST(user_id AS DOUBLE) - s.lo_a) / s.span_a * {levels}) AS BIGINT))"
+    qb = f"LEAST({levels}, CAST(FLOOR((CAST(value AS DOUBLE) - s.lo_b) / s.span_b * {levels}) AS BIGINT))"
+    terms = []
+    for bit in range(bits):
+        terms.append(f"((qa >> {bit}) & 1) * CAST({1 << (bit * 2)} AS BIGINT)")
+        terms.append(f"((qb >> {bit}) & 1) * CAST({1 << (bit * 2 + 1)} AS BIGINT)")
+    return f"""
+    WITH s AS (
+        SELECT MIN(CAST(user_id AS DOUBLE)) AS lo_a,
+               CASE WHEN MAX(CAST(user_id AS DOUBLE)) = MIN(CAST(user_id AS DOUBLE))
+                    THEN 1.0 ELSE MAX(CAST(user_id AS DOUBLE)) - MIN(CAST(user_id AS DOUBLE)) END AS span_a,
+               MIN(CAST(value AS DOUBLE)) AS lo_b,
+               CASE WHEN MAX(CAST(value AS DOUBLE)) = MIN(CAST(value AS DOUBLE))
+                    THEN 1.0 ELSE MAX(CAST(value AS DOUBLE)) - MIN(CAST(value AS DOUBLE)) END AS span_b
+        FROM events
+    ),
+    q AS (
+        SELECT CAST(event_id AS BIGINT) AS event_id, {qa} AS qa, {qb} AS qb
+        FROM events, s
+    )
+    SELECT event_id, {" + ".join(terms)} AS zkey
+    FROM q
+"""
+
+
+@register("zorder_key_events", oracle=_zorder_oracle())
+def zorder_key_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Morton (Z-order) clustering key over events (user_id, value) —
+    the exact bit-interleave arithmetic `layout.write_zordered` sorts
+    by, hash-checked against a DuckDB mirror (both engines quantize
+    with identical IEEE-double min/max scaling, so the keys match
+    bit-for-bit)."""
+    from iot_database_spark.layout import zorder_value
+
+    tables = load_views(spark, sf_dir)
+    ev = tables["events"].select(
+        F.col("event_id").cast("bigint").alias("event_id"), "user_id", "value"
+    )
+    keyed, key = zorder_value(ev, ["user_id", "value"])
+    return keyed.select("event_id", F.col(key).alias("zkey"))

@@ -268,9 +268,8 @@ def ann_two_stage_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     those exactly over all 64 dimensions — the memory-bandwidth shape
     production vector search uses (matryoshka/PCA-front embeddings: the
     coarse pass reads a 4x narrower slice of every row, the exact pass
-    touches only k' << N rows). Complements the bucket-pruning paths
-    (`ann_ivf_cosine`, `ann_lsh_cosine`) with the rerank pattern they
-    feed into. Reference anchor: the reference's search is single-stage
+    touches only k' << N rows). Complements the bucket-pruning path
+    (`ann_ivf_cosine`) with the rerank pattern it feeds into. Reference anchor: the reference's search is single-stage
     brute force (VectorCollection.SearchCosine) — this is the declared
     scale superset.
 

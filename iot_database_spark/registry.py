@@ -1,8 +1,8 @@
 """Central registry of driver-visible queries and their DuckDB oracles.
 
 Every operator this engine claims from SURVEY.md §2 registers a named
-query here: a callable (spark, sf_dir) -> DataFrame plus (where the
-semantics are ANSI-SQL-expressible) an equivalent DuckDB SQL string.
+query here: a callable (spark, sf_dir) -> DataFrame plus an equivalent
+DuckDB SQL string.
 The driver hash-compares both at sf0.01; `tests/test_oracle_parity.py`
 runs the same comparison locally.
 
@@ -30,15 +30,14 @@ _ORACLES: dict[str, "str | Callable[[], str]"] = {}
 
 
 def register(
-    name: str, oracle: "str | Callable[[], str] | None" = None
+    name: str, oracle: "str | Callable[[], str]"
 ) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register a driver-visible query (and optional oracle
-    SQL — a string, or a zero-arg callable resolved at oracles() time)."""
+    """Decorator: register a driver-visible query and its oracle SQL — a
+    string, or a zero-arg callable resolved at oracles() time."""
 
     def deco(fn: QueryFn) -> QueryFn:
         _QUERIES[name] = fn
-        if oracle is not None:
-            _ORACLES[name] = oracle
+        _ORACLES[name] = oracle
         return fn
 
     return deco
@@ -51,9 +50,9 @@ def register(
 # round's ordering from the recorded CORRECTNESS_r*.json artifacts
 # (reds first, then never-graded, then oldest-green-first).
 #
-# The tuple below is the planner's output verbatim. With 133
+# The tuple below is the planner's output verbatim. With 120
 # registered queries, a 50-slot window and the 3-round evidence-age
-# limit, the rotation has 17 slots of slack: up to 17 new registrations
+# limit, the rotation has 30 slots of slack: up to 30 new registrations
 # (or same-round re-grades after a semantics change) fit before one
 # needs a slot freed by RETIRING a query — the policy is mechanical:
 # scripts/plan_rotation.py (r11 verdict task #6).
@@ -86,12 +85,7 @@ _PRIORITY: tuple[str, ...] = (
     "dedup_repeated_ngrams",  # r12 green
     "dedup_ngram_containment",  # r12 green
     "corpus_ngram_novelty",  # r12 green
-    "corpus_mixture_sample",  # r12 green
-    "heavy_hitter_ngrams",  # r12 green
-    "ann_lsh_cosine",  # r12 green
-    "text_quality_classifier",  # r12 green
     "zorder_key_events",  # r12 green
-    "text_trigram_coverage",  # r12 green
     "stream_rollup_to_table",  # r12 green
     "stream_exact_dedup",  # r12 green
     "stream_threshold_alerts",  # r12 green
@@ -108,6 +102,11 @@ _PRIORITY: tuple[str, ...] = (
     "take_last",  # r13 green
     "multi_key_sort",  # r13 green
     "q01_pricing_summary",  # r13 green
+    "global_agg",  # r13 green
+    "groupby_having",  # r13 green
+    "distinct_op",  # r13 green
+    "count_exists_minmax",  # r13 green
+    "rollup_agg",  # r13 green
 )
 
 
@@ -150,7 +149,6 @@ def _ensure_loaded() -> None:
         "iot_database_spark.operators.blockchain_queries",
         "iot_database_spark.operators.vector_queries",
         "iot_database_spark.operators.dedup_queries",
-        "iot_database_spark.operators.curation_queries",
         "iot_database_spark.operators.quantize_queries",
         "iot_database_spark.operators.nl_queries",
         "iot_database_spark.operators.streaming_queries",

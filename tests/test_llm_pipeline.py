@@ -1,5 +1,5 @@
 """Tests for the LLM-pipeline operators: dedup behavior on known
-near-dups, IVF recall vs brute force, text statistics, BPE and the
+near-dups, IVF recall vs brute force, k-means, HLL, range joins and the
 frame-store codec."""
 
 from __future__ import annotations
@@ -301,63 +301,6 @@ def test_vector_index_persists_and_searches(spark, tmp_path, sf_dir):
     assert db2.table("emb_idx__vectors").count() == emb.count()
 
 
-def test_decontaminate_flags_planted_overlap(spark):
-    """A train doc sharing an 8-gram with the eval set is flagged with
-    the right collision count; disjoint docs are not."""
-    from iot_database_spark.operators import curation as cu
-
-    passage = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
-    train = spark.createDataFrame(
-        [
-            (1, passage + " kilo lima"),          # shares 8-grams with eval
-            (2, "totally unrelated words that never appear in any eval set"),
-            (3, "short doc"),                      # < 8 tokens -> no grams
-        ],
-        ["doc_id", "text"],
-    )
-    eval_set = spark.createDataFrame([(100, passage)], ["doc_id", "text"])
-    out = {r["doc_id"]: r["n_shared_grams"] for r in cu.ngram_decontaminate(train, eval_set, n=8).collect()}
-    # passage has 10 tokens -> 3 distinct 8-grams; train doc 1 contains
-    # all 3 of them (plus 2 more grams crossing into ' kilo lima')
-    assert out == {1: 3}
-
-
-def test_mixture_sample_rate_and_determinism(spark):
-    from iot_database_spark.operators import curation as cu
-
-    df = spark.range(0, 4000).withColumnRenamed("id", "doc_id")
-    out = cu.mixture_sample(df, rate_bp=F.lit(2500))
-    n = out.filter("sampled").count()
-    assert abs(n / 4000 - 0.25) < 0.03  # hash-uniformity, not exactness
-    # decisions are per-row pure: a subset sees identical flags
-    sub = cu.mixture_sample(df.filter("doc_id < 100"), rate_bp=F.lit(2500))
-    full = {r["doc_id"]: r["sampled"] for r in out.filter("doc_id < 100").collect()}
-    assert {r["doc_id"]: r["sampled"] for r in sub.collect()} == full
-
-
-def test_lsh_ann_recall_vs_brute_force(spark, sf_dir):
-    """Multi-probe hyperplane LSH must recover a decent fraction of the
-    true cosine top-10 (same bar as the IVF recall test)."""
-    from iot_database_spark import registry
-    from iot_database_spark.registry import load_views
-
-    qs = registry.queries()
-    emb = load_views(spark, sf_dir)["embeddings"].select(
-        F.col("vec_id").cast("bigint").alias("vec_id"), "embedding"
-    )
-    q = emb.filter("vec_id = 0").select(F.col("embedding").alias("qv"))
-    truth = {
-        r["vec_id"]
-        for r in emb.crossJoin(F.broadcast(q))
-        .withColumn("rel", vec.cosine_similarity(F.col("embedding"), F.col("qv")))
-        .orderBy(F.desc("rel"), "vec_id")
-        .limit(10)
-        .collect()
-    }
-    got = {r["vec_id"] for r in qs["ann_lsh_cosine"](spark, sf_dir).collect()}
-    assert len(truth & got) >= 3  # ANN tradeoff; 3/10 proves bucketing works
-
-
 def test_minhash_index_incremental_dedup(spark, tmp_path, corpus):
     """MinHashIndex: build over the corpus, then an incremental batch
     containing a near-dup of an indexed doc links to it after a database
@@ -444,33 +387,6 @@ def test_range_join_drops_inverted_and_empty_intervals(spark):
     )
     got = [(r["event_id"], r["iv_id"]) for r in range_join(ev, iv).collect()]
     assert got == [(1, 9)]
-
-
-def test_trigram_coverage_separates_garbage(spark, sf_dir):
-    """A doc made of characters the corpus never uses must score far
-    below in-domain docs (the perplexity-filter contract)."""
-    from iot_database_spark.operators.curation import trigram_coverage
-    from iot_database_spark.operators.curation_queries import (
-        text_trigram_coverage,
-    )
-
-    rows = [
-        (i, "the quick brown fox jumps over the lazy dog again and again")
-        for i in range(1, 10)
-    ] + [(10, "qz7#x9@k!m2$w8%v4^b6&n1*p3(j5)")]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {r.doc_id: r for r in trigram_coverage(df, k=50).collect()}
-    assert all(0.0 <= r.coverage <= 1.0 and r.n_hit <= r.n_tri for r in got.values())
-    assert got[1].coverage > 0.9  # in-domain: nearly all head trigrams
-    assert got[10].coverage < 0.2  # out-of-domain garbage scores low
-    # short/empty docs are well-defined, not division errors
-    tiny = spark.createDataFrame([(1, "ab"), (2, "")], ["doc_id", "text"])
-    t = {r.doc_id: r for r in trigram_coverage(tiny, k=10).collect()}
-    assert t[1].n_tri == 0 and t[1].coverage == 0.0
-    assert t[2].n_tri == 0 and t[2].coverage == 0.0
-    # the oracle-gated query runs end-to-end on the parquet corpus
-    out = text_trigram_coverage(spark, sf_dir).collect()
-    assert all(0.0 <= r.coverage <= 1.0 for r in out)
 
 
 def test_framestore_golden_and_roundtrip():

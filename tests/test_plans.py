@@ -135,30 +135,6 @@ def test_round2_serialized_find_matches_nl_plan_quality(spark, sf):
     assert audit.uses_take_ordered(df)  # ORDER BY + LIMIT -> top-k
 
 
-def test_round3_curation_plan_quality(spark, sf):
-    """Decontamination broadcasts the eval gram set (the corpus side is
-    never shuffled — one exchange for the per-doc count); heavy hitters
-    and embedding outliers compile their top-k to TakeOrderedAndProject;
-    LSH ANN broadcasts the 7-row probe descriptor; none of them touch
-    Python."""
-    decon = _Q["decontaminate_ngram_overlap"](spark, sf)
-    assert audit.uses_broadcast_join(decon)
-    assert not audit.uses_shuffle_join(decon)
-
-    for name in ("heavy_hitter_ngrams", "embedding_outliers"):
-        df = _Q[name](spark, sf)
-        assert audit.uses_take_ordered(df), name
-        assert not audit.uses_python_udf(df), name
-
-    lsh = _Q["ann_lsh_cosine"](spark, sf)
-    assert audit.uses_broadcast_join(lsh)
-    assert audit.uses_take_ordered(lsh)
-
-    mix = _Q["corpus_mixture_sample"](spark, sf)
-    assert audit.count_exchanges(mix) <= 1  # one keyed agg, nothing else
-    assert not audit.uses_python_udf(mix)
-
-
 def test_include_hydration_broadcasts_parent(spark, sf):
     """SQL-dialect INCLUDE: the FK parent (a dim) must broadcast — the
     child side never reshuffles for the hydrate join."""
@@ -218,11 +194,6 @@ def test_round5_alerting_and_coverage_plan_shapes(spark, sf):
     al = _Q["ts_threshold_alerts"](spark, sf)
     assert audit.count_exchanges(al) == 1
     assert not audit.uses_python_udf(al)
-    # trigram coverage: the 1000-row model must broadcast (left-semi)
-    # and the top-k must heap-take, not full-sort
-    cov = _Q["text_trigram_coverage"](spark, sf)
-    assert audit.uses_broadcast_join(cov)
-    assert audit.uses_take_ordered(cov)
 
 
 def test_round6_corpus_sized_broadcasts_are_size_gated(spark, sf):
@@ -304,10 +275,6 @@ def test_round11_span_and_fixed_eval_plan_shapes(spark, sf):
     fplan = fx._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoop" not in fplan and "CartesianProduct" not in fplan
     assert not audit.uses_python_udf(fx)
-    # quality resample: one partial-aggregated exchange, narrow otherwise
-    qr = _Q["corpus_quality_resample"](spark, sf)
-    assert audit.count_exchanges(qr) == 1
-    assert not audit.uses_python_udf(qr)
 
 
 def test_substring_suffix_plan_shape(spark, sf):

@@ -283,76 +283,6 @@ def test_framestore_roundtrip_property(frames, interval):
             assert run <= interval
 
 
-# --- round-8 operator invariants ------------------------------------------
-
-_url_scheme = st.sampled_from(["http", "HTTP", "https", "HTTPS", "ftp"])
-_url_host = st.from_regex(r"(www\.)?[A-Za-z][A-Za-z0-9-]{0,10}(\.[A-Za-z]{2,5}){1,2}(:\d{2,4})?", fullmatch=True)
-_url_path = st.from_regex(r"(/[A-Za-z0-9._~-]{0,8}){0,4}/?", fullmatch=True)
-_url_query = st.from_regex(
-    r"(\?([A-Za-z][A-Za-z0-9_]{0,6}=[A-Za-z0-9]{0,6}(&[A-Za-z][A-Za-z0-9_]{0,6}=[A-Za-z0-9]{0,6}){0,4})?)?",
-    fullmatch=True,
-)
-_url_frag = st.from_regex(r"(#[A-Za-z0-9]{0,6})?", fullmatch=True)
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    scheme=_url_scheme, host=_url_host, path=_url_path,
-    query=_url_query, frag=_url_frag,
-)
-def test_canonicalize_url_idempotent_and_cross_engine(scheme, host, path, query, frag):
-    """Two invariants, engine-free via the DuckDB twin (fast — no Spark
-    session per example): (1) canonicalization is IDEMPOTENT (a
-    canonical URL survives a second pass unchanged — the property that
-    makes re-crawled canonical keys stable), and (2) the DuckDB twin is
-    the fixed point the Spark Column version is separately pinned to in
-    test_curation_round8 (shared example table there)."""
-    import duckdb
-
-    from iot_database_spark.operators import curation as cu
-
-    url = f"{scheme}://{host}{path}{query}{frag}"
-    con = duckdb.connect()
-    expr = cu.duck_canonicalize_url("url")
-    once = con.execute(f"SELECT {expr} FROM (SELECT ? AS url)", [url]).fetchone()[0]
-    twice = con.execute(f"SELECT {expr} FROM (SELECT ? AS url)", [once]).fetchone()[0]
-    assert twice == once, (url, once, twice)
-
-
-@settings(max_examples=20, deadline=None)
-@given(
-    words=st.lists(st.sampled_from(["a", "b", "c", "d"]), min_size=1, max_size=30),
-    n=st.integers(min_value=1, max_value=4),
-)
-def test_trim_repeated_windows_duck_reference(words, n):
-    """The trim semantics (fixed n-word windows, order-preserving first
-    occurrence) reproduced against a direct python reference via the
-    DuckDB oracle text — pins the 1-based slice arithmetic both engine
-    texts share."""
-    import duckdb
-
-    text = " ".join(words)
-    # python reference
-    wins = [" ".join(words[i : i + n]) for i in range(0, len(words), n)]
-    kept, seen = [], set()
-    for w in wins:
-        if w not in seen:
-            seen.add(w)
-            kept.append(w)
-    q = f"""
-    SELECT list_transform(range(0, CAST(ceil(len(ws) / {n}.0) AS BIGINT)),
-             i -> array_to_string(ws[i*{n}+1 : i*{n}+{n}], ' ')) AS wins
-    FROM (SELECT string_split(?, ' ') AS ws)
-    """
-    duck_wins = duckdb.connect().execute(q, [text]).fetchone()[0]
-    assert duck_wins == wins
-    duck_kept = duckdb.connect().execute(
-        f"""SELECT list_filter(wins, (x, i) -> list_position(wins[1 : i-1], x) = 0)
-            FROM ({q.replace('?', "'" + text + "'")})"""
-    ).fetchone()[0]
-    assert duck_kept == kept
-
-
 @settings(max_examples=25, deadline=None)
 @given(
     vec=st.lists(

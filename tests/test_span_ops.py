@@ -14,7 +14,6 @@ import duckdb
 import pytest
 
 from iot_database_spark.operators import dedup_queries as dq
-from iot_database_spark.operators.curation_queries import corpus_quality_resample
 
 
 def test_phrase_and_span_results_nonempty(spark, sf_dir):
@@ -110,15 +109,6 @@ def test_decon_eval_path_resolved_at_call_time(
         dq._fixed_eval_path()
     monkeypatch.delenv("SPARK_GRAFT_DECON_EVAL_PATH")
     assert dq._fixed_eval_path() == dq._DEFAULT_EVAL_PATH
-
-
-def test_quality_resample_rates_vary(spark, sf_dir):
-    """The per-document rate actually varies (otherwise this query
-    would collapse into corpus_mixture_sample): some source has a kept
-    fraction strictly between 0 and 1."""
-    rows = corpus_quality_resample(spark, sf_dir).collect()
-    assert rows
-    assert any(0 < r.n_kept < r.n_docs for r in rows)
 
 
 @pytest.mark.parametrize("sf", ["0.01", "0.1"])

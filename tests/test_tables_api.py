@@ -155,6 +155,32 @@ def test_ddl_drop_rename_compact(db):
         db.table("tmp_tbl2")
 
 
+def test_rename_table_carries_foreign_keys(db, spark, tmp_path):
+    """Renaming a parent moves every child FK with it: a restrictive
+    delete still raises, and child inserts validate against the new
+    name, in the same session and after reopening the database."""
+    db.tables(
+        "notes",
+        "id bigint, customers_id bigint, body string",
+        foreign_keys=[
+            ForeignKey(column="customers_id", parent="customers", constraint="restrictive")
+        ],
+    ).insert([{"id": 1, "customers_id": 2, "body": "hi"}])
+    db.rename_table("customers", "people")
+
+    for new_id, d in ((2, db), (3, IotDatabase("testdb", str(tmp_path), spark))):
+        assert [c for c, _ in d.children_of("people")] == ["orders2", "addresses", "notes"]
+        with pytest.raises(ConstraintViolation, match="Restrictive"):
+            d.table("people").delete(F.col("id") == 2)
+        assert d.table("people").count() == 3
+        with pytest.raises(ConstraintViolation, match="missing people.id"):
+            d.table("notes").insert([{"id": 99, "customers_id": 777, "body": "x"}])
+        d.table("notes").insert([{"id": new_id, "customers_id": 1, "body": "ok"}])
+        assert sorted(r["id"] for r in d.table("notes").df.collect()) == list(
+            range(1, new_id + 1)
+        )
+
+
 # -- versioned storage: commit log semantics (tables.py storage layer) ----
 
 

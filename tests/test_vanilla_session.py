@@ -33,8 +33,6 @@ PROBE_QUERIES = list(_registry_queries())[:50] + [
     "dedup_exact",  # dedup_queries
     "nl_find_filter_sort_limit",  # nl_queries
     "remote_serialized_find",  # serialized wire surface
-    "decontaminate_ngram_overlap",  # curation_queries
-    "ann_lsh_cosine",  # curation: hyperplane LSH over embeddings
     "stream_exact_dedup",  # streaming dedup state store on vanilla session
     "embedding_quantize_int8",  # quantize_queries
 ]
