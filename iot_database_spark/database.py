@@ -31,7 +31,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from iot_database_spark.tables import ForeignKey, Table
+from iot_database_spark.tables import ForeignKey, Table, _schema_struct
 
 
 class IotDatabase:
@@ -74,6 +74,7 @@ class IotDatabase:
             with open(self._meta_path) as f:
                 self._meta = json.load(f)
         self._tables: dict[str, Table] = {}
+        self._views: dict[str, tuple] = {}  # name -> (source df, view) — sql_view
         self._txn: "_Transaction | None" = None
 
     # -- transactions (BEGIN/COMMIT/ROLLBACK — SqlParser.cs:24-49; WAL
@@ -173,9 +174,9 @@ class IotDatabase:
                 if d["parent"] == parent:
                     return (d["column"], "id")
         # naming convention fallback: <parent>_id / <parent>Id
-        child_df = self.table(child).df
+        columns = self.table(child).columns
         for cand in (f"{parent.lower()}_id", f"{parent}Id", f"{parent.lower()}id"):
-            for c in child_df.columns:
+            for c in columns:
                 if c.lower() == cand.lower():
                     return (c, "id")
         return None
@@ -203,6 +204,16 @@ class IotDatabase:
                 for f in df.schema.fields
             ]
         )
+
+    def sql_view(self, name: str) -> DataFrame:
+        """The frame the SQL dialect registers as view `name`: the
+        table's memoised `Table.df` under the collation policy, reused
+        while that source frame is the same one."""
+        df = self.table(name).df
+        hit = self._views.get(name)
+        if hit is None or hit[0] is not df:
+            hit = self._views[name] = (df, self.apply_collation(df))
+        return hit[1]
 
     _PRAGMA_DEFAULTS: dict = {
         "USER_VERSION": 0,
@@ -275,7 +286,7 @@ class IotDatabase:
             rows = [
                 (t, f.name, f.dataType.simpleString(), f.nullable)
                 for t in self.list_tables()
-                for f in self.table(t).df.schema.fields
+                for f in _schema_struct(self.spark, self.table(t).schema).fields
             ]
             return self.spark.createDataFrame(
                 rows, "table string, column string, type string, nullable boolean"
@@ -423,10 +434,9 @@ class IotDatabase:
 
     def describe(self, name: str) -> DataFrame:
         """$cols-style schema listing for one table."""
-        t = self.table(name)
         rows = [
             (name, f.name, f.dataType.simpleString(), f.nullable)
-            for f in t.df.schema.fields
+            for f in _schema_struct(self.spark, self.table(name).schema).fields
         ]
         return self.spark.createDataFrame(
             rows, "table string, column string, type string, nullable boolean"
@@ -453,13 +463,22 @@ class IotDatabase:
 
     def drop_table(self, name: str) -> None:
         """DROP TABLE: remove data + metadata (cascade NOT applied — the
-        reference's DropCollection drops in place; FK children keep rows)."""
+        reference's DropCollection drops in place). FK children keep
+        their rows; their foreign keys to the dropped table go in the
+        same metadata save, so later child inserts no longer validate
+        against a table that is gone (nor against a same-name recreate)."""
         import shutil
 
         t = self.table(name)
         shutil.rmtree(t.path, ignore_errors=True)
         self._meta["tables"].pop(name, None)
         self._tables.pop(name, None)
+        self._views.pop(name, None)
+        for child, meta in self._meta["tables"].items():
+            kept = [d for d in meta["foreign_keys"] if d["parent"] != name]
+            if len(kept) != len(meta["foreign_keys"]):
+                meta["foreign_keys"] = kept
+                self._tables.pop(child, None)  # cached FKs name the dropped parent
         self._save_meta()
 
     def rename_table(self, name: str, new_name: str) -> None:
@@ -475,6 +494,7 @@ class IotDatabase:
             _os.rename(t.path, new_path)
         self._meta["tables"][new_name] = self._meta["tables"].pop(name)
         self._tables.pop(name, None)
+        self._views.pop(name, None)
         for child, meta in self._meta["tables"].items():
             for d in meta["foreign_keys"]:
                 if d["parent"] == name:

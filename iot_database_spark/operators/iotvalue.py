@@ -25,7 +25,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 NUM_SLOTS = 17  # slot 17 (index 16) = configuration, excluded from Value
 
@@ -44,26 +43,49 @@ def has_flag(flags: Column, flag: int) -> Column:
     return (flags.bitwiseAND(F.lit(flag)) != 0)
 
 
-def effective_value(values: Column) -> Column:
-    """First non-null slot 1..16 of a 17-element array column
-    (IotValue.Value getter :299-327; slot 17 never participates).
-    try_element_at: an all-null point must yield NULL, not an ANSI
-    out-of-bounds error."""
-    scan = F.slice(values, 1, NUM_SLOTS - 1)
-    return F.try_element_at(F.filter(scan, lambda v: v.isNotNull()), F.lit(1))
+# The slot builders below are SQL expression strings, parsed once each
+# (one py4j call) by F.expr / selectExpr: a tree of Column calls costs a
+# py4j round trip per node, and a 17-slot tree has hundreds of nodes.
 
 
-def effective_priority(values: Column) -> Column:
-    """1-based priority of the first non-null slot 1..16 (IotValue.cs:332-343);
-    null when no slot is set."""
-    scan = F.slice(values, 1, NUM_SLOTS - 1)
-    idx = F.array_position(F.transform(scan, lambda v: v.isNotNull()), True)
-    return F.when(idx > 0, idx.cast("int"))
+def _effective_priority_sql(values: str) -> str:
+    idx = (
+        f"array_position(transform(slice({values}, 1, {NUM_SLOTS - 1}), "
+        "v -> v IS NOT NULL), true)"
+    )
+    return f"CASE WHEN {idx} > 0 THEN CAST({idx} AS INT) END"
 
 
-def effective_timestamp(values: Column, timestamps: Column) -> Column:
-    """Timestamp of the effective slot (IotValue.cs:348-358)."""
-    return F.try_element_at(timestamps, effective_priority(values))
+def _effective_value_sql(values: str) -> str:
+    return (
+        f"try_element_at(filter(slice({values}, 1, {NUM_SLOTS - 1}), "
+        "v -> v IS NOT NULL), 1)"
+    )
+
+
+def _effective_timestamp_sql(values: str, timestamps: str) -> str:
+    return f"try_element_at({timestamps}, {_effective_priority_sql(values)})"
+
+
+def effective_value(values: str) -> Column:
+    """First non-null slot 1..16 of the 17-element array column named
+    `values` (IotValue.Value getter :299-327; slot 17 never
+    participates). try_element_at: an all-null point must yield NULL,
+    not an ANSI out-of-bounds error."""
+    return F.expr(_effective_value_sql(values))
+
+
+def effective_priority(values: str) -> Column:
+    """1-based priority of the first non-null slot 1..16 of the array
+    column named `values` (IotValue.cs:332-343); null when no slot is
+    set."""
+    return F.expr(_effective_priority_sql(values))
+
+
+def effective_timestamp(values: str, timestamps: str) -> Column:
+    """Timestamp of the effective slot (IotValue.cs:348-358), for the
+    array columns named `values` and `timestamps`."""
+    return F.expr(_effective_timestamp_sql(values, timestamps))
 
 
 def write_allowed(priority: Column, flags: Column) -> Column:
@@ -100,34 +122,36 @@ def replay_slots(
     one row per guid with `values` / `timestamps` 17-element arrays plus
     the effective value/priority/timestamp columns.
 
-    Scale shape: a single shuffle on (guid, priority) for the per-slot
-    max, then a groupBy(guid) — both partial-aggregatable; no windows, no
-    per-row Python.
+    Scale shape: a shuffle on (guid, priority) for the per-slot latest
+    write (a row_number window), then a partial-aggregatable
+    groupBy(guid); no per-row Python.
     """
-    order = [F.col(ts).desc()] + ([F.col(tiebreak).desc()] if tiebreak else [])
-    w = W.partitionBy(guid, priority).orderBy(*order)
+    order = ", ".join(f"{c} DESC" for c in (ts, tiebreak) if c)
     latest = (
-        writes.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
+        writes.selectExpr(
+            "*",
+            f"row_number() OVER (PARTITION BY {guid}, {priority} "
+            f"ORDER BY {order}) AS _rn",
+        )
+        .filter("_rn = 1")
         .drop("_rn")
     )
     slots = latest.groupBy(guid).agg(
-        F.map_from_entries(F.collect_list(F.struct(priority, value))).alias("_vmap"),
-        F.map_from_entries(F.collect_list(F.struct(priority, ts))).alias("_tmap"),
+        F.expr(f"map_from_entries(collect_list(struct({priority}, {value}))) AS _vmap"),
+        F.expr(f"map_from_entries(collect_list(struct({priority}, {ts}))) AS _tmap"),
     )
-    idx = F.sequence(F.lit(1), F.lit(NUM_SLOTS))
-    out = slots.select(
+    idx = f"sequence(1, {NUM_SLOTS})"
+    return slots.selectExpr(
         guid,
-        F.transform(idx, lambda i: F.element_at("_vmap", i)).alias("values"),
-        F.transform(idx, lambda i: F.element_at("_tmap", i)).alias("timestamps"),
-    )
-    return out.select(
+        f"transform({idx}, i -> element_at(_vmap, i)) AS values",
+        f"transform({idx}, i -> element_at(_tmap, i)) AS timestamps",
+    ).selectExpr(
         guid,
         "values",
         "timestamps",
-        effective_value(F.col("values")).alias("value"),
-        effective_priority(F.col("values")).alias("priority"),
-        effective_timestamp(F.col("values"), F.col("timestamps")).alias("timestamp"),
+        f"{_effective_value_sql('values')} AS value",
+        f"{_effective_priority_sql('values')} AS priority",
+        f"{_effective_timestamp_sql('values', 'timestamps')} AS timestamp",
     )
 
 
@@ -151,5 +175,5 @@ def convert_point(
         values_col, convert_slots(F.col(values_col), from_unit, to_unit)
     )
     if "value" in out.columns:
-        out = out.withColumn("value", effective_value(F.col(values_col)))
+        out = out.withColumn("value", effective_value(values_col))
     return out

@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from iot_database_spark.functions.time import epoch_us
+from iot_database_spark.functions.time import epoch_us, epoch_us_sql
 
 
 def locf_merge(
@@ -47,27 +47,31 @@ def locf_merge(
     `value` = effective (lowest-numbered non-null slot), `eff_priority`
     its slot number.
     """
-    order = [F.col(ts)] + ([F.col(tiebreak)] if tiebreak else [])
+    order = ", ".join(c for c in (ts, tiebreak) if c)
     w = (
-        W.partitionBy(guid)
-        .orderBy(*order)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
+        f"OVER (PARTITION BY {guid} ORDER BY {order} "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
-    slot_cols = [
-        F.last(
-            F.when(F.col(priority) == p, F.col(value)), ignorenulls=True
-        ).over(w).alias(f"slot_{p}")
-        for p in priorities
-    ]
-    slots = writes.select(guid, ts, priority, value, *slot_cols)
-    eff = F.coalesce(*[F.col(f"slot_{p}") for p in priorities])
-    eff_p = F.coalesce(
+    # SQL expression strings, one parse each: the same 16-slot tree built
+    # from Column calls costs a py4j round trip per node
+    slots = writes.selectExpr(
+        guid,
+        ts,
+        priority,
+        value,
         *[
-            F.when(F.col(f"slot_{p}").isNotNull(), F.lit(p))
+            f"last(CASE WHEN {priority} = {p} THEN {value} END, true) {w} "
+            f"AS slot_{p}"
             for p in priorities
-        ]
+        ],
     )
-    return slots.withColumn("eff_value", eff).withColumn("eff_priority", eff_p)
+    eff = ", ".join(f"slot_{p}" for p in priorities)
+    eff_p = ", ".join(
+        f"CASE WHEN slot_{p} IS NOT NULL THEN {p} END" for p in priorities
+    )
+    return slots.selectExpr(
+        "*", f"coalesce({eff}) AS eff_value", f"coalesce({eff_p}) AS eff_priority"
+    )
 
 
 def resample(
@@ -107,66 +111,54 @@ def resample(
         ).alias("grid_ts"),
     )
 
-    s = samples.select(
-        F.col(guid).alias(guid),
-        F.col(ts).alias("grid_ts"),
-        F.col(value).cast("double").alias("_v"),
-        F.lit(1).alias("_is_sample"),
+    s = samples.selectExpr(
+        guid, f"{ts} AS grid_ts", f"CAST({value} AS DOUBLE) AS _v", "1 AS _is_sample"
     )
-    g = grid.select(
-        guid, "grid_ts", F.lit(None).cast("double").alias("_v"), F.lit(0).alias("_is_sample")
+    g = grid.selectExpr(
+        guid, "grid_ts", "CAST(NULL AS DOUBLE) AS _v", "0 AS _is_sample"
     )
     both = s.unionByName(g)
 
     # at equal ts, order samples before grid points so "last before or at"
-    # sees a co-located sample
-    w_before = (
-        W.partitionBy(guid)
-        .orderBy(F.col("grid_ts"), F.col("_is_sample").desc())
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
+    # sees a co-located sample.
     # "first non-null at-or-after" is computed as a RUNNING last over the
     # REVERSED sort, not a [currentRow, unboundedFollowing] frame: the
     # running frame keeps O(1) state per row, where Spark evaluates an
     # unbounded-following first(ignorenulls) by scanning forward from
     # every row — O(n^2) per partition on sparse series. Same single
     # exchange; the second sort happens within partitions.
+    running = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+    w_before = (
+        f"OVER (PARTITION BY {guid} ORDER BY grid_ts, _is_sample DESC {running})"
+    )
     w_after_rev = (
-        W.partitionBy(guid)
-        .orderBy(F.col("grid_ts").desc(), F.col("_is_sample").asc())
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
+        f"OVER (PARTITION BY {guid} ORDER BY grid_ts DESC, _is_sample {running})"
     )
-    sample_ts = F.when(F.col("_is_sample") == 1, F.col("grid_ts"))
-    resolved = (
-        both.withColumn("prev_v", F.last("_v", ignorenulls=True).over(w_before))
-        .withColumn("prev_ts", F.last(sample_ts, ignorenulls=True).over(w_before))
-        .withColumn("next_v", F.last("_v", ignorenulls=True).over(w_after_rev))
-        .withColumn("next_ts", F.last(sample_ts, ignorenulls=True).over(w_after_rev))
-        .filter(F.col("_is_sample") == 0)
-        .filter(F.col("prev_ts").isNotNull())  # skip before first sample
-    )
+    sample_ts = "CASE WHEN _is_sample = 1 THEN grid_ts END"
+    resolved = both.selectExpr(
+        "*",
+        f"last(_v, true) {w_before} AS prev_v",
+        f"last({sample_ts}, true) {w_before} AS prev_ts",
+        f"last(_v, true) {w_after_rev} AS next_v",
+        f"last({sample_ts}, true) {w_after_rev} AS next_ts",
+    ).filter("_is_sample = 0 AND prev_ts IS NOT NULL")  # skip before first sample
 
-    exact = F.col("prev_ts") == F.col("grid_ts")
+    exact = "prev_ts = grid_ts"
     interpolable = (
-        F.col("next_ts").isNotNull()
-        & (F.col("next_ts") != F.col("prev_ts"))
-        & F.col("prev_v").isNotNull()
-        & F.col("next_v").isNotNull()
+        "next_ts IS NOT NULL AND next_ts != prev_ts "
+        "AND prev_v IS NOT NULL AND next_v IS NOT NULL"
     )
     frac = (
-        (epoch_us("grid_ts") - epoch_us("prev_ts")).cast("double")
-        / (epoch_us("next_ts") - epoch_us("prev_ts")).cast("double")
+        f"CAST({epoch_us_sql('grid_ts')} - {epoch_us_sql('prev_ts')} AS DOUBLE) "
+        f"/ CAST({epoch_us_sql('next_ts')} - {epoch_us_sql('prev_ts')} AS DOUBLE)"
     )
-    interp = F.col("prev_v") + (F.col("next_v") - F.col("prev_v")) * frac
-
-    return resolved.select(
+    interp = f"prev_v + (next_v - prev_v) * ({frac})"
+    return resolved.selectExpr(
         guid,
         "grid_ts",
-        F.when(exact, F.col("prev_v"))
-        .when(interpolable, interp)
-        .otherwise(F.col("prev_v"))
-        .alias("value"),
-        (~exact & interpolable).alias("interpolated"),
+        f"CASE WHEN {exact} THEN prev_v WHEN {interpolable} THEN {interp} "
+        "ELSE prev_v END AS value",
+        f"(NOT ({exact}) AND ({interpolable})) AS interpolated",
     )
 
 

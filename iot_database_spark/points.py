@@ -125,6 +125,10 @@ class PointStore:
             "chain_heads",
             "id bigint, guid string, ts timestamp, data string, hash string",
         )
+        # (source Table.df frame, frame derived from it): a derived read
+        # plan is reused while its source is the same memoised frame
+        self._state: tuple | None = None
+        self._heads: tuple | None = None
 
     def register_point(
         self,
@@ -321,10 +325,15 @@ class PointStore:
 
     def heads_view(self) -> DataFrame:
         """One row per chained guid — the current chain tips (latest
-        (ts, data, hash) per guid over the append-only heads log)."""
-        return bc.chain_heads(
-            self.chain_heads.df.select("guid", "ts", "data", "hash")
-        )
+        (ts, data, hash) per guid over the append-only heads log).
+        Reused while the log's memoised `Table.df` frame is unchanged."""
+        src = self.chain_heads.df
+        if self._heads is None or self._heads[0] is not src:
+            self._heads = (
+                src,
+                bc.chain_heads(src.select("guid", "ts", "data", "hash")),
+            )
+        return self._heads[1]
 
     def _append_chain_batch(
         self, chain_src: DataFrame, n_src: int
@@ -520,8 +529,12 @@ class PointStore:
 
     def current_state(self) -> DataFrame:
         """Per-point slot state + effective value (replay_slots over the
-        write log)."""
-        return iv.replay_slots(self.writes.df, tiebreak="id")
+        write log). The plan is built once per `point_writes` manifest: it
+        is reused while the log's memoised `Table.df` frame is unchanged."""
+        src = self.writes.df
+        if self._state is None or self._state[0] is not src:
+            self._state = (src, iv.replay_slots(src, tiebreak="id"))
+        return self._state[1]
 
     def get_series(self, start, end, interval: str | None = None) -> DataFrame:
         """GetTimeSeries equivalents: LOCF merge, or grid resample when an

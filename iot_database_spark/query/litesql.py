@@ -410,18 +410,28 @@ def _split_top_level(text: str, sep: str = ",") -> list[str]:
 def execute(db, sql: str, params: dict | None = None):
     """db.Execute equivalent over the full command surface. SELECT (and
     EXPLAIN) return a DataFrame; DML returns the affected-row count; DDL
-    returns None."""
+    returns None.
+
+    Referenced-tables rule: a SELECT registers a temp view only for the
+    database tables whose name appears as a word (case-insensitively) in
+    the literal-masked statement, so a name inside a string value never
+    counts. Each such view is (re)registered on every SELECT from
+    `db.sql_view` — the table's memoised frame under the collation
+    policy — so a view is never stale, whether the table was written
+    since the last SELECT or a caller replaced the temp view. A
+    `$query('…')` sub-query registers the tables its own statement
+    names when it runs."""
     import json as _json
 
     kw = sql.lstrip().split(None, 1)[0].upper() if sql.strip() else ""
     if kw in ("SELECT", "EXPLAIN"):
-        for t in db.list_tables():
-            # views carry the database's collation policy so string
-            # compares in the dialect follow it (Collation.cs parity)
-            db.apply_collation(db.table(t).df).createOrReplaceTempView(t)
-        # resolve $system collections to registered views (literal-masked
-        # so '$indexes' inside a string value stays data)
+        # literal-masked, so a table name or '$indexes' inside a string
+        # value stays data
         masked, lits = _mask_literals(sql)
+        words = {w.lower() for w in re.findall(r"\w+", masked)}
+        for t in db.list_tables():
+            if t.lower() in words:
+                db.sql_view(t).createOrReplaceTempView(t)
         # $query('sql') sub-queries first (SysQuery.cs:14-38): execute the
         # inner dialect SQL recursively and expose it as a view
         def subquery(m: re.Match) -> str:

@@ -198,6 +198,7 @@ class Table:
         self.foreign_keys: list[ForeignKey] = foreign_keys
         self.unique: list[str] = unique
         self.path = path
+        self._df_memo: tuple | None = None  # (key, frame) — see `df`
 
     # -- storage: versioned parquet + atomic commit log -----------------
 
@@ -229,13 +230,30 @@ class Table:
 
     @property
     def df(self) -> DataFrame:
+        """The committed rows of the current version, memoised.
+
+        Validity rule: data dirs are uuid-named and immutable, and a
+        manifest names its dirs exactly, so the frame resolved for one
+        manifest stays valid until the manifest moves. The memo holds one
+        frame per table, keyed on (session, schema string, the current
+        manifest's dir list). Every write publishes a new dir list and
+        add/drop_column a new schema string, so each misses without any
+        invalidation path; keying on the dir list rather than the version
+        number means a drop-and-recreate, which restarts at version 0,
+        never hits an old entry. Each call still reads the manifest, so
+        a commit from another process is seen at once. The empty-table
+        and bare-parquet fallbacks are not memoised."""
         v = self._current_version()
         if v < 0:
             # legacy/plain layout fallback: a bare parquet dir at `path`
             if glob.glob(os.path.join(self.path, "*.parquet")):
                 return self.db.spark.read.schema(self.schema).parquet(self.path)
             return self.db.spark.createDataFrame([], self.schema)
-        return self._dirs_df(self._manifest_dirs(v))
+        dirs = self._manifest_dirs(v)
+        key = (self.db.spark, self.schema, tuple(dirs))
+        if self._df_memo is None or self._df_memo[0] != key:
+            self._df_memo = (key, self._dirs_df(dirs))
+        return self._df_memo[1]
 
     def _stage(self, df: DataFrame) -> str:
         """Write one immutable data dir; return its path relative to the

@@ -393,7 +393,7 @@ def test_convert_point_rewrites_slots_and_effective_value(spark):
     state = spark.createDataFrame(
         [("p1", [None, "25"] + [None] * 13 + ["10", "cfg"])],
         "guid string, values array<string>",
-    ).withColumn("value", iv.effective_value(F.col("values")))
+    ).withColumn("value", iv.effective_value("values"))
     assert state.collect()[0]["value"] == "25"
 
     out = iv.convert_point(state, "degC", "degF").collect()[0]

@@ -761,3 +761,147 @@ def test_save_meta_crash_mid_dump_keeps_old_meta(db, spark, tmp_path, monkeypatc
     assert reopened.table("customers").count() == 3
     # no torn temp file is left beside the meta
     assert not [f for f in os.listdir(db.root) if ".tmp-" in f]
+
+
+# -- drop_table keeps children; the per-manifest read memo ----------------
+
+
+def test_drop_parent_removes_child_foreign_keys(db, spark, tmp_path):
+    """Dropping a parent drops in place (the reference's DropCollection):
+    children keep their rows and lose their FKs to it, so child inserts
+    keep working in the same session and after reopening, and a
+    same-name recreate reads only its own rows and constrains nothing."""
+    db.tables(
+        "notes",
+        "id bigint, customers_id bigint, body string",
+        foreign_keys=[
+            ForeignKey(column="customers_id", parent="customers", constraint="restrictive")
+        ],
+    ).insert([{"id": 1, "customers_id": 2, "body": "hi"}])
+    db.drop_table("customers")
+
+    assert db.children_of("customers") == []
+    db.table("notes").insert([{"id": 2, "customers_id": 777, "body": "orphan"}])
+    reopened = IotDatabase("testdb", str(tmp_path), spark)
+    assert reopened.table("notes").foreign_keys == []
+    reopened.table("notes").insert([{"id": 3, "customers_id": 778, "body": "x"}])
+    assert sorted(r["id"] for r in reopened.table("notes").df.collect()) == [1, 2, 3]
+    assert sorted(r["id"] for r in db.table("orders2").df.collect()) == [1, 2, 3]
+
+    db.tables("customers", "id bigint, name string, age int").insert(
+        [{"id": 50, "name": "New", "age": 1}]
+    )
+    assert [r["id"] for r in db.table("customers").df.collect()] == [50]
+    db.table("notes").insert([{"id": 4, "customers_id": 9, "body": "free"}])
+    db.table("customers").delete(F.col("id") == 50)  # no child FK left to restrict
+    assert db.table("customers").count() == 0
+
+
+def test_read_plans_see_every_write(db, spark, tmp_path):
+    """Table.df is memoised per manifest and SELECT views are built from
+    it. After every write path, compaction, vacuum, schema change,
+    rename and drop-and-recreate, the next read shows the new rows and
+    schema through Table.df and through a SELECT, in this session and
+    in a second IotDatabase opened on the same root."""
+    from datetime import datetime
+
+    from iot_database_spark.points import PointStore
+    from iot_database_spark.query.litesql import execute
+
+    def check(name, cols, rows):
+        want = [(cols, sorted(rows))] * 2
+        for d in (db, IotDatabase("testdb", str(tmp_path), spark)):
+            got = [
+                (f.columns, sorted(map(tuple, f.collect())))
+                for f in (d.table(name).df, execute(d, f"SELECT * FROM {name}"))
+            ]
+            assert got == want, (name, d is db)
+
+    cols = ["id", "name", "age"]
+    rows = {1: (1, "a", 1), 2: (2, "b", 2)}
+    t = db.tables("memo_t", "id bigint, name string, age int")
+    t.insert([dict(zip(cols, r)) for r in rows.values()])
+    check("memo_t", cols, rows.values())
+    t.insert([{"id": 3, "name": "c", "age": 3}])
+    rows[3] = (3, "c", 3)
+    check("memo_t", cols, rows.values())
+    t.delete(F.col("id") == 1)
+    del rows[1]
+    check("memo_t", cols, rows.values())
+    t.update_many({"age": F.col("age") + 10}, F.col("id") == 2)
+    rows[2] = (2, "b", 12)
+    check("memo_t", cols, rows.values())
+    t.upsert([{"id": 3, "name": "C", "age": 30}, {"id": 4, "name": "d", "age": 4}])
+    rows.update({3: (3, "C", 30), 4: (4, "d", 4)})
+    check("memo_t", cols, rows.values())
+    db.compact_table("memo_t")
+    check("memo_t", cols, rows.values())
+    t.update_many({"name": F.upper("name")}, F.col("id") == 4)
+    assert t.vacuum(keep_last=1, retention_s=0) >= 1
+    rows[4] = (4, "D", 4)
+    check("memo_t", cols, rows.values())
+
+    t.add_column("note", "string")
+    cols = cols + ["note"]
+    rows = {k: r + (None,) for k, r in rows.items()}
+    check("memo_t", cols, rows.values())
+    t.insert([{"id": 5, "name": "e", "age": 5, "note": "n"}])
+    rows[5] = (5, "e", 5, "n")
+    check("memo_t", cols, rows.values())
+    t.drop_column("age")
+    cols = ["id", "name", "note"]
+    rows = {k: (r[0], r[1], r[3]) for k, r in rows.items()}
+    check("memo_t", cols, rows.values())
+
+    db.rename_table("memo_t", "memo_r")
+    check("memo_r", cols, rows.values())
+    db.drop_table("memo_r")
+    db.tables("memo_r", "id bigint, v string").insert([{"id": 1, "v": "new"}])
+    check("memo_r", ["id", "v"], [(1, "new")])
+
+    # write_batch moves point_writes; the memoised state plan follows it
+    store = PointStore(db)
+    store.register_point("p1")
+    for minute in (1, 2):
+        store.write_batch(
+            spark.createDataFrame(
+                [("p1", datetime(2024, 1, 1, 0, minute), 9, str(minute))],
+                "guid string, ts timestamp, priority int, value string",
+            )
+        )
+        for d in (db, IotDatabase("testdb", str(tmp_path), spark)):
+            got = [
+                sorted(r["value"] for r in f.collect())
+                for f in (
+                    d.table("point_writes").df,
+                    execute(d, "SELECT value FROM point_writes"),
+                )
+            ]
+            assert got == [[str(m) for m in range(1, minute + 1)]] * 2
+        assert store.current_state().collect()[0]["value"] == str(minute)
+
+
+def test_cols_and_describe_read_the_ddl_schema(db):
+    """$cols and describe list the DDL schema; their rows equal what the
+    table's read frame reports, for every column type the tests use."""
+    from iot_database_spark.query.litesql import execute
+
+    ddl = (
+        "id bigint, i int, s string, d double, f float, b boolean, "
+        "ts timestamp, dt date, bin binary, ab array<bigint>, "
+        "ad array<double>, af array<float>, as_ array<string>, "
+        "m map<string,string>, st struct<key:string,value:string>"
+    )
+    t = db.tables("typed", ddl)
+    empty = [tuple(r) for r in db.describe("typed").collect()]
+    t.insert([{"id": 1}])
+    want = [
+        ("typed", f.name, f.dataType.simpleString(), f.nullable)
+        for f in t.df.schema.fields
+    ]
+    assert [tuple(r) for r in db.describe("typed").collect()] == want == empty
+    assert [c[1:] for c in want] == [
+        (c.split(" ", 1)[0], c.split(" ", 1)[1], True) for c in ddl.split(", ")
+    ]
+    cols = execute(db, "SELECT * FROM $cols WHERE $.table = 'typed'").collect()
+    assert [tuple(r) for r in cols] == want
