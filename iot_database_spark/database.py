@@ -74,7 +74,6 @@ class IotDatabase:
             with open(self._meta_path) as f:
                 self._meta = json.load(f)
         self._tables: dict[str, Table] = {}
-        self._views: dict[str, tuple] = {}  # name -> (source df, view) — sql_view
         self._txn: "_Transaction | None" = None
 
     # -- transactions (BEGIN/COMMIT/ROLLBACK — SqlParser.cs:24-49; WAL
@@ -204,16 +203,6 @@ class IotDatabase:
                 for f in df.schema.fields
             ]
         )
-
-    def sql_view(self, name: str) -> DataFrame:
-        """The frame the SQL dialect registers as view `name`: the
-        table's memoised `Table.df` under the collation policy, reused
-        while that source frame is the same one."""
-        df = self.table(name).df
-        hit = self._views.get(name)
-        if hit is None or hit[0] is not df:
-            hit = self._views[name] = (df, self.apply_collation(df))
-        return hit[1]
 
     _PRAGMA_DEFAULTS: dict = {
         "USER_VERSION": 0,
@@ -473,12 +462,16 @@ class IotDatabase:
         shutil.rmtree(t.path, ignore_errors=True)
         self._meta["tables"].pop(name, None)
         self._tables.pop(name, None)
-        self._views.pop(name, None)
         for child, meta in self._meta["tables"].items():
-            kept = [d for d in meta["foreign_keys"] if d["parent"] != name]
-            if len(kept) != len(meta["foreign_keys"]):
-                meta["foreign_keys"] = kept
-                self._tables.pop(child, None)  # cached FKs name the dropped parent
+            meta["foreign_keys"] = [
+                d for d in meta["foreign_keys"] if d["parent"] != name
+            ]
+            cached = self._tables.get(child)
+            if cached is not None:
+                # in place: handles taken before the drop see it too
+                cached.foreign_keys[:] = [
+                    fk for fk in cached.foreign_keys if fk.parent != name
+                ]
         self._save_meta()
 
     def rename_table(self, name: str, new_name: str) -> None:
@@ -494,12 +487,15 @@ class IotDatabase:
             _os.rename(t.path, new_path)
         self._meta["tables"][new_name] = self._meta["tables"].pop(name)
         self._tables.pop(name, None)
-        self._views.pop(name, None)
-        for child, meta in self._meta["tables"].items():
+        for meta in self._meta["tables"].values():
             for d in meta["foreign_keys"]:
                 if d["parent"] == name:
                     d["parent"] = new_name
-                    self._tables.pop(child, None)  # cached FKs name the old parent
+        for t in self._tables.values():
+            # in place: handles taken before the rename see it too
+            for fk in t.foreign_keys:
+                if fk.parent == name:
+                    fk.parent = new_name
         self._save_meta()
 
     def compact_table(self, name: str, target_files: int = 1) -> None:

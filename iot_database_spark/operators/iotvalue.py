@@ -49,6 +49,8 @@ def has_flag(flags: Column, flag: int) -> Column:
 
 
 def _effective_priority_sql(values: str) -> str:
+    """1-based priority of the first non-null slot 1..16
+    (IotValue.cs:332-343); null when no slot is set."""
     idx = (
         f"array_position(transform(slice({values}, 1, {NUM_SLOTS - 1}), "
         "v -> v IS NOT NULL), true)"
@@ -64,6 +66,7 @@ def _effective_value_sql(values: str) -> str:
 
 
 def _effective_timestamp_sql(values: str, timestamps: str) -> str:
+    """Timestamp of the effective slot (IotValue.cs:348-358)."""
     return f"try_element_at({timestamps}, {_effective_priority_sql(values)})"
 
 
@@ -73,19 +76,6 @@ def effective_value(values: str) -> Column:
     participates). try_element_at: an all-null point must yield NULL,
     not an ANSI out-of-bounds error."""
     return F.expr(_effective_value_sql(values))
-
-
-def effective_priority(values: str) -> Column:
-    """1-based priority of the first non-null slot 1..16 of the array
-    column named `values` (IotValue.cs:332-343); null when no slot is
-    set."""
-    return F.expr(_effective_priority_sql(values))
-
-
-def effective_timestamp(values: str, timestamps: str) -> Column:
-    """Timestamp of the effective slot (IotValue.cs:348-358), for the
-    array columns named `values` and `timestamps`."""
-    return F.expr(_effective_timestamp_sql(values, timestamps))
 
 
 def write_allowed(priority: Column, flags: Column) -> Column:

@@ -125,10 +125,9 @@ class PointStore:
             "chain_heads",
             "id bigint, guid string, ts timestamp, data string, hash string",
         )
-        # (source Table.df frame, frame derived from it): a derived read
-        # plan is reused while its source is the same memoised frame
+        # (source Table.df frame, state plan derived from it): the plan is
+        # reused while its source is the same memoised frame
         self._state: tuple | None = None
-        self._heads: tuple | None = None
 
     def register_point(
         self,
@@ -325,15 +324,10 @@ class PointStore:
 
     def heads_view(self) -> DataFrame:
         """One row per chained guid — the current chain tips (latest
-        (ts, data, hash) per guid over the append-only heads log).
-        Reused while the log's memoised `Table.df` frame is unchanged."""
-        src = self.chain_heads.df
-        if self._heads is None or self._heads[0] is not src:
-            self._heads = (
-                src,
-                bc.chain_heads(src.select("guid", "ts", "data", "hash")),
-            )
-        return self._heads[1]
+        (ts, data, hash) per guid over the append-only heads log)."""
+        return bc.chain_heads(
+            self.chain_heads.df.select("guid", "ts", "data", "hash")
+        )
 
     def _append_chain_batch(
         self, chain_src: DataFrame, n_src: int

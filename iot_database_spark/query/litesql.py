@@ -415,10 +415,10 @@ def execute(db, sql: str, params: dict | None = None):
     Referenced-tables rule: a SELECT registers a temp view only for the
     database tables whose name appears as a word (case-insensitively) in
     the literal-masked statement, so a name inside a string value never
-    counts. Each such view is (re)registered on every SELECT from
-    `db.sql_view` — the table's memoised frame under the collation
-    policy — so a view is never stale, whether the table was written
-    since the last SELECT or a caller replaced the temp view. A
+    counts. Each such view is (re)registered on every SELECT from the
+    table's memoised `Table.df` under the collation policy, so a view is
+    never stale, whether the table was written since the last SELECT or
+    a caller replaced the temp view. A
     `$query('…')` sub-query registers the tables its own statement
     names when it runs."""
     import json as _json
@@ -431,7 +431,9 @@ def execute(db, sql: str, params: dict | None = None):
         words = {w.lower() for w in re.findall(r"\w+", masked)}
         for t in db.list_tables():
             if t.lower() in words:
-                db.sql_view(t).createOrReplaceTempView(t)
+                # views carry the database's collation policy so string
+                # compares in the dialect follow it (Collation.cs parity)
+                db.apply_collation(db.table(t).df).createOrReplaceTempView(t)
         # $query('sql') sub-queries first (SysQuery.cs:14-38): execute the
         # inner dialect SQL recursively and expose it as a view
         def subquery(m: re.Match) -> str:

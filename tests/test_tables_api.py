@@ -158,15 +158,19 @@ def test_ddl_drop_rename_compact(db):
 def test_rename_table_carries_foreign_keys(db, spark, tmp_path):
     """Renaming a parent moves every child FK with it: a restrictive
     delete still raises, and child inserts validate against the new
-    name, in the same session and after reopening the database."""
-    db.tables(
+    name, in the same session and after reopening the database, also
+    through a child handle taken before the rename."""
+    notes = db.tables(
         "notes",
         "id bigint, customers_id bigint, body string",
         foreign_keys=[
             ForeignKey(column="customers_id", parent="customers", constraint="restrictive")
         ],
-    ).insert([{"id": 1, "customers_id": 2, "body": "hi"}])
+    )
+    notes.insert([{"id": 1, "customers_id": 2, "body": "hi"}])
     db.rename_table("customers", "people")
+    with pytest.raises(ConstraintViolation, match="missing people.id"):
+        notes.insert([{"id": 99, "customers_id": 777, "body": "x"}])
 
     for new_id, d in ((2, db), (3, IotDatabase("testdb", str(tmp_path), spark))):
         assert [c for c, _ in d.children_of("people")] == ["orders2", "addresses", "notes"]
@@ -770,18 +774,20 @@ def test_drop_parent_removes_child_foreign_keys(db, spark, tmp_path):
     """Dropping a parent drops in place (the reference's DropCollection):
     children keep their rows and lose their FKs to it, so child inserts
     keep working in the same session and after reopening, and a
-    same-name recreate reads only its own rows and constrains nothing."""
-    db.tables(
+    same-name recreate reads only its own rows and constrains nothing.
+    A child handle taken before the drop sees it too."""
+    notes = db.tables(
         "notes",
         "id bigint, customers_id bigint, body string",
         foreign_keys=[
             ForeignKey(column="customers_id", parent="customers", constraint="restrictive")
         ],
-    ).insert([{"id": 1, "customers_id": 2, "body": "hi"}])
+    )
+    notes.insert([{"id": 1, "customers_id": 2, "body": "hi"}])
     db.drop_table("customers")
 
     assert db.children_of("customers") == []
-    db.table("notes").insert([{"id": 2, "customers_id": 777, "body": "orphan"}])
+    notes.insert([{"id": 2, "customers_id": 777, "body": "orphan"}])
     reopened = IotDatabase("testdb", str(tmp_path), spark)
     assert reopened.table("notes").foreign_keys == []
     reopened.table("notes").insert([{"id": 3, "customers_id": 778, "body": "x"}])
@@ -792,7 +798,7 @@ def test_drop_parent_removes_child_foreign_keys(db, spark, tmp_path):
         [{"id": 50, "name": "New", "age": 1}]
     )
     assert [r["id"] for r in db.table("customers").df.collect()] == [50]
-    db.table("notes").insert([{"id": 4, "customers_id": 9, "body": "free"}])
+    notes.insert([{"id": 4, "customers_id": 9, "body": "free"}])
     db.table("customers").delete(F.col("id") == 50)  # no child FK left to restrict
     assert db.table("customers").count() == 0
 
