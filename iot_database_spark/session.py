@@ -45,6 +45,18 @@ def get_spark(app_name: str = "iot_database_spark", master: str | None = None) -
     - UTC session timezone: the reference stores ISO-8601/UTC timestamps
       (Iot.Database/IotValue.cs ToStringValue), and oracle comparisons
       must not depend on host timezone.
+    - DataFrame call-site capture off
+      (`spark.python.sql.dataFrameDebugging.enabled=false`): with it on,
+      every `functions.*`/`Column` call from Python walks the Python
+      stack, imports IPython on first use (~27 MB RSS) and sends about
+      nine extra py4j commands (origin set/clear, active-session and
+      conf lookups), about half of all commands of a plan build. Off,
+      analysis errors keep their error class and message and lose only
+      the "== DataFrame == ... was called from file:line" block. The
+      conf is static, and PySpark reads it once per process
+      (`pyspark.errors.utils._enable_debugging_cache`) at the first such
+      call, so it must be in the builder of the first session, before
+      any `Column` is made.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 8)
     # Scan-split size. The 128 MB default is right at cluster scale
@@ -67,6 +79,7 @@ def get_spark(app_name: str = "iot_database_spark", master: str | None = None) -
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
@@ -233,8 +246,16 @@ def _apply_runtime_confs(spark: SparkSession) -> None:
     - UTC session timezone: oracle comparisons must not depend on the host
       JVM default timezone, and epoch_us() on LTZ columns assumes UTC
       (NTZ columns — the testdata's timestamps — are tz-independent).
-    - Arrow: the Pandas-UDF paths (chain fold, stateful streaming, text
-      stats, BPE) assume Arrow batches.
+    - Arrow: the Pandas-UDF paths (chain fold, stateful streaming)
+      assume Arrow batches.
+
+    The rest are for performance parity with get_spark(). One of its
+    confs cannot be re-applied here: DataFrame call-site capture
+    (`spark.python.sql.dataFrameDebugging.enabled`) is a static conf, so
+    `conf.set` on a live session raises CANNOT_MODIFY_STATIC_CONFIG. A
+    session built elsewhere keeps PySpark's default (capture on), and
+    pays its extra py4j commands per `Column`/`functions` call; see
+    get_spark().
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 8)
     for key, val in (

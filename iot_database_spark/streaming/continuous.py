@@ -141,10 +141,15 @@ class ContinuousQueryService:
 
         from pyspark import inheritable_thread_target
 
-        # classic-mode form: wraps the callable so each worker thread
-        # inherits the driver thread's JVM-local properties (job group /
-        # description), keeping concurrent jobs attributable in the UI
-        target = inheritable_thread_target(self.execute)
+        # each worker thread inherits the driver thread's JVM-local
+        # properties (job group / description) and the session's tags,
+        # so its jobs stay attributable and interruptTag cancels them;
+        # without the session PySpark skips the tags and warns on every
+        # call. With pinned-thread mode off (PYSPARK_PIN_THREAD=false)
+        # there are no per-thread JVM properties, and PySpark hands the
+        # session back instead of a wrapper.
+        wrap = inheritable_thread_target(self.spark)
+        target = wrap(self.execute) if callable(wrap) else self.execute
         with ThreadPoolExecutor(max_workers=min(4, len(names))) as pool:
             futures = [pool.submit(target, n) for n in names]
             for f in futures:  # submission order == sorted-name order

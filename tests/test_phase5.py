@@ -3,6 +3,12 @@ unit conversion."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import warnings
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -50,6 +56,56 @@ def test_tick_respects_intervals(spark):
     assert runs.count("lazy") == 1
     svc.read("lazy")
     assert runs.count("lazy") == 2               # interval 0 -> always re-runs
+
+
+def test_concurrent_tick_inherits_session_tags_without_warning(spark):
+    # a tick with two due queries runs them on worker threads; each must
+    # carry the session's tags (so interruptTag reaches its jobs) and
+    # the wrapping must not warn on every tick
+    svc = ContinuousQueryService(spark)
+    seen: dict[str, set[str]] = {}
+
+    def make(name):
+        def q(s):
+            seen[name] = set(s.getTags())
+            return s.range(3).toDF("v")
+        return q
+
+    svc.add_query(QueryConfiguration("a", make("a"), interval_ms=1000))
+    svc.add_query(QueryConfiguration("b", make("b"), interval_ms=1000))
+    spark.addTag("cq-tick")
+    try:
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            assert svc.tick(now=1000.0) == ["a", "b"]
+    finally:
+        spark.removeTag("cq-tick")
+    assert seen == {"a": {"cq-tick"}, "b": {"cq-tick"}}
+
+
+def test_concurrent_tick_with_pinned_threads_off():
+    # PYSPARK_PIN_THREAD=false makes inheritable_thread_target(session)
+    # return the session itself, not a wrapper; the tick must still run
+    script = (
+        "from iot_database_spark.session import get_spark\n"
+        "from iot_database_spark.streaming.continuous import "
+        "ContinuousQueryService, QueryConfiguration\n"
+        "svc = ContinuousQueryService(get_spark('pin_off'))\n"
+        "for n in 'ab':\n"
+        "    svc.add_query(QueryConfiguration(n, lambda s: s.range(3).toDF('v'), 1000))\n"
+        "print(svc.tick(now=1000.0))\n"
+    )
+    env = {**os.environ, "PYSPARK_PIN_THREAD": "false", "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=Path(__file__).resolve().parent.parent,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip().splitlines()[-1] == "['a', 'b']"
 
 
 def test_callbacks_and_failures(spark):
