@@ -103,7 +103,6 @@ HEADLINE = [
     "embedding_quantize_int8",
     "ann_int8_cosine",
     "stream_stream_time_join",
-    "decontaminate_minhash",
     "ann_two_stage_rerank",
     "event_transition_matrix",
     "ts_seasonal_baseline",
@@ -112,15 +111,8 @@ HEADLINE = [
     "vector_filtered_topk",
     "vector_multi_query_topk",
     "dedup_ngram_containment",
-    "corpus_ngram_novelty",
     "event_path_topk",
-    "decontaminate_eval_leak_report",
     "ts_cusum_drift",
-    # round 11 additions
-    "dedup_span_exact",
-    "dedup_span_removal",
-    "dedup_substring_suffix",
-    "decontaminate_fixed_eval",
 ]
 
 

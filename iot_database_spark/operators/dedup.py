@@ -17,7 +17,6 @@ built Spark-first:
                         bound pair fan-out (the classic skew guard: a
                         shingle appearing in half the corpus would
                         otherwise quadratically explode)
-- embedding_neardup     cosine >= threshold within blocking keys
 
 Scale notes: minhash signatures are computed per-row with higher-order
 functions (codegen'd, linear scan). LSH banding turns all-pairs O(n²)
@@ -28,8 +27,6 @@ scan or a keyed shuffle — nothing driver-side.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -37,58 +34,29 @@ from iot_database_spark.operators.hashing import hash64, xor_permute
 
 
 def _materialize_mode(master: str | None) -> str:
-    """Resolve the heavy-stream materialization strategy (r12 verdict
-    task #4 — the r11 design hard-coded localCheckpoint, which is a
-    job-failing liability on executor loss in a multi-executor fleet).
-
-    SPARK_GRAFT_MATERIALIZE pins it explicitly:
-      local    — localCheckpoint (fastest; blocks die with an executor)
-      reliable — checkpoint() to the reliable checkpoint dir
-      persist2 — persist(MEMORY_AND_DISK_2), eager (replicated blocks)
-    Default ("auto", read at CALL time): local[*] masters — where every
-    "executor" is a thread in the one JVM and executor loss means the
-    whole job is gone anyway — keep localCheckpoint; any other master
-    gets persist2, so a cluster deployment is recompute-safe without
-    editing the module."""
-    mode = (os.environ.get("SPARK_GRAFT_MATERIALIZE") or "auto").lower()
-    if mode == "auto":
-        return "local" if (master or "").startswith("local") else "persist2"
-    if mode not in ("local", "reliable", "persist2"):
-        raise ValueError(
-            f"SPARK_GRAFT_MATERIALIZE={mode!r}: expected "
-            "local | reliable | persist2 (or unset for auto)"
-        )
-    return mode
+    """The stream materialization strategy for a Spark master: local[*]
+    masters, where every "executor" is a thread in the one JVM and
+    executor loss means the whole job is gone anyway, use
+    localCheckpoint ("local"); any other master gets replicated persist
+    ("persist2"), so a cluster deployment is recompute-safe."""
+    return "local" if (master or "").startswith("local") else "persist2"
 
 
 def _materialize_once(df: DataFrame) -> DataFrame:
-    """Eagerly materialize an exploded span/shingle stream so every
+    """Eagerly materialize an exploded shingle stream so every
     downstream consumer reads stored blocks instead of re-running the
-    explode (the exact recompute that sank the r11 groupBy+join-back
-    A/B: 2 Generates, 5 Exchanges). The stream is shuffle-input-sized
-    scratch data, so the default strategy on local masters is
-    localCheckpoint — written node-locally with no network hop, freed
-    by the ContextCleaner when the returned frame is GC'd. On any
-    non-local master the default switches to replicated persist, and
-    SPARK_GRAFT_MATERIALIZE overrides either way (_materialize_mode):
-    the plan shape downstream is identical across strategies, only the
+    explode. The stream is shuffle-input-sized scratch data: on local
+    masters it is localCheckpointed (written node-locally with no
+    network hop, freed by the ContextCleaner when the returned frame is
+    GC'd); on any other master it is persisted MEMORY_AND_DISK_2. The
+    plan shape downstream is identical either way, only the
     executor-loss story differs."""
-    spark = df.sparkSession
-    mode = _materialize_mode(spark.sparkContext.master)
-    if mode == "local":
+    if _materialize_mode(df.sparkSession.sparkContext.master) == "local":
         return df.localCheckpoint(eager=True)
-    if mode == "reliable":
-        sc = spark.sparkContext
-        if sc.getCheckpointDir() is None:
-            wh = spark.conf.get(
-                "spark.sql.warehouse.dir", "spark-warehouse"
-            )
-            sc.setCheckpointDir(f"{wh}/_span_checkpoints")
-        return df.checkpoint(eager=True)
     from pyspark import StorageLevel
 
     out = df.persist(StorageLevel.MEMORY_AND_DISK_2)
-    out.count()  # eager, mirroring the checkpoint modes
+    out.count()  # eager, like localCheckpoint
     return out
 
 
@@ -494,55 +462,6 @@ def containment_pairs(
         max_df_frac=max_df_frac,
         broadcast_sizes_max_docs=broadcast_sizes_max_docs,
         _score="containment",
-    )
-
-
-def embedding_neardup_pairs(
-    df: DataFrame,
-    block_col: str,
-    embedding: str = "embedding",
-    id_col: str = "vec_id",
-    min_cosine: float = 0.9,
-    max_block: int | None = 4096,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs within a blocking key
-    (deterministic blocking bounds the pair space; at scale the block
-    key is an LSH bucket or IVF centroid).
-
-    max_block is the same skew guard as lsh_candidate_pairs'
-    max_bucket (r10 cap audit): a block wider than this emits a
-    quadratic pair blow-up, so it is DROPPED — a block that wide means
-    the blocking key is too coarse for the corpus (e.g. a class label
-    on a 100x-grown corpus) and the caller should re-block on an
-    LSH/IVF bucket key; pass None to disable for provably-bounded
-    keys."""
-    from iot_database_spark.operators.vector import cosine_similarity
-
-    a = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(embedding).alias("emb_a"),
-        F.col(block_col).alias("blk"),
-    )
-    b = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(embedding).alias("emb_b"),
-        F.col(block_col).alias("blk"),
-    )
-    if max_block is not None:
-        wide = (
-            df.groupBy(F.col(block_col).alias("blk"))
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_block)
-            .select("blk")
-        )
-        # pruning one side kills every pair of an over-wide block
-        a = a.join(F.broadcast(wide), "blk", "left_anti")
-    return (
-        a.join(b, "blk")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", cosine_similarity(F.col("emb_a"), F.col("emb_b")))
-        .filter(F.col("cosine") >= min_cosine)
-        .select("id_a", "id_b", "blk", "cosine")
     )
 
 

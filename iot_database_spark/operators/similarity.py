@@ -169,13 +169,13 @@ def ivf_search_cosine(
         assigned["bucket"] == probed["centroid_id"],
         "left_semi",
     )
-    scored = candidates.withColumn(
-        "relevance", cosine_similarity(F.col(embedding), query_vec)
+    scored = candidates.withColumn("_qv", query_vec).withColumn(
+        "relevance", cosine_similarity(embedding, "_qv")
     )
     return (
         scored.orderBy(F.col("relevance").desc(), F.col(id_col).asc())
         .limit(k)
-        .drop(embedding)
+        .drop(embedding, "_qv")
     )
 
 

@@ -12,12 +12,19 @@ Reference surface:
 
 Spark-first design: distances are built-in higher-order-function
 expressions over array<float> columns — JVM-side, codegen'd, no Python.
-Exact determinism across engines: element products are summed by an
-ORDERED left fold (F.aggregate walks the array sequentially; DuckDB's
-list_reduce folds the same way), so both engines perform the identical
-sequence of IEEE double additions and produce bit-identical results.
-(A plain SUM over unnested elements would not — aggregation order is
-engine-dependent.)
+The cosine is written as ONE Spark SQL string and parsed once by
+F.expr: building it from Python-lambda F.aggregate/F.zip_with/
+F.transform calls costs a py4j round trip per node, which dominated
+plan building on small interactive searches. Exact determinism across
+engines: element products are summed by an ORDERED left fold
+(`aggregate(products, 0D, (acc, v) -> acc + v)` walks the array
+sequentially; DuckDB's list_reduce folds the same way), so both engines
+perform the identical sequence of IEEE double additions and produce
+bit-identical results. (A plain SUM over unnested elements would not —
+aggregation order is engine-dependent. The accumulator is written `0D`
+because `0.0` in Spark SQL is a decimal.) A zero vector has no cosine:
+the division is a try_divide, so its relevance is NULL instead of an
+ANSI DIVIDE_BY_ZERO failing the whole search.
 
 Scale path: brute-force is embarrassingly parallel (scan + local top-k +
 global top-k merge: Spark's TakeOrderedAndProject). For 100 TB an IVF
@@ -36,21 +43,30 @@ def _seq_sum(products: Column) -> Column:
     return F.aggregate(products, F.lit(0.0), lambda acc, v: acc + v)
 
 
-def dot(a: Column, b: Column) -> Column:
-    return _seq_sum(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
+def _seq_sum_sql(products: str) -> str:
+    """_seq_sum as a Spark SQL expression string."""
+    return f"aggregate({products}, 0D, (acc, v) -> acc + v)"
+
+
+def dot(a: str, b: str) -> str:
+    """SQL dot product of two array expressions."""
+    return _seq_sum_sql(
+        f"zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE))"
     )
 
 
-def norm_sq(a: Column) -> Column:
-    return _seq_sum(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double"))
+def norm_sq(a: str) -> str:
+    """SQL squared norm of an array expression."""
+    return _seq_sum_sql(f"transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")
+
+
+def cosine_similarity(a: str, b: str) -> Column:
+    """dot / (|a| * |b|)  (IotVectorDb.ComputeCosineSimilarity) over two
+    SQL array expressions, e.g. "embedding" or "slice(embedding, 1, 16)";
+    NULL when either vector is zero."""
+    return F.expr(
+        f"try_divide({dot(a, b)}, sqrt({norm_sq(a)}) * sqrt({norm_sq(b)}))"
     )
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """dot / (|a| * |b|)  (IotVectorDb.ComputeCosineSimilarity)."""
-    return dot(a, b) / (F.sqrt(norm_sq(a)) * F.sqrt(norm_sq(b)))
 
 
 def l2_distance_sq(a: Column, b: Column) -> Column:
@@ -73,15 +89,16 @@ def search_cosine(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Brute-force cosine top-k (IotVectorDb.cs:244-316). Results exclude
-    the embedding column, like the reference strips embeddings."""
-    scored = items.withColumn(
-        "relevance", cosine_similarity(F.col(embedding), query_vec)
+    the embedding column, like the reference strips embeddings. A zero
+    stored or query vector scores NULL and never passes min_score."""
+    scored = items.withColumn("_qv", query_vec).withColumn(
+        "relevance", cosine_similarity(embedding, "_qv")
     )
     return (
         scored.filter(F.col("relevance") >= min_score)
         .orderBy(F.col("relevance").desc(), F.col(id_col))
         .limit(limit)
-        .drop(embedding)
+        .drop(embedding, "_qv")
     )
 
 

@@ -6,7 +6,7 @@ Query vector = the embedding of vec_id 0 (derived in-query on both sides;
 the reference's API takes a caller-provided vector).
 
 Determinism: dot products / norms are ORDERED left folds in double on
-both sides (Spark F.aggregate ≡ DuckDB list_reduce) — identical IEEE
+both sides (Spark aggregate ≡ DuckDB list_reduce) — identical IEEE
 addition sequences, bit-identical results. See operators/vector.py.
 """
 
@@ -19,7 +19,7 @@ from iot_database_spark.operators import vector as vec
 from iot_database_spark.registry import load_views, register
 
 # DuckDB-side dot/norm machinery: ordered left folds over per-dimension
-# product lists — the same addition sequence Spark's F.aggregate performs.
+# product lists — the same addition sequence Spark's aggregate performs.
 # 0.0 is prepended so the fold is ((0+p1)+p2)+..., matching the Spark
 # initial accumulator exactly.
 _ORACLE_SCORED = """
@@ -75,7 +75,7 @@ def vector_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine search, minRelevanceScore 0.55, limit 150 — the
     reference's defaults (IotVectorDb.cs:244,263)."""
     scored = _scored(spark, sf_dir).withColumn(
-        "relevance", vec.cosine_similarity(F.col("embedding"), F.col("qv"))
+        "relevance", vec.cosine_similarity("embedding", "qv")
     )
     return (
         scored.filter(F.col("relevance") >= 0.55)
@@ -159,7 +159,7 @@ def vector_upsert_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _duck_fold(a: str, b: str, mode: str, dims: int = 64) -> str:
-    """DuckDB ordered-fold dot/l2 text mirroring vector.py's F.aggregate.
+    """DuckDB ordered-fold dot/l2 text mirroring vector.py's aggregate.
     `dims` bounds the fold (prefix folds for two-stage coarse search)."""
     if mode == "dot":
         prod = f"CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)"
@@ -273,7 +273,7 @@ def ann_two_stage_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute force (VectorCollection.SearchCosine) — this is the declared
     scale superset.
 
-    Determinism: both stages are ordered double folds (F.aggregate ==
+    Determinism: both stages are ordered double folds (aggregate ==
     list_reduce) with unique (score, vec_id) sort keys, so both LIMIT
     boundaries are engine-exact. Plan: broadcast 1-row query,
     TakeOrderedAndProject(100) -> per-row fold -> TakeOrderedAndProject(10)
@@ -287,21 +287,21 @@ def ann_two_stage_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").cast("bigint").alias("label"),
     )
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("_qv"))
-    pref = lambda c: F.slice(c, 1, _RERANK_DIMS)  # noqa: E731
     coarse = (
         emb.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
         .withColumn(
             "coarse_score",
-            vec.cosine_similarity(pref(F.col("embedding")), pref(F.col("_qv"))),
+            vec.cosine_similarity(
+                f"slice(embedding, 1, {_RERANK_DIMS})",
+                f"slice(_qv, 1, {_RERANK_DIMS})",
+            ),
         )
         .orderBy(F.col("coarse_score").desc(), F.col("vec_id"))
         .limit(_RERANK_COARSE_K)
     )
     return (
-        coarse.withColumn(
-            "relevance", vec.cosine_similarity(F.col("embedding"), F.col("_qv"))
-        )
+        coarse.withColumn("relevance", vec.cosine_similarity("embedding", "_qv"))
         .orderBy(F.col("relevance").desc(), F.col("vec_id"))
         .limit(10)
         .select("vec_id", "label", "relevance")
@@ -353,7 +353,7 @@ def vector_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring work. TakeOrderedAndProject keeps top-k local+merge as in
     vector_l2_topk."""
     scored = _scored(spark, sf_dir).filter(F.col("label") == 2).withColumn(
-        "relevance", vec.cosine_similarity(F.col("embedding"), F.col("qv"))
+        "relevance", vec.cosine_similarity("embedding", "qv")
     )
     return (
         scored.filter(F.col("relevance") >= 0.2)
@@ -418,9 +418,7 @@ def vector_multi_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qid",
             "vec_id",
             "label",
-            vec.cosine_similarity(F.col("embedding"), F.col("qv")).alias(
-                "relevance"
-            ),
+            vec.cosine_similarity("embedding", "qv").alias("relevance"),
         )
     )
     rn = F.row_number().over(

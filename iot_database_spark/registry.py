@@ -21,19 +21,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# oracle values are SQL strings, or zero-arg callables producing one —
-# the lazy form exists for oracles parameterized by call-time state
-# (e.g. SPARK_GRAFT_DECON_EVAL_PATH, resolved when the driver asks for
-# the oracle rather than baked at import — r12 verdict task #5)
 _QUERIES: dict[str, QueryFn] = {}
-_ORACLES: dict[str, "str | Callable[[], str]"] = {}
+_ORACLES: dict[str, str] = {}
 
 
-def register(
-    name: str, oracle: "str | Callable[[], str]"
-) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register a driver-visible query and its oracle SQL — a
-    string, or a zero-arg callable resolved at oracles() time."""
+def register(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
+    """Decorator: register a driver-visible query and its oracle SQL."""
 
     def deco(fn: QueryFn) -> QueryFn:
         _QUERIES[name] = fn
@@ -50,9 +43,9 @@ def register(
 # round's ordering from the recorded CORRECTNESS_r*.json artifacts
 # (reds first, then never-graded, then oldest-green-first).
 #
-# The tuple below is the planner's output verbatim. With 120
+# The tuple below is the planner's output verbatim. With 111
 # registered queries, a 50-slot window and the 3-round evidence-age
-# limit, the rotation has 30 slots of slack: up to 30 new registrations
+# limit, the rotation has 39 slots of slack: up to 39 new registrations
 # (or same-round re-grades after a semantics change) fit before one
 # needs a slot freed by RETIRING a query — the policy is mechanical:
 # scripts/plan_rotation.py (r11 verdict task #6).
@@ -84,7 +77,6 @@ _PRIORITY: tuple[str, ...] = (
     "dedup_cluster_assign",  # r12 green
     "dedup_repeated_ngrams",  # r12 green
     "dedup_ngram_containment",  # r12 green
-    "corpus_ngram_novelty",  # r12 green
     "zorder_key_events",  # r12 green
     "stream_rollup_to_table",  # r12 green
     "stream_exact_dedup",  # r12 green
@@ -107,6 +99,7 @@ _PRIORITY: tuple[str, ...] = (
     "distinct_op",  # r13 green
     "count_exists_minmax",  # r13 green
     "rollup_agg",  # r13 green
+    "join2_orders_customer",  # r13 green
 )
 
 
@@ -123,10 +116,7 @@ def queries() -> dict[str, QueryFn]:
 
 def oracles() -> dict[str, str]:
     _ensure_loaded()
-    return {
-        name: (v() if callable(v) else v)
-        for name, v in _ordered(_ORACLES).items()
-    }
+    return _ordered(_ORACLES)
 
 
 _LOADED = False

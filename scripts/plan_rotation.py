@@ -94,22 +94,13 @@ def evidence(rounds: dict[int, dict]) -> dict[str, tuple[int, bool]]:
 EVIDENCE_AGE_LIMIT = 3
 SLOTS = 50
 RETIREMENT_CANDIDATES: tuple[str, ...] = (
-    # CONSUMED r13: text_ngram_lm_score (the bigram LM variant) retired
-    # to seat dedup_substring_suffix; the n-gram LM module has since
-    # been deleted with the rest of the text-stats queries.
-    #
     # explicit-cap variant of dedup.jaccard_pairs — the headline
     # dedup_ngram_jaccard (fractional guard) and dedup_ngram_containment
-    # keep the library path graded; probe_cap_binding.py measures the
-    # cap itself
+    # keep the library path graded
     "dedup_ngram_jaccard_capped",
     # batch wrapper over the same cosine top-k join that
     # vector_cosine_topk and vector_filtered_topk keep under evidence
     "vector_multi_query_topk",
-    # %-50 corpus-carve decontamination variant: the SAME banded pair
-    # generation stays graded via decontaminate_eval_leak_report (its
-    # aggregate) and decontaminate_fixed_eval (the production shape)
-    "decontaminate_minhash",
 )
 
 

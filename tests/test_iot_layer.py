@@ -234,6 +234,17 @@ def test_vector_search_known_geometry(spark):
     within = vec.search_l2_radius(items, q, radius=1.5).collect()
     assert {r["vec_id"] for r in within} == {1, 2, 3}
 
+    # a zero vector has no cosine: a zero stored row scores NULL and is
+    # left out (under ANSI the division used to fail the whole search),
+    # and a zero query matches nothing
+    with_zero = items.union(
+        spark.createDataFrame([(5, [0.0, 0.0], "origin")], items.schema)
+    )
+    every = vec.search_cosine(with_zero, q, min_score=-1.0, limit=10).collect()
+    assert [r["vec_id"] for r in every] == [1, 3, 2, 4]
+    zero_q = F.array(F.lit(0.0), F.lit(0.0))
+    assert vec.search_cosine(items, zero_q, min_score=-1.0).collect() == []
+
 
 # --- TSDB extras: as-of join, rollup, gaps, rate ---------------------------
 

@@ -245,10 +245,8 @@ _SF1_SUBSET = (
     "approx_sketch_accuracy",
     # round-8 addition: session-window streaming
     "stream_sessionization",
-    # round-9 additions: batched vector search, shingle novelty,
-    # session paths
+    # round-9 additions: batched vector search, session paths
     "vector_multi_query_topk",
-    "corpus_ngram_novelty",
     "event_path_topk",
 )
 

@@ -225,84 +225,3 @@ def test_round6_corpus_sized_broadcasts_are_size_gated(spark, sf):
         assert audit.uses_broadcast_join(small_j)
     finally:
         spark.conf.set(key, old)
-
-
-def test_round11_span_and_fixed_eval_plan_shapes(spark, sf):
-    """The span registrations keep their documented scale shapes —
-    updated for the r12 SKEW-PROOF rewrite (r11 verdict finding #1):
-    per-span stats now come from partial-aggregated groupBy over a
-    once-materialized stream, NEVER from a window partitioned by the
-    Zipf-distributed span key (AQE cannot skew-split windows, so the
-    r11 window form stragglered on hot spans —
-    scripts/probe_span_skew.py measures the cliff). No nested-loop or
-    cartesian join anywhere."""
-    # span removal: the corpus posexplode runs ONCE, at
-    # localCheckpoint materialization — so it appears NOWHERE in the
-    # final plan, which reads Scan ExistingRDD blocks; the only
-    # Generate left is the tiny per-removed-occurrence position
-    # expansion. Stats join back via a skew-splittable (or
-    # AQE-broadcast) join, never a window.
-    rm = _Q["dedup_span_removal"](spark, sf)
-    plan = rm._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("posexplode") == 0
-    assert plan.count("Generate") == 1
-    assert plan.count("Window") == 0
-    assert plan.count("Scan ExistingRDD") >= 2  # materialized stream, read twice
-    assert "BroadcastNestedLoop" not in plan and "CartesianProduct" not in plan
-    assert audit.count_exchanges(rm) <= 4
-    assert not audit.uses_python_udf(rm)
-    # span profile: doc-level hash arrays materialize once; df stats
-    # via partial-agg groupBy; the min_doc trick makes the only join
-    # doc-sized vs doc-sized — no window, no full-stream join-back
-    prof = _Q["dedup_span_exact"](spark, sf)
-    pplan = prof._jdf.queryExecution().executedPlan().toString()
-    assert pplan.count("Generate") == 1  # one explode, from materialized arrays
-    assert pplan.count("Window") == 0
-    assert pplan.count("Scan ExistingRDD") >= 2
-    assert "BroadcastNestedLoop" not in pplan and "CartesianProduct" not in pplan
-    assert not audit.uses_python_udf(prof)
-    # novelty: same two-phase shape (explode ran at materialization)
-    nv = _Q["corpus_ngram_novelty"](spark, sf)
-    nplan = nv._jdf.queryExecution().executedPlan().toString()
-    assert nplan.count("Window") == 0
-    assert nplan.count("Generate") == 0
-    assert "BroadcastNestedLoop" not in nplan and "CartesianProduct" not in nplan
-    assert not audit.uses_python_udf(nv)
-    # fixed-eval decon: the constant-size eval side broadcasts, the
-    # train corpus never re-shuffles onto the eval axis
-    fx = _Q["decontaminate_fixed_eval"](spark, sf)
-    assert audit.uses_broadcast_join(fx)
-    fplan = fx._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoop" not in fplan and "CartesianProduct" not in fplan
-    assert not audit.uses_python_udf(fx)
-
-
-def test_substring_suffix_plan_shape(spark, sf):
-    """The r13 sorted-suffix profile is the ONE place a window over
-    suffix groups is legal — because every partition entering it is
-    width-capped by the census routing (<= SUFFIX_MAX_BUCKET rows) and
-    singleton groups (the ~99.9% majority) are dropped before the sort.
-    Assert the r13.1 documented shape: the SLIM (id, k) stream is
-    materialized and read more than once (census + totals: Scan
-    ExistingRDD >= 2); the wide sufstr stream is NOT stored — it is
-    rebuilt lazily (exactly the Generate explodes of the dup branch in
-    the final plan) and joined against the duplicated-key set as a
-    BROADCAST hash join at test scale (the counted gate), so no
-    corpus-sized wide stream is shuffled; no nested-loop/cartesian
-    join; no Python evaluation."""
-    from iot_database_spark.operators import dedup_queries as dq
-
-    df = _Q["dedup_substring_suffix"](spark, sf)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # slim stream materialized once, consumed >= twice
-    assert plan.count("Scan ExistingRDD") >= 2
-    # the sufstr rebuild is lazy: its explode appears in the final plan
-    # (window branch + boilerplate branch of the union), and the wide
-    # stream reaches the window only through the dup-key broadcast join
-    assert plan.count("Generate") >= 1
-    assert "BroadcastHashJoin" in plan
-    assert "BroadcastNestedLoop" not in plan and "CartesianProduct" not in plan
-    assert not audit.uses_python_udf(df)
-    assert plan.count("Window") >= 1
-    assert dq.SUFFIX_MAX_BUCKET == 4096
-    assert dq.SUFFIX_BROADCAST_KEYS == 4_000_000

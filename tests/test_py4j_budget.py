@@ -110,7 +110,7 @@ def test_read_paths_stay_within_py4j_budget(store, spark, monkeypatch):
         ),
         "FIND build": (150, lambda: nl.execute_find(find, db)),
         "vector search build": (
-            260,
+            60,
             lambda: vector.search_cosine(
                 db.table("vectors").df, qvec, min_score=-1.0, limit=5, id_col="id"
             ),
