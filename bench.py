@@ -53,14 +53,10 @@ HEADLINE = [
     "chain_verify",
     "vector_cosine_topk",
     "ann_ivf_cosine",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
     "nl_find_dual_join",
     "event_sessionization",
     "skew_salted_agg",
     # round 2 additions
-    "dedup_cluster_assign",
     "remote_serialized_find",
     "stream_windowed_rollup",
     # round 3 additions
@@ -76,15 +72,7 @@ HEADLINE = [
     # round 4 additions
     "unit_convert_bulk",
     "sql_include_digest",
-    # round 5 additions
-    "dedup_ngram_jaccard_capped",
     # round 6 additions
-    # (dedup_ngram_jaccard_absolute is deliberately NOT here: it is the
-    # known-quadratic fixed-cap compat variant — kept registered with
-    # its oracle gate for parity proof, but a plan we would never run
-    # at scale has no place in the headline total. The scale-correct
-    # fractional-df default `dedup_ngram_jaccard` and the capped
-    # variant remain measured above.)
     "stream_rollup_to_table",
     "zorder_key_events",
     "cagg_incremental_refresh",
@@ -110,7 +98,6 @@ HEADLINE = [
     "continuous_slot14_digest",
     "vector_filtered_topk",
     "vector_multi_query_topk",
-    "dedup_ngram_containment",
     "event_path_topk",
     "ts_cusum_drift",
 ]

@@ -20,7 +20,7 @@ Layout:
                       IotValue priority-array expressions, unit conversion
     operators/        timeseries (LOCF/resample), blockchain, vector search
                       (brute force, IVF, int8), continuous aggregates,
-                      the reference's RTSP frame-store codec, dedup
+                      the reference's RTSP frame-store codec
     sources/          csv/json/parquet sources & sinks, system collections
     streaming/        continuous query service (Structured Streaming)
     plans/            explain/plan-audit helpers

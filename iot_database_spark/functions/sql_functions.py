@@ -5,7 +5,7 @@ reference's accessors by name.
 
 Reference: IotValue.Value/Priority/Timestamp getters
 (Iot.Database/IotValue.cs:299-358), IsNumeric/AsDouble accessors
-(:410-520, :900-1048), password hashing (:1117-1145).
+(:410-520, :900-1048), password hashes (:1117-1145).
 """
 
 from __future__ import annotations

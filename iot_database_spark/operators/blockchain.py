@@ -138,7 +138,7 @@ def append_chain_incremental(
 
     `heads` is (key, ts, data, hash) — one row per key, either the
     persisted heads table a continuous writer maintains
-    (PointStore.chain_heads, merged per batch like MinHashIndex.extend)
+    (PointStore.chain_heads, merged per batch)
     or a one-off `chain_heads(chain)`. Keys absent from `heads` start a
     fresh chain (prev_hash = '').
 

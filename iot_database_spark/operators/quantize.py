@@ -127,8 +127,8 @@ def int8_topk(
 class QuantizedStore:
     """Persisted int8-quantization lifecycle — compute the scales ONCE,
     quantize and store the codes, search many times (the same
-    build-once pattern as similarity.VectorIndex and dedup.MinHashIndex,
-    graduated to the 4x-smaller storage form).
+    build-once pattern as similarity.VectorIndex, graduated to the
+    4x-smaller storage form).
 
     `build` writes TWO tables through the database's commit log: the
     one-row per-dimension scales table (the model — versioned, time-

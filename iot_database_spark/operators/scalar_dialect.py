@@ -211,7 +211,7 @@ _sql(
     """,
 )
 
-# sha2 hashing (the blockchain + password surface primitive —
+# sha2 digests (the blockchain + password surface primitive —
 # Blockchain/Block.cs:24-39, IotValue.ToPasswordHash:1117-1145)
 _sql(
     "sha256_hash",

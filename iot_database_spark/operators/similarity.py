@@ -43,9 +43,9 @@ def ivf_assign(
     crossJoin + row_number window re-partitioned that expansion by
     vec_id, which at cluster scale is K times the table through the
     wire). array_position takes the FIRST match of the min distance, so
-    the id-sorted array keeps the lowest-id tie-break."""
-    from iot_database_spark.operators.hof import let
-
+    the id-sorted array keeps the lowest-id tie-break. The distance
+    array is bound once as the lambda variable `ds` of a one-element
+    transform, so the argmin reads it twice without recomputing it."""
     packed = centroids.agg(
         F.sort_array(
             F.collect_list(
@@ -57,15 +57,10 @@ def ivf_assign(
         ).alias("_cents")
     )
     joined = items.crossJoin(F.broadcast(packed))
-    emb = F.col(embedding)
-    best = let(
-        F.col("_cents"),
-        lambda cents: let(
-            F.transform(cents, lambda c: l2_distance_sq(emb, c["cvec"])),
-            lambda ds: F.element_at(
-                cents, F.array_position(ds, F.array_min(ds)).cast("int")
-            )["cid"],
-        ),
+    dists = f"transform(_cents, c -> {l2_distance_sq(embedding, 'c.cvec')})"
+    best = F.expr(
+        f"transform(array({dists}), ds -> element_at(_cents,"
+        " CAST(array_position(ds, array_min(ds)) AS INT)).cid)[0]"
     )
     return joined.withColumn("bucket", best).drop("_cents")
 
@@ -140,9 +135,9 @@ def ivf_probe_buckets(
     query_vec: Column, centroids: DataFrame, nprobe: int
 ) -> DataFrame:
     """The nprobe centroid ids nearest to the query (driver-small)."""
-    d = l2_distance_sq(F.col("centroid_vec"), query_vec)
     return (
-        centroids.withColumn("_d", d)
+        centroids.withColumn("_qv", query_vec)
+        .withColumn("_d", F.expr(l2_distance_sq("centroid_vec", "_qv")))
         .orderBy(F.col("_d").asc(), F.col("centroid_id").asc())
         .limit(nprobe)
         .select("centroid_id")

@@ -12,8 +12,8 @@ Reference surface:
 
 Spark-first design: distances are built-in higher-order-function
 expressions over array<float> columns — JVM-side, codegen'd, no Python.
-The cosine is written as ONE Spark SQL string and parsed once by
-F.expr: building it from Python-lambda F.aggregate/F.zip_with/
+The cosine and L2 folds are Spark SQL strings parsed once by F.expr:
+building them from Python-lambda F.aggregate/F.zip_with/
 F.transform calls costs a py4j round trip per node, which dominated
 plan building on small interactive searches. Exact determinism across
 engines: element products are summed by an ORDERED left fold
@@ -37,14 +37,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-def _seq_sum(products: Column) -> Column:
+def _seq_sum_sql(products: str) -> str:
     """Ordered left-fold sum in double: ((0+p1)+p2)+... — deterministic
     and reproducible by DuckDB's list_reduce for oracle checks."""
-    return F.aggregate(products, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _seq_sum_sql(products: str) -> str:
-    """_seq_sum as a Spark SQL expression string."""
     return f"aggregate({products}, 0D, (acc, v) -> acc + v)"
 
 
@@ -69,14 +64,11 @@ def cosine_similarity(a: str, b: str) -> Column:
     )
 
 
-def l2_distance_sq(a: Column, b: Column) -> Column:
-    return _seq_sum(
-        F.zip_with(
-            a,
-            b,
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        )
+def l2_distance_sq(a: str, b: str) -> str:
+    """SQL squared L2 distance of two array expressions."""
+    return _seq_sum_sql(
+        f"zip_with({a}, {b}, (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))"
+        " * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)))"
     )
 
 
@@ -90,14 +82,20 @@ def search_cosine(
 ) -> DataFrame:
     """Brute-force cosine top-k (IotVectorDb.cs:244-316). Results exclude
     the embedding column, like the reference strips embeddings. A zero
-    stored or query vector scores NULL and never passes min_score."""
+    stored or query vector scores NULL and never passes min_score.
+
+    The score filter applies after the top-k: the passing rows are a
+    prefix of the (relevance DESC NULLS LAST, id) order (NaN sorts first
+    and passes, NULL sorts last and fails), so the rows are the same,
+    and Spark cannot push the filter below the Project that computes
+    relevance, which would inline the cosine a second time per row."""
     scored = items.withColumn("_qv", query_vec).withColumn(
         "relevance", cosine_similarity(embedding, "_qv")
     )
     return (
-        scored.filter(F.col("relevance") >= min_score)
-        .orderBy(F.col("relevance").desc(), F.col(id_col))
+        scored.orderBy(F.col("relevance").desc(), F.col(id_col))
         .limit(limit)
+        .filter(F.col("relevance") >= min_score)
         .drop(embedding, "_qv")
     )
 
@@ -112,13 +110,13 @@ def search_l2_topk(
     """Exact L2 top-k (IotVectorDb.cs:151-190). Spark compiles the
     orderBy+limit to TakeOrderedAndProject: per-partition local top-k,
     then a k-row merge on the driver — no full sort, no full shuffle."""
-    scored = items.withColumn(
-        "distance_sq", l2_distance_sq(F.col(embedding), query_vec)
+    scored = items.withColumn("_qv", query_vec).withColumn(
+        "distance_sq", F.expr(l2_distance_sq(embedding, "_qv"))
     )
     return (
         scored.orderBy(F.col("distance_sq").asc(), F.col(id_col))
         .limit(k)
-        .drop(embedding)
+        .drop(embedding, "_qv")
     )
 
 
@@ -130,10 +128,12 @@ def search_l2_radius(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """L2 radius filter (IotVectorDb.cs:192-235) — distance <= radius."""
-    scored = items.withColumn(
-        "distance_sq", l2_distance_sq(F.col(embedding), query_vec)
+    scored = items.withColumn("_qv", query_vec).withColumn(
+        "distance_sq", F.expr(l2_distance_sq(embedding, "_qv"))
     )
-    return scored.filter(F.col("distance_sq") <= radius * radius).drop(embedding)
+    return scored.filter(F.col("distance_sq") <= radius * radius).drop(
+        embedding, "_qv"
+    )
 
 
 def upsert_dedup(

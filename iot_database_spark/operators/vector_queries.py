@@ -73,14 +73,16 @@ def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def vector_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine search, minRelevanceScore 0.55, limit 150 — the
-    reference's defaults (IotVectorDb.cs:244,263)."""
+    reference's defaults (IotVectorDb.cs:244,263). The score filter
+    follows the top-k so each row is scored once (vector.search_cosine
+    says why the rows are the same)."""
     scored = _scored(spark, sf_dir).withColumn(
         "relevance", vec.cosine_similarity("embedding", "qv")
     )
     return (
-        scored.filter(F.col("relevance") >= 0.55)
-        .orderBy(F.col("relevance").desc(), F.col("vec_id"))
+        scored.orderBy(F.col("relevance").desc(), F.col("vec_id"))
         .limit(150)
+        .filter(F.col("relevance") >= 0.55)
         .select("vec_id", "label", "relevance")
     )
 
@@ -99,7 +101,7 @@ def vector_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan is TakeOrderedAndProject — local top-k + k-row merge, no full
     sort even at cluster scale."""
     scored = _scored(spark, sf_dir).withColumn(
-        "distance_sq", vec.l2_distance_sq(F.col("embedding"), F.col("qv"))
+        "distance_sq", F.expr(vec.l2_distance_sq("embedding", "qv"))
     )
     return (
         scored.orderBy(F.col("distance_sq").asc(), F.col("vec_id"))
@@ -119,7 +121,7 @@ def vector_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def vector_l2_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2 radius search (IotVectorDb.cs:192-235): distance² <= 1.0."""
     scored = _scored(spark, sf_dir).withColumn(
-        "distance_sq", vec.l2_distance_sq(F.col("embedding"), F.col("qv"))
+        "distance_sq", F.expr(vec.l2_distance_sq("embedding", "qv"))
     )
     return scored.filter(F.col("distance_sq") <= 1.0).select(
         "vec_id", "label", "distance_sq"
@@ -356,9 +358,9 @@ def vector_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "relevance", vec.cosine_similarity("embedding", "qv")
     )
     return (
-        scored.filter(F.col("relevance") >= 0.2)
-        .orderBy(F.col("relevance").desc(), F.col("vec_id"))
+        scored.orderBy(F.col("relevance").desc(), F.col("vec_id"))
         .limit(50)
+        .filter(F.col("relevance") >= 0.2)
         .select("vec_id", "label", "relevance")
     )
 

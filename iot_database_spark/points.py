@@ -115,7 +115,7 @@ class PointStore:
         # APPEND-ONLY log of per-guid chain heads: each batch appends one
         # row per touched guid — the fold seed that makes the chain
         # append O(batch) instead of a full-history rebuild (same
-        # build-once/extend pattern as MinHashIndex / QuantizedStore).
+        # build-once/extend pattern as QuantizedStore).
         # The seed read takes latest-per-guid (bc.chain_heads over the
         # log); a full one-row-per-guid rewrite happens only on
         # compaction (every _HEADS_COMPACT_DIRS appends) or stamp-
@@ -338,7 +338,7 @@ class PointStore:
         batch cost O(total history)). Now: fold ONLY the batch rows,
         seeded per guid from the persisted `chain_heads` log, APPEND
         the new blocks, and APPEND the touched guids' new heads — the
-        same O(batch) extend shape as MinHashIndex/QuantizedStore.
+        same O(batch) extend shape as QuantizedStore.
         Per-batch input = batch rows + the heads log (bounded by
         compaction); the block history is never read, let alone
         rewritten, and the heads log is only rewritten whole every

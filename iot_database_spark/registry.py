@@ -6,9 +6,9 @@ DuckDB SQL string.
 The driver hash-compares both at sf0.01; `tests/test_oracle_parity.py`
 runs the same comparison locally.
 
-Column-name discipline: the driver sorts columns by name before hashing,
-so the Spark DataFrame and the oracle SQL must produce identical column
-names — alias everything on both sides.
+Column-name discipline: the driver sorts columns by name before it
+hashes the rows, so the Spark DataFrame and the oracle SQL must produce
+identical column names — alias everything on both sides.
 """
 
 from __future__ import annotations
@@ -43,12 +43,10 @@ def register(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
 # round's ordering from the recorded CORRECTNESS_r*.json artifacts
 # (reds first, then never-graded, then oldest-green-first).
 #
-# The tuple below is the planner's output verbatim. With 111
+# The tuple below is the planner's output verbatim. With 103
 # registered queries, a 50-slot window and the 3-round evidence-age
-# limit, the rotation has 39 slots of slack: up to 39 new registrations
-# (or same-round re-grades after a semantics change) fit before one
-# needs a slot freed by RETIRING a query — the policy is mechanical:
-# scripts/plan_rotation.py (r11 verdict task #6).
+# limit, every query's newest green driver row stays within that limit
+# while the registry holds at most 150 queries (scripts/plan_rotation.py).
 _PRIORITY: tuple[str, ...] = (
     "remote_serialized_find",  # r11 green
     "scan_filter_project",  # r12 green
@@ -71,12 +69,6 @@ _PRIORITY: tuple[str, ...] = (
     "vector_l2_radius",  # r12 green
     "vector_filtered_topk",  # r12 green
     "vector_multi_query_topk",  # r12 green
-    "dedup_minhash_lsh",  # r12 green
-    "dedup_ngram_jaccard",  # r12 green
-    "dedup_ngram_jaccard_capped",  # r12 green
-    "dedup_cluster_assign",  # r12 green
-    "dedup_repeated_ngrams",  # r12 green
-    "dedup_ngram_containment",  # r12 green
     "zorder_key_events",  # r12 green
     "stream_rollup_to_table",  # r12 green
     "stream_exact_dedup",  # r12 green
@@ -100,6 +92,12 @@ _PRIORITY: tuple[str, ...] = (
     "count_exists_minmax",  # r13 green
     "rollup_agg",  # r13 green
     "join2_orders_customer",  # r13 green
+    "join3_customer_nation_region",  # r13 green
+    "join4_revenue_by_nation",  # r13 green
+    "join6_local_supplier_revenue",  # r13 green
+    "include_children_agg",  # r13 green
+    "semi_join_exists",  # r13 green
+    "anti_join_not_exists",  # r13 green
 )
 
 
@@ -138,7 +136,6 @@ def _ensure_loaded() -> None:
         "iot_database_spark.operators.timeseries_queries",
         "iot_database_spark.operators.blockchain_queries",
         "iot_database_spark.operators.vector_queries",
-        "iot_database_spark.operators.dedup_queries",
         "iot_database_spark.operators.quantize_queries",
         "iot_database_spark.operators.nl_queries",
         "iot_database_spark.operators.streaming_queries",

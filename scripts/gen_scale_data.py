@@ -36,11 +36,19 @@ import glob
 import os
 import shutil
 import sys
+from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: E402
+from pyspark.sql import Column, DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+
+
+def let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """Evaluate `value` once per row; `body` may reference it freely.
+    `transform(array(x), f)[0]` binds x to a lambda variable, where a
+    plain column referenced k times would be inlined k times."""
+    return F.transform(F.array(value), body)[0]
 
 
 def _with_copies(df: DataFrame, copies: int) -> DataFrame:
@@ -231,8 +239,6 @@ def generate(spark: SparkSession, src: str, out: str, copies: int) -> None:
             * 0.1
         ),
     )
-    from iot_database_spark.operators.hof import let
-
     renorm = let(
         jittered,
         lambda v: let(

@@ -67,73 +67,15 @@ def evidence(rounds: dict[int, dict]) -> dict[str, tuple[int, bool]]:
     return out
 
 
-# ---------------------------------------------------------------------------
-# Retirement policy (r11 verdict task #6 — the registry runs at or near
-# saturation).
-#
 # Invariant: every registered query's newest green driver row is at most
 # EVIDENCE_AGE_LIMIT rounds old. With SLOTS graded per round that caps
-# the registry at SLOTS * EVIDENCE_AGE_LIMIT queries; once the cap is
-# met, any same-round slot demand — a NEW registration, or a re-grade
-# forced by a SEMANTICS change to an existing query — requires RETIRING
-# a query first.
-#
-# Retiring a query (the dedup_ngram_jaccard_absolute / r9 precedent):
-#   1. remove its @register decorator — the function body and its
-#      oracle SQL constant STAY in the operators module;
-#   2. keep the bit-exact local gate: add it to
-#      tests/test_oracle_parity.py::test_retired_query_parity so every
-#      suite run still proves Spark == DuckDB on it;
-#   3. record the retirement in COVERAGE.md's driver-evidence policy
-#      section with the reason.
-# Capability is never deleted — only its driver-window slot is freed.
-#
-# Candidates are ordered: each is a VARIANT whose library path a
-# sibling query keeps exercising under driver evidence, so retiring it
-# loses a slot, not a semantics check of anything unique.
+# the registry at SLOTS * EVIDENCE_AGE_LIMIT queries
+# (tests/test_rotation_plan.py asserts it).
 EVIDENCE_AGE_LIMIT = 3
 SLOTS = 50
-RETIREMENT_CANDIDATES: tuple[str, ...] = (
-    # explicit-cap variant of dedup.jaccard_pairs — the headline
-    # dedup_ngram_jaccard (fractional guard) and dedup_ngram_containment
-    # keep the library path graded
-    "dedup_ngram_jaccard_capped",
-    # batch wrapper over the same cosine top-k join that
-    # vector_cosine_topk and vector_filtered_topk keep under evidence
-    "vector_multi_query_topk",
-)
 
 
-def capacity(slots: int = SLOTS) -> int:
-    return slots * EVIDENCE_AGE_LIMIT
-
-
-def plan_registrations(n_new: int, slots: int = SLOTS) -> dict:
-    """Retirements `n_new` same-round slot demands require.
-
-    `n_new` counts new registrations AND semantics-changed re-grades —
-    anything that needs a window slot the steady-state rotation doesn't
-    already owe it. Raises when the named candidate list can't cover
-    the demand (that's a design decision, not a mechanical pick)."""
-    from iot_database_spark import registry
-
-    registered = len(registry.queries())
-    over = max(0, registered + n_new - capacity(slots))
-    if over > len(RETIREMENT_CANDIDATES):
-        raise RuntimeError(
-            f"{n_new} new slot demands need {over} retirements but only "
-            f"{len(RETIREMENT_CANDIDATES)} candidates are named — extend "
-            "RETIREMENT_CANDIDATES deliberately before registering"
-        )
-    return {
-        "registered": registered,
-        "capacity": capacity(slots),
-        "new": n_new,
-        "retire": list(RETIREMENT_CANDIDATES[:over]),
-    }
-
-
-def plan(slots: int = 50, repo: str | None = None) -> tuple[list[str], list[str]]:
+def plan(slots: int = SLOTS, repo: str | None = None) -> tuple[list[str], list[str]]:
     """Returns (window, red_flags)."""
     from iot_database_spark import registry
 
@@ -157,18 +99,8 @@ def plan(slots: int = 50, repo: str | None = None) -> tuple[list[str], list[str]
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--slots", type=int, default=50)
-    ap.add_argument(
-        "--new",
-        type=int,
-        default=0,
-        help="planned same-round slot demands (new registrations + "
-        "semantics-changed re-grades): prints the retirement plan",
-    )
+    ap.add_argument("--slots", type=int, default=SLOTS)
     args = ap.parse_args()
-    if args.new:
-        print(json.dumps(plan_registrations(args.new, args.slots)))
-        return
     window, red = plan(args.slots)
     if red:
         print(f"# RED latest rows (must stay in window): {red}")

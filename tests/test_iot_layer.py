@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from iot_database_spark.operators import blockchain as bc
 from iot_database_spark.operators import iotvalue as iv
+from iot_database_spark.operators import similarity as sim
 from iot_database_spark.operators import timeseries as ts_ops
 from iot_database_spark.operators import vector as vec
 
@@ -246,6 +247,90 @@ def test_vector_search_known_geometry(spark):
     assert vec.search_cosine(items, zero_q, min_score=-1.0).collect() == []
 
 
+def test_ivf_recall_vs_brute_force(spark, sf_dir):
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        F.col("vec_id").cast("bigint").alias("vec_id"), "embedding"
+    )
+    qvec = [float(x) for x in emb.filter("vec_id = 0").collect()[0]["embedding"]]
+    q = F.array(*[F.lit(x) for x in qvec])
+
+    brute = [r["vec_id"] for r in vec.search_cosine(emb, q, min_score=-1, limit=10).collect()]
+    centroids = sim.default_centroids(emb, k=8)
+    assigned = sim.ivf_assign(emb, centroids)
+    approx = [
+        r["vec_id"]
+        for r in sim.ivf_search_cosine(assigned, centroids, q, k=10, nprobe=4).collect()
+    ]
+    recall = len(set(brute) & set(approx)) / 10
+    assert approx[0] == 0  # the query vector itself is found
+    assert recall >= 0.3  # random embeddings: probing 4/8 buckets
+
+
+def test_kmeans_refine_improves_objective(spark, sf_dir):
+    """Lloyd iterations must not increase the k-means objective (sum of
+    squared distances to the assigned centroid), and the refined set
+    still drives the same IVF search path."""
+    emb = (
+        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        .select(F.col("vec_id").cast("bigint").alias("vec_id"), "embedding")
+        .limit(400)
+    )
+
+    def objective(centroids):
+        assigned = sim.ivf_assign(emb, centroids)
+        packed = centroids.agg(
+            F.map_from_arrays(
+                F.collect_list("centroid_id"), F.collect_list("centroid_vec")
+            ).alias("_m")
+        )
+        d = assigned.crossJoin(F.broadcast(packed)).select(
+            F.expr(
+                vec.l2_distance_sq("embedding", "element_at(_m, bucket)")
+            ).alias("d2")
+        )
+        return d.agg(F.sum("d2")).collect()[0][0]
+
+    c0 = sim.default_centroids(emb, k=8)
+    c1 = sim.kmeans_refine(emb, c0, iters=2)
+    obj0, obj1 = objective(c0), objective(c1)
+    assert obj1 <= obj0 + 1e-6
+    assert c1.count() == 8
+    # refined centroids keep the schema contract for search
+    qvec = [float(x) for x in emb.filter("vec_id = 0").collect()[0]["embedding"]]
+    q = F.array(*[F.lit(x) for x in qvec])
+    assigned = sim.ivf_assign(emb, c1)
+    top = sim.ivf_search_cosine(assigned, c1, q, k=5, nprobe=4).collect()
+    assert top[0]["vec_id"] == 0
+
+
+def test_vector_index_persists_and_searches(spark, tmp_path, sf_dir):
+    """VectorIndex: build writes centroid+assigned tables through the
+    commit log; a REOPENED database searches without rebuilding and
+    matches a fresh in-memory IVF search."""
+    from iot_database_spark.database import IotDatabase
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        F.col("vec_id").cast("bigint").alias("vec_id"), "embedding"
+    )
+    db = IotDatabase("vecdb", str(tmp_path), spark)
+    idx = sim.VectorIndex(db, "emb_idx")
+    idx.build(emb, k=8, refine_iters=1)
+
+    qvec = [float(x) for x in emb.filter("vec_id = 3").collect()[0]["embedding"]]
+    q = F.array(*[F.lit(x) for x in qvec])
+    got = [r["vec_id"] for r in idx.search(q, k=5, nprobe=4).collect()]
+    assert got[0] == 3  # the query vector finds itself first
+
+    # reopen: fresh database object, same storage
+    db2 = IotDatabase("vecdb", str(tmp_path), spark)
+    idx2 = sim.VectorIndex(db2, "emb_idx")
+    got2 = [r["vec_id"] for r in idx2.search(q, k=5, nprobe=4).collect()]
+    assert got2 == got
+    # index tables are ordinary versioned tables (history, introspection)
+    assert "emb_idx__centroids" in db2.list_tables()
+    assert db2.table("emb_idx__vectors").count() == emb.count()
+
+
 # --- TSDB extras: as-of join, rollup, gaps, rate ---------------------------
 
 def test_asof_join_semantics(spark):
@@ -298,6 +383,72 @@ def test_rollup_and_rate(spark):
     rates = sorted(rate_of_change(s).collect(), key=lambda r: r["ts"])
     assert rates[0]["delta"] == 20.0
     assert rates[0]["rate_per_sec"] == pytest.approx(20.0 / 2400.0)
+
+
+def test_range_join_boundary_semantics(spark):
+    """range_join window is half-open [start, end): an event exactly at
+    `end` does not match; one exactly at `start` does — including when
+    the boundary falls exactly on a bucket edge (the exploded interval
+    must not leak into the bucket that starts at its exclusive end)."""
+    from datetime import datetime
+
+    from iot_database_spark.operators.timeseries import range_join
+
+    t0 = datetime(2024, 1, 1, 0, 0, 0)
+    ev = spark.createDataFrame(
+        [
+            (1, datetime(2024, 1, 1, 0, 0, 0)),   # == start: in
+            (2, datetime(2024, 1, 1, 0, 59, 59)), # inside
+            (3, datetime(2024, 1, 1, 1, 0, 0)),   # == end: out
+            (4, datetime(2023, 12, 31, 23, 59, 59)),  # before: out
+        ],
+        "event_id bigint, ts timestamp",
+    )
+    # window [00:00, 01:00) with end on an exact 30-min bucket boundary
+    iv = spark.createDataFrame(
+        [(7, t0, datetime(2024, 1, 1, 1, 0, 0))],
+        "iv_id bigint, start_ts timestamp, end_ts timestamp",
+    )
+    got = sorted(
+        r["event_id"]
+        for r in range_join(ev, iv, bucket_s=1800).collect()
+    )
+    assert got == [1, 2]
+
+
+def test_range_join_drops_inverted_and_empty_intervals(spark):
+    """Inverted (end < start) and empty (end == start) windows match
+    nothing — and must not reach sequence(), which would otherwise
+    explode a descending bucket run for the inverted window."""
+    from datetime import datetime
+
+    from iot_database_spark.operators.timeseries import range_join
+
+    ev = spark.createDataFrame(
+        [(1, datetime(2024, 1, 1, 0, 30))], "event_id bigint, ts timestamp"
+    )
+    iv = spark.createDataFrame(
+        [
+            (7, datetime(2024, 1, 1, 1, 0), datetime(2024, 1, 1, 0, 0)),
+            (8, datetime(2024, 1, 1, 0, 0), datetime(2024, 1, 1, 0, 0)),
+            (9, datetime(2024, 1, 1, 0, 0), datetime(2024, 1, 1, 1, 0)),
+        ],
+        "iv_id bigint, start_ts timestamp, end_ts timestamp",
+    )
+    got = [(r["event_id"], r["iv_id"]) for r in range_join(ev, iv).collect()]
+    assert got == [(1, 9)]
+
+
+def test_hll_sketch_within_tolerance(spark, sf_dir):
+    """approx_count_distinct (HLL sketch) — the cardinality primitive for
+    100 TB profiling; no cross-engine oracle (sketches differ), so assert
+    tolerance against the exact count."""
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    exact = li.select("l_partkey").distinct().count()
+    approx = li.select(
+        F.approx_count_distinct("l_partkey", rsd=0.02).alias("a")
+    ).collect()[0]["a"]
+    assert abs(approx - exact) / exact < 0.06
 
 
 # --- deliberate divergence: dynamic-type ordering --------------------------

@@ -225,8 +225,6 @@ _SF1_SUBSET = (
     "ts_rollup_hourly",
     "rollup_agg",
     "semi_join_exists",
-    "dedup_exact",
-    "dedup_minhash_lsh",
     "q03_shipping_priority",
     "q06_revenue_forecast",
     "event_funnel",
@@ -267,30 +265,35 @@ def test_oracle_parity_sf1(name, spark):
     _assert_parity(name, spark, _SF1_DIR, float_ulps=2)
 
 
-def test_retired_query_parity(spark, sf_dir):
-    """Queries retired from the driver registry keep their bit-exact
-    local gate (COVERAGE.md 'Driver-evidence policy'):
-    dedup_ngram_jaccard_absolute — the known-quadratic fixed-cap compat
-    variant, retired r9 — must still match its DuckDB twin."""
-    from iot_database_spark.operators import dedup_queries as dq
-
-    for fn, oracle in (
-        (dq.dedup_ngram_jaccard_absolute, dq._JACCARD_ORACLE),
-    ):
-        sdf = fn(spark, sf_dir)
-        s_norm = _normalize([tuple(r) for r in sdf.collect()], sdf.columns)
-        con = _duck(sf_dir)
-        res = con.execute(oracle)
-        dcols = [d[0] for d in res.description]
-        d_norm = _normalize(res.fetchall(), dcols)
-        con.close()
-        assert sorted(sdf.columns) == sorted(dcols)
-        assert s_norm == d_norm
-
-
 def test_every_query_has_entry():
     assert _QUERIES, "no queries registered"
     assert set(_QUERIES) == set(_ORACLES)
+
+
+def test_load_views_drops_views_for_absent_tables(spark, smoke_dir, tmp_path):
+    """Activating a partial dir must UNREGISTER the other tables' views
+    (r8 review finding): a missing table must surface as
+    TABLE_OR_VIEW_NOT_FOUND, not a silent read of the previous dir."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest as _pytest
+    from pyspark.sql.utils import AnalysisException
+
+    from iot_database_spark.registry import load_views
+
+    pq.write_table(
+        pa.table({"doc_id": pa.array([1], pa.int64()), "text": pa.array(["x"]),
+                  "lang": pa.array(["en"]), "source": pa.array(["s"]),
+                  "n_chars": pa.array([1], pa.int64())}),
+        tmp_path / "documents.parquet",
+    )
+    load_views(spark, smoke_dir)  # full table set active
+    load_views(spark, str(tmp_path))  # documents-only dir
+    with _pytest.raises(AnalysisException):
+        spark.sql("SELECT COUNT(*) FROM events").collect()
+    # and switching back restores the full set
+    load_views(spark, smoke_dir)
+    assert spark.sql("SELECT COUNT(*) FROM events").collect()[0][0] > 0
 
 
 def test_registry_import_failure_propagates(monkeypatch):

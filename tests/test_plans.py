@@ -83,6 +83,26 @@ def test_vector_search_stays_jvm(spark, sf):
     text = audit.explain_str(df)
     assert "PythonUDF" not in text and "BatchEvalPython" not in text
     assert "ArrowEvalPython" not in text
+    # each row is scored once: the min-score filter applies after the
+    # top-k, so it cannot be pushed below the Project that computes
+    # relevance and inline the cosine (one zip_with fold) a second time
+    from pyspark.sql import functions as F
+
+    from iot_database_spark.operators import vector
+
+    items = spark.createDataFrame(
+        [(i, [float(i), 1.0, -2.0]) for i in range(8)],
+        "vec_id bigint, embedding array<float>",
+    )
+    q = F.array(F.lit(1.0), F.lit(0.5), F.lit(0.0))
+    frames = {
+        "vector_cosine_topk": _Q["vector_cosine_topk"](spark, sf),
+        "vector_filtered_topk": _Q["vector_filtered_topk"](spark, sf),
+        "search_cosine": vector.search_cosine(items, q, min_score=0.5, limit=5),
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("zip_with") == 1, (name, plan)
 
 
 def test_locf_single_window_shuffle(spark, sf):
@@ -111,20 +131,6 @@ def test_q5_q14_shapes_broadcast_dims(spark, sf):
         assert audit.uses_broadcast_join(df), name
         rep = audit.plan_report(df)
         assert rep["shuffle_exchanges"] <= 3, (name, rep["shuffle_exchanges"])
-
-
-def test_round2_cluster_assign_bounded_exchanges(spark, sf):
-    """The FINAL cluster plan (after per-round checkpoints truncate
-    lineage) is a bounded set of keyed joins over materialized label
-    frames — no Python, no cartesian. Join strategy is deliberately left
-    to AQE: label-frame sizes are data-dependent (checkpointed RDDs have
-    no static stats), and AQE's runtime conversion to broadcast where the
-    materialized side is small IS the scale-safe choice — a forced static
-    broadcast could OOM at adversarial dup rates."""
-    df = _Q["dedup_cluster_assign"](spark, sf)
-    assert audit.count_exchanges(df) <= 7
-    assert not audit.uses_python_udf(df)
-    assert "CartesianProduct" not in audit.explain_str(df, "simple")
 
 
 def test_round2_serialized_find_matches_nl_plan_quality(spark, sf):
@@ -194,34 +200,3 @@ def test_round5_alerting_and_coverage_plan_shapes(spark, sf):
     al = _Q["ts_threshold_alerts"](spark, sf)
     assert audit.count_exchanges(al) == 1
     assert not audit.uses_python_udf(al)
-
-
-def test_round6_corpus_sized_broadcasts_are_size_gated(spark, sf):
-    """r5 verdict finding #1: the jaccard per-doc sizes frame is one row
-    per document — an O(corpus) frame whose broadcast hint must be
-    conditional on a MEASURED size, or a 100 TB run force-broadcasts
-    billions of rows past AQE's checks. With the session broadcast
-    threshold disabled, any BroadcastHashJoin left in the plan can only
-    come from a forced hint — so the closed gate must plan a shuffle
-    join and the open gate must still hint."""
-    from iot_database_spark.operators import dedup as dd
-    from iot_database_spark.operators.dedup_queries import _docs
-
-    docs = _docs(spark, sf)
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
-        # gate closed (the at-scale path): shuffle join, no forced hint
-        big_j = dd.jaccard_pairs(
-            docs, threshold=0.02, broadcast_sizes_max_docs=0
-        )
-        assert not audit.uses_broadcast_join(big_j)
-        assert audit.uses_shuffle_join(big_j)
-        # gate open (sizes measured small): the hint survives even
-        # with the session threshold off — it is the operator's own
-        # justified size check, not a static-stats guess
-        small_j = dd.jaccard_pairs(docs, threshold=0.02)
-        assert audit.uses_broadcast_join(small_j)
-    finally:
-        spark.conf.set(key, old)

@@ -1,6 +1,7 @@
 """The rotation planner must keep the driver-evidence invariant
 computable: never-graded queries lead, reds are never rotated away,
-and the window is valid (50 unique registered names)."""
+the window is valid (50 unique registered names), and the registry
+fits the evidence capacity."""
 
 from __future__ import annotations
 
@@ -39,6 +40,9 @@ def test_live_plan_is_valid_window():
     window, red = pr.plan(50)
     assert len(window) == 50 == len(set(window))
     qs = registry.queries()
+    # each round grades SLOTS queries and evidence may be at most
+    # EVIDENCE_AGE_LIMIT rounds old, so the registry is capped at 150
+    assert len(qs) <= pr.SLOTS * pr.EVIDENCE_AGE_LIMIT == 150
     assert all(n in qs for n in window)
     ev = pr.evidence(pr.load_rounds(str(Path(__file__).resolve().parent.parent)))
     never = [n for n in qs if n not in ev]
@@ -47,41 +51,3 @@ def test_live_plan_is_valid_window():
     # reds, if any ever appear, must be in the window too
     assert set(red) <= set(window)
 
-
-def test_retirement_policy_capacity():
-    """The saturation invariant is mechanical (r11 verdict task #6):
-    capacity = slots * evidence-age limit; the live registry must never
-    exceed it, and same-round slot demands name retirements from the
-    ordered candidate list."""
-    from iot_database_spark import registry
-
-    assert pr.capacity() == pr.SLOTS * pr.EVIDENCE_AGE_LIMIT == 150
-    registered = len(registry.queries())
-    assert registered <= pr.capacity(), (
-        f"{registered} registered queries exceed the {pr.capacity()} "
-        "evidence capacity — a query must be retired"
-    )
-    # at exact saturation, zero new demands need zero retirements...
-    assert pr.plan_registrations(0)["retire"] == []
-    # ...and each new demand takes the next named candidate in order
-    over = pr.capacity() - registered  # free slots today (0 at saturation)
-    need_one = pr.plan_registrations(over + 1)
-    assert need_one["retire"] == [pr.RETIREMENT_CANDIDATES[0]]
-    need_two = pr.plan_registrations(over + 2)
-    assert need_two["retire"] == list(pr.RETIREMENT_CANDIDATES[:2])
-
-
-def test_retirement_candidates_are_registered_variants():
-    """Every named candidate must currently hold a driver slot (else the
-    list is stale), and demands beyond the candidate list must raise —
-    picking an unnamed victim is a design decision, never mechanical."""
-    import pytest
-
-    from iot_database_spark import registry
-
-    qs = registry.queries()
-    for name in pr.RETIREMENT_CANDIDATES:
-        assert name in qs, f"stale retirement candidate: {name}"
-    over = pr.capacity() - len(qs)
-    with pytest.raises(RuntimeError, match="deliberately"):
-        pr.plan_registrations(over + len(pr.RETIREMENT_CANDIDATES) + 1)

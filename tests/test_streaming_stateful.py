@@ -575,6 +575,69 @@ def test_stream_queries_leave_parent_session_conf_untouched(spark, sf_dir):
     assert _stream_session(spark) is clone
 
 
+def test_stream_state_config_routing(tmp_path, monkeypatch):
+    """The stream-state crossover routing (SCALE_r11.md): env pins win,
+    big sources pick RocksDB at the measured partition count, small
+    sources keep the HDFS-map/8 optimum, and a missing source falls
+    back to small-state."""
+    from iot_database_spark.operators import streaming_queries as sq
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PROVIDER", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
+    small = tmp_path / "events.parquet"
+    small.write_bytes(b"x" * 1024)
+    assert sq._stream_state_config(str(tmp_path), "events.parquet") == (
+        "",
+        sq._STREAM_STATE_PARTITIONS,
+    )
+    big = tmp_path / "big" / "events.parquet"
+    big.mkdir(parents=True)
+    (big / "part-0.parquet").write_bytes(b"x" * (sq._BIG_STATE_SOURCE_BYTES))
+    assert sq._stream_state_config(str(tmp_path / "big"), "events.parquet") == (
+        "rocksdb",
+        sq._BIG_STATE_PARTITIONS,
+    )
+    # the r12 two-tier route: past the huge threshold the partition
+    # count scales to compute parallelism (sf1 vs sf10 A/B, SCALE_r12)
+    huge = tmp_path / "huge" / "events.parquet"
+    huge.mkdir(parents=True)
+    (huge / "part-0.parquet").write_bytes(b"x" * (sq._HUGE_STATE_SOURCE_BYTES))
+    assert sq._stream_state_config(str(tmp_path / "huge"), "events.parquet") == (
+        "rocksdb",
+        sq._HUGE_STATE_PARTITIONS,
+    )
+    # the huge tier tracks the session's compute parallelism (r12
+    # advice: a literal 32 pinned this host's core count), but never
+    # drops below the big tier's measured count
+    assert sq._stream_state_config(
+        str(tmp_path / "huge"), "events.parquet", parallelism=64
+    ) == ("rocksdb", 64)
+    assert sq._stream_state_config(
+        str(tmp_path / "huge"), "events.parquet", parallelism=4
+    ) == ("rocksdb", sq._BIG_STATE_PARTITIONS)
+    # parallelism never changes the small/big tiers
+    assert sq._stream_state_config(
+        str(tmp_path / "big"), "events.parquet", parallelism=64
+    ) == ("rocksdb", sq._BIG_STATE_PARTITIONS)
+    # absent source -> small-state default, never an exception
+    assert sq._stream_state_config(str(tmp_path / "nope"), "events.parquet") == (
+        "",
+        sq._STREAM_STATE_PARTITIONS,
+    )
+    # env pins override the size routing entirely
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PROVIDER", "rocksdb")
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "19")
+    assert sq._stream_state_config(str(tmp_path), "events.parquet") == (
+        "rocksdb",
+        19,
+    )
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
+    assert sq._stream_state_config(str(tmp_path / "big"), "events.parquet") == (
+        "rocksdb",
+        sq._STREAM_STATE_PARTITIONS,
+    )
+
+
 def test_alert_updater_chunked_equivalence():
     """r12 verdict task #3: the vectorized dead-band-filtering updater
     must equal a naive ordered replay EXACTLY — across multiple Arrow

@@ -30,7 +30,6 @@ from iot_database_spark.registry import queries as _registry_queries
 
 PROBE_QUERIES = list(_registry_queries())[:50] + [
     "vector_cosine_topk",  # vector_queries (outside the r3 window)
-    "dedup_exact",  # dedup_queries
     "nl_find_filter_sort_limit",  # nl_queries
     "remote_serialized_find",  # serialized wire surface
     "stream_exact_dedup",  # streaming dedup state store on vanilla session
